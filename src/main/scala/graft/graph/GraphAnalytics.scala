@@ -102,12 +102,14 @@ object GraphAnalytics {
     * lineage AND executes now, so the kernel's conf scope applies) and
     * return it with its row count — the count is a cheap second pass
     * over the checkpointed partitions, and sizes the kernel's shuffle
-    * partitions. Checkpointed iterates are freed by the context
-    * cleaner when unreferenced; at gate scale each holds a few
+    * partitions. It counts the checkpointed RDD directly: one job,
+    * where `Dataset.count` plans an aggregate whose exchange costs a
+    * second job under AQE. Checkpointed iterates are freed by the
+    * context cleaner when unreferenced; at gate scale each holds a few
     * thousand rows. */
   private def materialized(df: DataFrame): (DataFrame, Long) = {
     val c = df.localCheckpoint(true)
-    (c, c.count())
+    (c, c.queryExecution.toRdd.count())
   }
 
   /** Chain `iters` LAZY superstep transforms and materialize the whole
@@ -119,11 +121,16 @@ object GraphAnalytics {
     * cost per iteration on a 32-core host). Contract: `step` must
     * consume its iterate exactly ONCE and otherwise reference only
     * materialized (checkpointed) leaves, so the lazy plan grows
-    * LINEARLY in `iters` (a kernel whose recurrence reads the iterate
-    * twice — kcore's two-endpoint membership, HITS normalization —
-    * keeps its per-round materialization instead). The final
-    * checkpoint runs inside the caller's conf scope, so the
-    * superstep partition sizing still applies to every exchange. */
+    * LINEARLY in `iters`. A recurrence that seems to need its iterate
+    * twice can often be recast over a richer iterate: kcore iterates
+    * the live edge set, whose two window counts give both endpoint
+    * degrees, instead of the node membership it would join twice.
+    * Recurrences that really read the iterate twice — HITS's global
+    * normalization, the pointer-jumping self-join of
+    * [[pageRankAndComponentsDF]] — keep their per-round
+    * materialization. The final checkpoint runs inside the caller's
+    * conf scope, so the superstep partition sizing still applies to
+    * every exchange. */
   private def chainSupersteps(init: DataFrame, iters: Int)(
       step: DataFrame => DataFrame): DataFrame = {
     var cur = init
@@ -509,36 +516,38 @@ object GraphAnalytics {
     * set/degree arithmetic — both engines run the same fixed peel
     * count, so the oracle replays it exactly (a fixpoint loop would
     * need data-dependent iteration; fixed rounds bound cost at scale
-    * the same way the static supersteps do). Each round recomputes
-    * degrees from the ORIGINAL edge list restricted to survivors: two
-    * semi-joins + one agg — membership is consumed twice per round,
-    * so keep `iters` small (plan size grows 2^iters; 4 rounds
-    * suffices for per-sample graphs). */
+    * the same way the static supersteps do).
+    *
+    * The iterate is the LIVE symmetric edge set E_i, not the node
+    * membership: E_0 = sym, and a round keeps the edges whose two
+    * endpoints both have live degree >= k. On a symmetric edge set
+    * the row count of partition (grp, b) is deg(b), so both degrees
+    * are window counts over the one iterate — consumed once per
+    * round, linear plan growth, and the `iters - 1` peel rounds run
+    * as ONE action. By induction E_i = {(a, b) ∈ sym : a, b ∈ keep_i}
+    * (a node with live degree >= k >= 1 is itself live), so the
+    * result — live degree >= k after the last round, one group-by —
+    * is the node-membership peel the oracle replays. `iters` >= 1. */
   def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
+    require(iters >= 1, s"kcore needs at least one round, got iters=$iters")
     val spark = edges.sparkSession
     val e = edges.select(col("group").as("grp"),
       col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(
+    val (sym, nRows) = materialized(
       e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
         .distinct())
+    val byA = org.apache.spark.sql.expressions.Window.partitionBy("grp", "a")
+    val byB = org.apache.spark.sql.expressions.Window.partitionBy("grp", "b")
     withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("a")).localCheckpoint(true)
-      var keep = sym.select(col("grp"), col("a").as("node")).distinct()
-      var deg: DataFrame = null
-      (0 until iters).foreach { _ =>
-        // membership is consumed twice per round (both endpoints must
-        // survive), so truncate its lineage each round — the standard
-        // iterative-algorithm checkpoint; it also executes the round
-        // inside this kernel's partition scope
-        val kept = keep.localCheckpoint(true)
-        deg = sym
-          .join(kept.select(col("grp"), col("node").as("a")), Seq("grp", "a"))
-          .join(kept.select(col("grp"), col("node").as("b")), Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(count(lit(1)).as("deg"))
-        keep = deg.where(col("deg") >= k).select("grp", "node")
+      val live = chainSupersteps(sym, iters - 1) { cur =>
+        cur.withColumn("da", count(lit(1)).over(byA))
+          .withColumn("db", count(lit(1)).over(byB))
+          .where(col("da") >= k && col("db") >= k)
+          .select("grp", "a", "b")
       }
-      deg.where(col("deg") >= k).select(col("grp"), col("node"), col("deg"))
+      live.groupBy(col("grp"), col("a").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .where(col("deg") >= k)
         .localCheckpoint(true)
     }
   }
@@ -593,8 +602,7 @@ object GraphAnalytics {
     * IEEE division of exact BIGINTs, so any engine replays it. The
     * label table is consumed three times (both endpoints + degree
     * mass), so its superstep lineage is truncated with an eager
-    * localCheckpoint — the standard iterative-algorithm cut, same as
-    * [[kcore]]. */
+    * localCheckpoint — the standard iterative-algorithm cut. */
   def lpaModularityScaled(edges: DataFrame, iters: Int): DataFrame =
     lpaModularityOf(edges, lpaExactScaled(edges, iters).localCheckpoint(true))
 

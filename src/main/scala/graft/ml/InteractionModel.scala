@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +41,12 @@ object InteractionModel {
     * @param maxDepth tree depth cap. R's randomForest grows trees to
     *   purity (no cap); 30 is Spark's ceiling and is effectively
     *   unbounded at reference-data sizes. Spark's own default (5)
-    *   underfits the 4-feature evidence space. */
+    *   underfits the 4-feature evidence space.
+    * The returned model is a copy without the training summary: the
+    * summary holds the session, and once the session has created an
+    * `Observation` (the superstep kernels do) its observation manager
+    * is not serializable, so every `transform` closure that captured
+    * the summary would fail with "Task not serializable". */
   def train(train: DataFrame, numTrees: Int = 500, seed: Long = 42L,
       mtry: Int = 3, maxDepth: Int = 12): RandomForestClassificationModel =
     new RandomForestClassifier()
@@ -50,6 +56,7 @@ object InteractionModel {
       .setLabelCol("label").setFeaturesCol("features")
       .setSeed(seed)
       .fit(train)
+      .copy(ParamMap.empty)
 
   /** M5 — AUC + sensitivity + specificity at the 0.5 threshold. */
   def evaluate(model: RandomForestClassificationModel, test: DataFrame)

@@ -511,10 +511,14 @@ object DedupIndex {
           .select("doc_id", "tok")
     }
     val next = s"$dir/gen_next"
-    buildSparse(tok, next, meta.tBuild)
-    writeMeta(spark, next, "sparse", meta.tBuild)
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a rebuild that crashed before its swap leaves a staged generation
+    // behind; the live index is intact, so restage from scratch (the
+    // meta file is written in CREATE mode and would refuse the retry)
+    fs.delete(new org.apache.hadoop.fs.Path(next), true)
+    buildSparse(tok, next, meta.tBuild)
+    writeMeta(spark, next, "sparse", meta.tBuild)
     val prev = new org.apache.hadoop.fs.Path(s"$dir/prev_gen")
     fs.delete(prev, true)
     fs.mkdirs(prev)

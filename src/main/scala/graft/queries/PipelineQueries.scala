@@ -68,13 +68,17 @@ object PipelineQueries {
     // a pure function of (data, seed) regardless of cluster size or
     // upstream splits (the ReferenceNetworkSpec idiom), so the model
     // pins while the fit stays parallel; scoring below is fully
-    // distributed either way
+    // distributed either way. The sample is materialized ONCE
+    // (localCheckpoint) because the fit reads it several times, each
+    // re-running the sampling query; the checkpoint keeps the 8
+    // partitions and their row order, so the forest is bit-identical
     val trainSet = graft.operators.Sampling.stratifiedSample(
       InteractionModel.features(edges.withColumn("phage", col("src"))
         .withColumn("bacteria", col("dst"))),
       Seq("phage", "bacteria"), fraction = 0.2, seed = 42)
       .repartition(8, col("phage"), col("bacteria"))
       .sortWithinPartitions("phage", "bacteria")
+      .localCheckpoint(true)
     val model = InteractionModel.train(trainSet, numTrees = 20, seed = 42)
     val scored = InteractionModel.scoreAndWriteBack(model, edges)
     scored.groupBy("predictedInteraction")
@@ -100,11 +104,15 @@ object PipelineQueries {
         .withColumn("bacteria", col("dst")))
     // same canonicalization as q70: fixed 8-way hash partitioning,
     // key-sorted → the RF is environment-independent, so its metrics
-    // pin, and the fit keeps its parallelism
+    // pin, and the fit keeps its parallelism. Materialized once, as in
+    // q70: fit and evaluate would otherwise re-run the sampling query
+    // on every read, and the checkpoint keeps the partitions and their
+    // row order, so the forest and every metric stay bit-identical
     val sample = graft.operators.Sampling.stratifiedSample(
       feats, Seq("phage", "bacteria"), fraction = 0.05, seed = 7)
       .repartition(8, col("phage"), col("bacteria"))
       .sortWithinPartitions("phage", "bacteria")
+      .localCheckpoint(true)
     val model = InteractionModel.train(sample, numTrees = 10, seed = 7)
     val metrics = InteractionModel.evaluate(model, sample).toSeq.sortBy(_._1) ++
       InteractionModel.importances(model).map { case (f, v) => s"importance_$f" -> v }

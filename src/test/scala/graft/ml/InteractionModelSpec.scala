@@ -38,6 +38,17 @@ class InteractionModelSpec extends SparkSpec {
     }
   }
 
+  test("RF transform still serializes after the session created an Observation") {
+    // hitsExactScaled collects its normalizer through Observation(),
+    // which materializes the session's non-serializable observation
+    // manager; a model that kept its training summary (which holds the
+    // session) then failed every transform with "Task not serializable"
+    val star = Seq((1L, 9L), (2L, 9L), (3L, 9L)).toDF("src", "dst")
+    graft.graph.GraphAnalytics.hitsExactScaled(star, iters = 2).collect()
+    val res = InteractionModel.nestedCv(edges, iterations = 1, numTrees = 10)
+    assert(res.length == 1 && res.head("auc") > 0.8, s"nested CV: $res")
+  }
+
   test("scoreAndWriteBack labels candidates and keeps zero-evidence rows out") {
     val withZero = edges.union(
       Seq(("phage_z", "bact_z", 0.0, 0.0, 0.0, 0.0, false))

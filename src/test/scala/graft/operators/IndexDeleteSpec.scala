@@ -201,6 +201,26 @@ class IndexDeleteSpec extends SparkSpec {
       "re-appended doc after rebuild never matched its twin")
   }
 
+  test("DedupIndex.rebuild retries over a crashed rebuild's staged generation") {
+    // a rebuild that crashed after staging its meta leaves gen_next/meta
+    // behind; the meta file is written in CREATE mode, so a retry that
+    // reused the staging dir failed with FileAlreadyExistsException
+    val b1 = batch(1, 0 until 40, 4096, 12)
+    val probeB = batch(1, 0 until 40, 4096, 12, idOffset = 1000L)
+    val dir = java.nio.file.Files.createTempDirectory("dedup-rb-retry")
+      .toString + "/idx"
+    assert(DedupIndex.build(b1, dir, 0.3, bitmapMaxVocab = 256) == "sparse")
+    val before = pairsOf(DedupIndex.probe(probeB, dir, 0.3))
+    val staged = java.nio.file.Paths.get(s"$dir/gen_next/meta")
+    java.nio.file.Files.createDirectories(staged)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/meta/part-00000.parquet"),
+      staged.resolve("part-00000.parquet"))
+    assert(DedupIndex.rebuild(spark, dir) == "sparse")
+    assert(!new java.io.File(s"$dir/gen_next").exists, "staging dir survived the rebuild")
+    assert(before.nonEmpty && pairsOf(DedupIndex.probe(probeB, dir, 0.3)) == before,
+      "retried rebuild changed probe answers")
+  }
+
   test("DedupIndex.rebuild refreshes the frozen df order: driftStats reads frozen == optimal (round-11)") {
     // drifted corpus: the appended installment hammers a small token
     // subset, so build-time-rare tokens become common and the frozen
