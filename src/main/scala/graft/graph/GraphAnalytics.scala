@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics (SURVEY §2.10).
@@ -9,16 +9,21 @@ import org.apache.spark.sql.functions._
   * Two execution tiers, mirroring the reference's split between
   * whole-network igraph calls and per-sample subgraph loops:
   *
-  *  - **Global graph** → GraphX (`pageRank`, `connectedComponents`,
-  *    `labelPropagation`, degrees): one distributed graph, Pregel
-  *    under the hood. Right tier when the graph itself is huge.
-  *  - **Per-group subgraphs** → `perGroupMetrics`/`perGroupEigen`:
-  *    `groupByKey(group).mapGroups` feeding [[LocalGraph]] kernels.
-  *    One shuffle on the group key, then thousands of small graphs
-  *    execute in parallel across executors — the 100 TB-scale path
-  *    for "compute centrality per sample" (reference
-  *    bin/interpersonaldiversity.R:82-115) where groups are small but
-  *    group count is massive.
+  *  - **Global graph** → DataFrame supersteps over the [[Superstep]]
+  *    operator: PageRank + components (`pageRankAndComponentsDF`) and
+  *    the exact-scaled kernels (PageRank, eigen, SSSP, k-core, LPA,
+  *    alpha, PPR, power, HITS), one join + one group-by per superstep.
+  *    GraphX still serves `connectedComponents` (dedup clusters and
+  *    the robustness curve's layered union) and the
+  *    `pageRankAndComponents` law twin. Right tier when the graph
+  *    itself is huge.
+  *  - **Per-group subgraphs** → `perGroupMetrics`/`perGroupEigen`/
+  *    `perGroupComponents`: a keyed group-by feeding task-local
+  *    kernels ([[LocalGraph]], union-find). One shuffle on the group
+  *    key, then thousands of small graphs execute in parallel across
+  *    executors — the 100 TB-scale path for "compute centrality per
+  *    sample" (reference bin/interpersonaldiversity.R:82-115) where
+  *    groups are small but group count is massive.
   *
   * β-diversity ops (G17/G18) are pure relational plans — no graph
   * materialization at all.
@@ -49,113 +54,6 @@ object GraphAnalytics {
   private[graft] def gxPartitions(spark: SparkSession, nEdges: Long): Int =
     math.max(4, math.min(spark.sparkContext.defaultParallelism,
       (nEdges / 100000L).toInt))
-
-  /** Shuffle sizing for the exact-scaled superstep kernels: one task
-    * per ~64k state rows, clamped to [4, defaultParallelism] — the
-    * same size-to-data rule as [[gxPartitions]] and the streaming
-    * state stores. Rationale: these kernels run ~3 exchanges per
-    * superstep × 5-10 supersteps, so per-task scheduling latency
-    * multiplies by ~30; at the session default (cores) a 2.7k-row
-    * state table schedules ~1000 tasks of pure overhead, which is
-    * exactly the surface a co-tenant load amplifies 10-20× (the
-    * round-6 driver bench measured q110 at 57.9 s under contention vs
-    * 2.4 s idle). Sizing to volume keeps small graphs at 4 tasks per
-    * exchange while a real 100 TB edge table scales the count back to
-    * full cluster spread. */
-  private[graft] def superstepPartitions(spark: SparkSession, rows: Long): Int =
-    math.max(4, math.min(spark.sparkContext.defaultParallelism,
-      (rows / 65536L).toInt))
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to n — the
-    * batch twin of StreamOps.withStatePartitions. Only jobs EXECUTED
-    * inside the scope see n (the conf is read at planning time), which
-    * is why the superstep kernels materialize every iterate eagerly
-    * inside the scope instead of returning one deep lazy plan. */
-  private[graft] def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", old)
-  }
-
-  /** [[withShufflePartitions]] with ADAPTIVE EXECUTION scoped OFF —
-    * the superstep-kernel execution scope. Rationale (guide §1.2/§2):
-    * these kernels size every exchange explicitly from measured data
-    * volume ([[superstepPartitions]]), so AQE's partition coalescing
-    * has nothing to decide — but its stage-by-stage re-optimization
-    * turns each materialization into one JOB PER EXCHANGE (the
-    * round-14 listener trace: 14-28 jobs per gate for ~60 byte-tiny
-    * tasks), and a ~30-superstep kernel multiplies that scheduling
-    * fixed cost. With AQE off the whole chained recurrence runs as ONE
-    * job whose stages the DAG scheduler pipelines. Scale note: this is
-    * scoped to the kernels, not the session — their join sides are
-    * explicitly co-partitioned and message skew is absorbed by partial
-    * (map-side) aggregation, the two things AQE would otherwise
-    * handle. */
-  private[graft] def withSuperstepScope[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val oldA = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try withShufflePartitions(spark, n)(body)
-    finally spark.conf.set("spark.sql.adaptive.enabled", oldA)
-  }
-
-  /** Eagerly materialize a superstep operand (localCheckpoint: cuts
-    * lineage AND executes now, so the kernel's conf scope applies) and
-    * return it with its row count — the count is a cheap second pass
-    * over the checkpointed partitions, and sizes the kernel's shuffle
-    * partitions. It counts the checkpointed RDD directly: one job,
-    * where `Dataset.count` plans an aggregate whose exchange costs a
-    * second job under AQE. Checkpointed iterates are freed by the
-    * context cleaner when unreferenced; at gate scale each holds a few
-    * thousand rows. */
-  private def materialized(df: DataFrame): (DataFrame, Long) = {
-    val c = df.localCheckpoint(true)
-    (c, c.queryExecution.toRdd.count())
-  }
-
-  /** Chain `iters` LAZY superstep transforms and materialize the whole
-    * chain with ONE eager localCheckpoint — the round-14 action-count
-    * fix (guide §5: the driver should do almost no work; the round-13
-    * event log showed every exact-scaled kernel paying one full
-    * QueryExecution (analyze/optimize/plan) + job-launch round-trip
-    * PER superstep over byte-tiny states, ~0.25 s of driver-side fixed
-    * cost per iteration on a 32-core host). Contract: `step` must
-    * consume its iterate exactly ONCE and otherwise reference only
-    * materialized (checkpointed) leaves, so the lazy plan grows
-    * LINEARLY in `iters`. A recurrence that seems to need its iterate
-    * twice can often be recast over a richer iterate: kcore iterates
-    * the live edge set, whose two window counts give both endpoint
-    * degrees, instead of the node membership it would join twice.
-    * Recurrences that really read the iterate twice — HITS's global
-    * normalization, the pointer-jumping self-join of
-    * [[pageRankAndComponentsDF]] — keep their per-round
-    * materialization. The final checkpoint runs inside the caller's
-    * conf scope, so the superstep partition sizing still applies to
-    * every exchange. */
-  private def chainSupersteps(init: DataFrame, iters: Int)(
-      step: DataFrame => DataFrame): DataFrame = {
-    var cur = init
-    var i = 0
-    while (i < iters) { cur = step(cur); i += 1 }
-    cur.localCheckpoint(true)
-  }
-
-  /** Weighted PageRank on the symmetrized graph (reference
-    * bin/compareTwins.R:93 page_rank(directed=F)); returns (id, pagerank).
-    * Fixed iteration count (staticPageRank): predictable cost at scale —
-    * tolerance-driven convergence on a big graph is an unbounded number
-    * of full-graph passes. */
-  def pageRank(spark: SparkSession, g: PropertyGraph, weightCol: String,
-      iters: Int = 10): DataFrame = {
-    val sym = PropertyGraph(g.nodes,
-      g.edges.unionByName(g.edges
-        .withColumn("tmp", col("src")).withColumn("src", col("dst"))
-        .withColumn("dst", col("tmp")).drop("tmp")))
-    val ranks = toGraphX(sym, weightCol,
-      gxPartitions(spark, sym.edges.count())).staticPageRank(iters).vertices
-    spark.createDataFrame(ranks.map(t => Row(t._1, t._2)),
-      new org.apache.spark.sql.types.StructType()
-        .add("id", "long").add("pagerank", "double"))
-  }
 
   /** PageRank + weak components off ONE cached GraphX graph — the two
     * jobs share the materialized vertex/edge RDDs instead of
@@ -221,22 +119,19 @@ object GraphAnalytics {
     // measured 13.0 s / 8.8 s / 10.7 s at 8 / 16 / 32 partitions —
     // the coarser grain wins locally while a real cluster still caps
     // at full parallelism
-    withSuperstepScope(spark, math.max(4,
-        math.min(spark.sparkContext.defaultParallelism, (nE / 131072L).toInt))) {
+    Superstep.scoped(spark, nE, 131072L) {
       val sym = dir
         .unionByName(dir.select(col("dst").as("src"), col("src").as("dst")))
       // per-edge transition weight, precomputed ONCE like GraphX's
       // mapTriplets(1.0 / outdeg): msg = r_src · w — the single
       // long-lived superstep operand, serving BOTH kernels
-      val w = sym
+      val w = Superstep.checkpoint(sym
         .join(sym.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-        .repartition(col("src")).sortWithinPartitions("src")
-        .localCheckpoint(true)
-      val v = g.nodes.select(col("id").cast("long").as("id"))
+        .repartition(col("src")).sortWithinPartitions("src"))
+      val v = Superstep.checkpoint(g.nodes.select(col("id").cast("long").as("id"))
         .unionByName(w.select(col("src").as("id"))).distinct()
-        .repartition(col("id")).sortWithinPartitions("id")
-        .localCheckpoint(true)
+        .repartition(col("id")).sortWithinPartitions("id"))
       // FUSED supersteps: rank and component label ride ONE state row
       // and ONE message aggregation (sum for rank, min for label), so
       // the edge table is scanned once per round for both kernels.
@@ -246,8 +141,8 @@ object GraphAnalytics {
       // the cheap single-materialization form. Every frame that feeds
       // a self-join materializes first (an un-checkpointed operand
       // would execute its plan on both sides).
-      var state = v.select(col("id"), lit(1.0).as("pr"), col("id").as("comp"))
-        .localCheckpoint(true)
+      var state = Superstep.checkpoint(
+        v.select(col("id"), lit(1.0).as("pr"), col("id").as("comp")))
       var ccDone = false
       var rounds = 0
       def ccRound(withRank: Boolean): Unit = {
@@ -257,25 +152,24 @@ object GraphAnalytics {
             col("comp")), Seq("src"))
           .groupBy(col("dst").as("id"))
           .agg(sum(col("pr") * col("w")).as("m"), min("comp").as("nmin"))
-        val s1 = state.join(msgs, Seq("id"), "left_outer")
+        val s1 = Superstep.checkpoint(state.join(msgs, Seq("id"), "left_outer")
           .select(col("id"),
             (if (withRank)
               lit(0.15) + lit(0.85) * coalesce(col("m"), lit(0.0))
             else col("pr")).as("pr"),
             least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-            col("comp").as("old"))
-          .localCheckpoint(true)
+            col("comp").as("old")))
         // the convergence statistic is collected DURING the pointer-
         // jump checkpoint action (Observation) instead of a third
         // per-round job scanning s2 again — round-14 action-count fix
         val obs = org.apache.spark.sql.Observation()
-        val s2 = s1.join(s1.select(col("id").as("c2"), col("comp").as("comp2")),
-            col("comp") === col("c2"), "left_outer")
-          .select(col("id"), col("pr"),
-            coalesce(col("comp2"), col("comp")).as("comp"), col("old"))
-          .observe(obs, sum(when(col("comp") =!= col("old"), 1L)
-            .otherwise(0L)).as("changed"))
-          .localCheckpoint(true)
+        val s2 = Superstep.checkpoint(
+          s1.join(s1.select(col("id").as("c2"), col("comp").as("comp2")),
+              col("comp") === col("c2"), "left_outer")
+            .select(col("id"), col("pr"),
+              coalesce(col("comp2"), col("comp")).as("comp"), col("old"))
+            .observe(obs, sum(when(col("comp") =!= col("old"), 1L)
+              .otherwise(0L)).as("changed")))
         ccDone = obs.get.getOrElse("changed", null) match {
           case n: java.lang.Long => n.longValue() == 0L
           case _ => true // empty state: nothing left to change
@@ -303,8 +197,8 @@ object GraphAnalytics {
               .select(col("id"),
                 (lit(0.15) + lit(0.85) * coalesce(col("m"), lit(0.0))).as("pr"))
           }
-          state = pr.join(compT, Seq("id")).select("id", "pr", "comp")
-            .localCheckpoint(true)
+          state = Superstep.checkpoint(
+            pr.join(compT, Seq("id")).select("id", "pr", "comp"))
           step = iters
         }
       }
@@ -316,48 +210,22 @@ object GraphAnalytics {
   }
 
   /** Exact-scaled static PageRank as pure DataFrame iterations — the
-    * driver-oracle-able form of [[pageRank]] (G12). Ranks live in
-    * scaled-BIGINT units (1e6 = rank 1.0); each per-edge contribution
-    * `⌊0.85 · pr / outdeg + 0.5⌋` rounds to an integer BEFORE the sum
-    * (floor(x+0.5), pure IEEE ops — `round` on doubles differs between
-    * engines: Spark goes through decimal-string HALF_UP, DuckDB uses C
-    * round, and they disagree on epsilon-below-half doubles),
-    * so the aggregation is order-independent and any engine reproduces
-    * it bit-for-bit (the ExactNum idiom). Dangling-node mass is
-    * dropped (documented semantics, matching the oracle). One
-    * shuffle join + one aggregation per iteration — the same
-    * per-superstep cost shape as Pregel, with Catalyst/AQE planning
-    * each step; edges should be pre-persisted (each iteration reads
-    * them once for the join). */
-  def pageRankExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val (e0, nE) = materialized(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nE)) {
-      // co-partition the per-step join operand ONCE by its key so each
-      // superstep re-shuffles only the rank iterate, not the edges —
-      // and attach the LOOP-INVARIANT out-degree to the edge row here
-      // (was one extra join per superstep)
-      val e = e0.join(
-          e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
-        .repartition(col("src")).localCheckpoint(true)
-      val v = e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct()
-        .repartition(col("id")).localCheckpoint(true)
-      // the iterate is consumed once per step over checkpointed leaves,
-      // so the whole 10-step recurrence runs as ONE action
-      val r = chainSupersteps(
-          v.select(col("id"), lit(1000000L).as("pr")), iters) { r =>
-        val msgs = e
-          .join(r.select(col("id").as("src"), col("pr")), Seq("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum(floor(lit(0.85) * col("pr") / col("outdeg") + lit(0.5))).as("m"))
-        v.join(msgs, Seq("id"), "left_outer")
-          .select(col("id"), (lit(150000L) + coalesce(col("m"), lit(0L))).as("pr"))
-      }
-      r.select(col("id"), col("pr").as("pr_scaled"))
-    }
-  }
+    * driver-oracle-able form of GraphX `staticPageRank` (G12). Ranks
+    * live in scaled-BIGINT units (1e6 = rank 1.0); each per-edge
+    * contribution `⌊0.85 · pr / outdeg + 0.5⌋` rounds to an integer
+    * BEFORE the sum (floor(x+0.5), pure IEEE ops — `round` on doubles
+    * differs between engines: Spark goes through decimal-string
+    * HALF_UP, DuckDB uses C round, and they disagree on
+    * epsilon-below-half doubles), so the aggregation is
+    * order-independent and any engine reproduces it bit-for-bit (the
+    * ExactNum idiom). Dangling-node mass is dropped (documented
+    * semantics, matching the oracle). One shuffle join + one
+    * aggregation per superstep. */
+  def pageRankExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    // a = dst gathers from b = src along the directed edge
+    staticPageRank(edges.select(col("dst").cast("long").as("a"),
+        col("src").cast("long").as("b")).distinct(),
+      count(lit(1)), lit(0.85) * col("pr") / col("norm"), iters)
 
   /** Weighted exact-scaled static PageRank on the SYMMETRIZED graph —
     * the reference's `page_rank(directed=F)` semantic
@@ -366,35 +234,29 @@ object GraphAnalytics {
     * per-edge `⌊0.85·r·w / strength + 0.5⌋` before the sum ⇒
     * order-independent ⇒ engine-independent), with integer edge
     * weights and out-strength normalization. */
-  def pageRankWeightedExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("weight").cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-    val (symRaw, nE) = materialized(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    withSuperstepScope(spark, superstepPartitions(spark, nE)) {
-      // loop-invariant out-strength rides the edge row (was one extra
-      // join per superstep); iterate consumed once per step → the full
-      // recurrence materializes as ONE action (see chainSupersteps)
-      val sym = symRaw.join(
-          symRaw.groupBy(col("src")).agg(sum(col("w")).as("s")), Seq("src"))
-        .repartition(col("src")).localCheckpoint(true)
-      val v = sym.select(col("src").as("id")).distinct()
-        .repartition(col("id")).localCheckpoint(true)
-      val r = chainSupersteps(
-          v.select(col("id"), lit(1000000L).as("pr")), iters) { r =>
-        val msgs = sym
-          .join(r.select(col("id").as("src"), col("pr")), Seq("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum(floor(lit(0.85) * col("pr") * col("w") / col("s") + lit(0.5))).as("m"))
-        v.join(msgs, Seq("id"), "left_outer")
-          .select(col("id"), (lit(150000L) + coalesce(col("m"), lit(0L))).as("pr"))
+  def pageRankWeightedExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    staticPageRank(Superstep.symmetric(edges, sum),
+      sum(col("w")), lit(0.85) * col("pr") * col("w") / col("norm"), iters)
+
+  /** The static PageRank superstep over an `(a, b[, w])` operand where
+    * `a` gathers from `b`: `norm` (aggregated per sending end `b`) is
+    * the LOOP-INVARIANT normalizer riding the edge row, and each edge
+    * carries `⌊msg + 0.5⌋` to `a`. */
+  private def staticPageRank(operand: DataFrame, norm: Column, msg: Column,
+      iters: Int): DataFrame =
+    Superstep(operand) { s =>
+      val e = Superstep.checkpoint(s.operand
+        .join(s.operand.groupBy(col("b")).agg(norm.as("norm")), Seq("b"))
+        .repartition(col("b")))
+      val v = Superstep.checkpoint(e.select(col("b").as("node"))
+        .unionByName(e.select(col("a").as("node"))).distinct()
+        .repartition(col("node")))
+      s.chain(v.select(col("node"), lit(1000000L).as("pr")), iters) { r =>
+        v.join(Superstep.neighbours(e, r, sum(floor(msg + lit(0.5))).as("m")),
+            Seq("node"), "left_outer")
+          .select(col("node"), (lit(150000L) + coalesce(col("m"), lit(0L))).as("pr"))
       }
-      r.select(col("id"), col("pr").as("pr_scaled"))
-    }
-  }
+    }.select(col("node").as("id"), col("pr").as("pr_scaled"))
 
   /** Exact-scaled power iteration for per-group eigencentrality — the
     * driver-oracle-able companion of the LocalGraph eigen kernel (G6).
@@ -406,34 +268,8 @@ object GraphAnalytics {
     * trajectory bit-for-bit. Fixed step count: predictable cost at
     * scale, same rationale as static PageRank. One shuffle join + two
     * aggregations per step, all keyed by (group, node). */
-  def eigenExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(
-      e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
-        .distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      // co-partition the edge table by the per-step join key once
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
-      // the group max comes from a WINDOW over the neighbor-sum table,
-      // not a self-join: one pass instead of consuming the sum twice —
-      // which also keeps the iterate single-consumption, so the whole
-      // recurrence materializes as ONE action (see chainSupersteps)
-      val byGroup = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-      val v = chainSupersteps(
-          sym.select(col("grp"), col("a").as("node")).distinct()
-            .select(col("grp"), col("node"), lit(1000000L).as("v")), iters) { v =>
-        sym.join(v.select(col("grp"), col("node").as("b"), col("v")), Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(sum(col("v")).as("s"))
-          .withColumn("mx", max(col("s")).over(byGroup))
-          .select(col("grp"), col("node"),
-            floor(col("s") * lit(1000000.0) / col("mx") + lit(0.5)).as("v"))
-      }
-      v.select(col("grp"), col("node"), col("v").as("eigen_scaled"))
-    }
-  }
+  def eigenExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    maxNormalized(Superstep.symmetric(edges), sum(col("v")), iters)
 
   /** WEIGHTED [[eigenExactScaled]] — the production per-group eigen
     * kernel ([[perGroupEigen]], reference eigen_centrality with edge
@@ -442,31 +278,24 @@ object GraphAnalytics {
     * max-normalization stays one rounded scaled division per node per
     * step. Weights symmetrize by summing both directions, matching
     * igraph's undirected view of a weighted multigraph. */
-  def eigenWeightedExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"),
-      col("weight").cast("long").as("w"))
-    val (symRaw, nRows) = materialized(e0.unionByName(
-        e0.select(col("grp"), col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("grp", "a", "b").agg(sum(col("w")).as("w")))
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
+  def eigenWeightedExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    maxNormalized(Superstep.symmetric(edges, sum), sum(col("w") * col("v")), iters)
+
+  /** The eigen superstep: neighbour sum `s` by `gather`, then
+    * `⌊s·1e6 / max_group(s) + 0.5⌋`. The group max is a WINDOW over
+    * the sum table, not a self-join, so the iterate stays
+    * single-consumption. */
+  private def maxNormalized(operand: DataFrame, gather: Column, iters: Int): DataFrame =
+    Superstep(operand) { s =>
+      val sym = s.partitioned("grp", "b")
       val byGroup = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-      // single-consumption iterate → ONE action for the whole chain
-      val v = chainSupersteps(
-          sym.select(col("grp"), col("a").as("node")).distinct()
-            .select(col("grp"), col("node"), lit(1000000L).as("v")), iters) { v =>
-        sym.join(v.select(col("grp"), col("node").as("b"), col("v")), Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(sum(col("w") * col("v")).as("s"))
+      s.chain(Superstep.vertices(sym).withColumn("v", lit(1000000L)), iters) { v =>
+        Superstep.neighbours(sym, v, gather.as("s"))
           .withColumn("mx", max(col("s")).over(byGroup))
           .select(col("grp"), col("node"),
             floor(col("s") * lit(1000000.0) / col("mx") + lit(0.5)).as("v"))
       }
-      v.select(col("grp"), col("node"), col("v").as("eigen_scaled"))
-    }
-  }
+    }.select(col("grp"), col("node"), col("v").as("eigen_scaled"))
 
   /** Distributed single-source shortest paths per group — Bellman-Ford
     * min-plus supersteps on the symmetrized weighted graph (source =
@@ -480,33 +309,19 @@ object GraphAnalytics {
     * companion of the task-local Dijkstra kernel (G4 weighted): one
     * shuffle join + one min-agg per step. */
   def ssspExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"),
-      col("weight").cast("long").as("w"))
+    val sym = Superstep.symmetric(edges, min)
     // weight-0 self-loops carry each node's current bound through the
     // relax join, so `dist` is consumed ONCE per step — the naive
     // "dist ∪ relax(dist)" form reads it twice per superstep. Same
     // trick in the oracle.
-    val sym = e0.unionByName(
-        e0.select(col("grp"), col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("grp", "a", "b").agg(min(col("w")).as("w"))
-    val (hopRaw, nRows) = materialized(sym.unionByName(
-      sym.select(col("grp"), col("a")).distinct()
-        .select(col("grp"), col("a"), col("a").as("b"), lit(0L).as("w"))))
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val hop = hopRaw.repartition(col("grp"), col("a")).localCheckpoint(true)
-      // single-consumption iterate → ONE action for the whole chain
-      val dist = chainSupersteps(
-          hop.where(col("w") === 0L).groupBy(col("grp"))
-            .agg(min(col("a")).as("node"))
-            .select(col("grp"), col("node"), lit(0L).as("dist")), iters) { dist =>
-        hop
-          .join(dist.select(col("grp"), col("node").as("a"), col("dist")), Seq("grp", "a"))
-          .groupBy(col("grp"), col("b").as("node"))
-          .agg(min(col("dist") + col("w")).as("dist"))
+    Superstep(sym.unionByName(Superstep.vertices(sym)
+        .select(col("grp"), col("node").as("a"), col("node").as("b"), lit(0L).as("w")))) { s =>
+      val hop = s.partitioned("grp", "b")
+      s.chain(hop.where(col("w") === 0L).groupBy(col("grp"))
+          .agg(min(col("a")).as("node"))
+          .select(col("grp"), col("node"), lit(0L).as("dist")), iters) { dist =>
+        Superstep.neighbours(hop, dist, min(col("dist") + col("w")).as("dist"))
       }
-      dist.select(col("grp"), col("node"), col("dist"))
     }
   }
 
@@ -530,25 +345,18 @@ object GraphAnalytics {
     * is the node-membership peel the oracle replays. `iters` >= 1. */
   def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     require(iters >= 1, s"kcore needs at least one round, got iters=$iters")
-    val spark = edges.sparkSession
-    val e = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (sym, nRows) = materialized(
-      e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
-        .distinct())
     val byA = org.apache.spark.sql.expressions.Window.partitionBy("grp", "a")
     val byB = org.apache.spark.sql.expressions.Window.partitionBy("grp", "b")
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val live = chainSupersteps(sym, iters - 1) { cur =>
+    Superstep(Superstep.symmetric(edges)) { s =>
+      val live = s.chain(s.operand, iters - 1) { cur =>
         cur.withColumn("da", count(lit(1)).over(byA))
           .withColumn("db", count(lit(1)).over(byB))
           .where(col("da") >= k && col("db") >= k)
           .select("grp", "a", "b")
       }
-      live.groupBy(col("grp"), col("a").as("node"))
+      Superstep.checkpoint(live.groupBy(col("grp"), col("a").as("node"))
         .agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .localCheckpoint(true)
+        .where(col("deg") >= k))
     }
   }
 
@@ -566,20 +374,11 @@ object GraphAnalytics {
     * liveness hazard). Per step: one shuffle join on the label table
     * (consumed once — linear plan growth) + two aggs, all keyed by
     * (group, node). */
-  def lpaExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(e0.unionByName(
-      e0.select(col("grp"), col("b").as("a"), col("a").as("b"))).distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
-      // single-consumption iterate → ONE action for the whole chain
-      val lab = chainSupersteps(
-          sym.select(col("grp"), col("a").as("node")).distinct()
-            .select(col("grp"), col("node"), col("node").as("lab")), iters) { lab =>
-        sym
-          .join(lab.select(col("grp"), col("node").as("b"), col("lab")), Seq("grp", "b"))
+  def lpaExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    Superstep(Superstep.symmetric(edges)) { s =>
+      val sym = s.partitioned("grp", "b")
+      s.chain(Superstep.vertices(sym).withColumn("lab", col("node")), iters) { lab =>
+        sym.join(lab.withColumnRenamed("node", "b"), Seq("grp", "b"))
           .groupBy(col("grp"), col("a"), col("lab"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("grp"), col("a").as("node"))
@@ -588,9 +387,7 @@ object GraphAnalytics {
           .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
           .select(col("grp"), col("node"), (-col("m.nl")).as("lab"))
       }
-      lab.select(col("grp"), col("node"), col("lab").as("community"))
-    }
-  }
+    }.select(col("grp"), col("node"), col("lab").as("community"))
 
   /** Newman modularity of the [[lpaExactScaled]] community assignment,
     * per group — the quality score the reference's igraph workflow
@@ -602,9 +399,9 @@ object GraphAnalytics {
     * IEEE division of exact BIGINTs, so any engine replays it. The
     * label table is consumed three times (both endpoints + degree
     * mass), so its superstep lineage is truncated with an eager
-    * localCheckpoint — the standard iterative-algorithm cut. */
+    * checkpoint — the standard iterative-algorithm cut. */
   def lpaModularityScaled(edges: DataFrame, iters: Int): DataFrame =
-    lpaModularityOf(edges, lpaExactScaled(edges, iters).localCheckpoint(true))
+    lpaModularityOf(edges, Superstep.checkpoint(lpaExactScaled(edges, iters)))
 
   /** [[lpaModularityScaled]] with the label table supplied by the
     * caller — the shared-intermediate form: when the assignment is
@@ -614,10 +411,7 @@ object GraphAnalytics {
     * and MATERIALIZED (persisted or checkpointed) — it is consumed
     * three times below. */
   def lpaModularityOf(edges: DataFrame, lab: DataFrame): DataFrame = {
-    val e0 = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val sym = e0.unionByName(
-        e0.select(col("grp"), col("b").as("a"), col("a").as("b"))).distinct()
+    val sym = Superstep.symmetric(edges)
     val m2 = sym.groupBy("grp").agg(count(lit(1)).as("m2"))
     val labeled = sym
       .join(lab.select(col("grp"), col("node").as("a"), col("community").as("ca")),
@@ -657,30 +451,17 @@ object GraphAnalytics {
     * bounds cost and magnitude either way. Same scale shape as
     * [[eigenExactScaled]]: one shuffle join + one agg per step, all
     * keyed by (group, node). */
-  def alphaExactScaled(edges: DataFrame, alpha: Double, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(
-      e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
-        .distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
-      // single-consumption iterate → ONE action for the whole chain
-      val v = chainSupersteps(
-          sym.select(col("grp"), col("a").as("node")).distinct()
-            .select(col("grp"), col("node"), lit(1000000L).as("v")), iters) { v =>
+  def alphaExactScaled(edges: DataFrame, alpha: Double, iters: Int): DataFrame =
+    Superstep(Superstep.symmetric(edges)) { s =>
+      val sym = s.partitioned("grp", "b")
+      s.chain(Superstep.vertices(sym).withColumn("v", lit(1000000L)), iters) { v =>
         // every node of the symmetrized graph appears as `a`, so the
         // inner join drops no vertex (no left-join/coalesce needed)
-        sym.join(v.select(col("grp"), col("node").as("b"), col("v")), Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(sum(col("v")).as("s"))
+        Superstep.neighbours(sym, v, sum(col("v")).as("s"))
           .select(col("grp"), col("node"),
             (floor(lit(alpha) * col("s") + lit(0.5)) + lit(1000000L)).as("v"))
       }
-      v.select(col("grp"), col("node"), col("v").as("alpha_scaled"))
-    }
-  }
+    }.select(col("grp"), col("node"), col("v").as("alpha_scaled"))
 
   /** Exact-scaled personalized PageRank — random-walk-with-restart
     * from one seed per group (the min node id: deterministic, no
@@ -692,44 +473,28 @@ object GraphAnalytics {
     * seed. Same cost shape as [[alphaExactScaled]]: per step one
     * co-partitioned join + one agg at superstep-sized partitions. */
   def pprExactScaled(edges: DataFrame, damping: Double, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(
-      e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
-        .distinct())
     val teleport = math.round((1.0 - damping) * 1000000L)
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
-      val deg = sym.groupBy(col("grp"), col("a").as("node"))
-        .agg(count(lit(1)).as("deg")).localCheckpoint(true)
-      val seed = deg.groupBy("grp").agg(min(col("node")).as("seed"))
-        .localCheckpoint(true)
-      // the iterate carries ONLY (grp, node, v): deg and the seed flag
-      // re-join per step from the LOOP-INVARIANT checkpointed leaves
-      // above (the old form re-joined the iterate with itself for
-      // them, which doubles the lazy plan per step and forced one
-      // materialization per superstep). Values are unchanged — deg and
-      // node===seed never vary across steps — so the whole recurrence
-      // now runs as ONE action (see chainSupersteps).
-      val vN = chainSupersteps(
-          deg.join(seed, "grp")
-            .select(col("grp"), col("node"),
-              when(col("node") === col("seed"), lit(1000000L))
-                .otherwise(lit(0L)).as("v")), iters) { v =>
+    Superstep(Superstep.symmetric(edges)) { s =>
+      val sym = s.partitioned("grp", "b")
+      // deg and the seed flag are LOOP-INVARIANT checkpointed leaves
+      // the iterate re-joins per step, so it carries only (grp, node, v)
+      val deg = Superstep.checkpoint(sym.groupBy(col("grp"), col("a").as("node"))
+        .agg(count(lit(1)).as("deg")))
+      val seed = Superstep.checkpoint(deg.groupBy("grp").agg(min(col("node")).as("seed")))
+      s.chain(deg.join(seed, "grp")
+          .select(col("grp"), col("node"),
+            when(col("node") === col("seed"), lit(1000000L))
+              .otherwise(lit(0L)).as("v")), iters) { v =>
         val contrib = v.join(deg, Seq("grp", "node"))
-          .select(col("grp"), col("node").as("b"), expr("v DIV deg").as("c"))
-        sym.join(contrib, Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(sum(col("c")).as("s"))
+          .select(col("grp"), col("node"), expr("v DIV deg").as("c"))
+        Superstep.neighbours(sym, contrib, sum(col("c")).as("s"))
           .join(seed, "grp")
           .select(col("grp"), col("node"),
             (floor(lit(damping) * col("s") + lit(0.5)) +
               when(col("node") === col("seed"), lit(teleport))
                 .otherwise(lit(0L))).as("v"))
       }
-      vN.select(col("grp"), col("node"), col("v").as("ppr_scaled"))
-    }
+    }.select(col("grp"), col("node"), col("v").as("ppr_scaled"))
   }
 
   /** Fixed-round k-truss peel over a canonical (u &lt; v) edge list: each
@@ -753,11 +518,10 @@ object GraphAnalytics {
         .join(sym.select(col("a").as("u"), col("b").as("w")), "u")
         .join(sym.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"))
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      out = e.join(sup, Seq("u", "v"), "left")
+      out = Superstep.checkpoint(e.join(sup, Seq("u", "v"), "left")
         .select(col("u"), col("v"),
           coalesce(col("support"), lit(0L)).as("support"))
-        .where(col("support") >= (k - 2).toLong)
-        .localCheckpoint(true)
+        .where(col("support") >= (k - 2).toLong))
       e = out.select("u", "v")
     }
     out
@@ -771,32 +535,20 @@ object GraphAnalytics {
     * degree, neighbor sums are exact BIGINTs, and the single rounded
     * op per node per step (⌊β·s + 0.5⌋) keeps the trajectory
     * engine-independent. Same cost shape as [[alphaExactScaled]]. */
-  def powerExactScaled(edges: DataFrame, beta: Double, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col("group").as("grp"),
-      col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-    val (symRaw, nRows) = materialized(
-      e.unionByName(e.select(col("grp"), col("b").as("a"), col("a").as("b")))
-        .distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nRows)) {
-      val sym = symRaw.repartition(col("grp"), col("b")).localCheckpoint(true)
-      // single-consumption iterate → ONE action for the whole chain
-      val v = chainSupersteps(
-          sym.groupBy(col("grp"), col("a").as("node"))
-            .agg((count(lit(1)) * lit(1000000L)).as("v")), iters) { v =>
+  def powerExactScaled(edges: DataFrame, beta: Double, iters: Int): DataFrame =
+    Superstep(Superstep.symmetric(edges)) { s =>
+      val sym = s.partitioned("grp", "b")
+      s.chain(sym.groupBy(col("grp"), col("a").as("node"))
+          .agg((count(lit(1)) * lit(1000000L)).as("v")), iters) { v =>
         // every node carries a score each step, so the join fans exactly
         // deg(i) rows per node — deg falls out of the same aggregation
         // as the neighbor sum
-        sym.join(v.select(col("grp"), col("node").as("b"), col("v")), Seq("grp", "b"))
-          .groupBy(col("grp"), col("a").as("node"))
-          .agg(sum(col("v")).as("s"), count(lit(1)).as("deg"))
+        Superstep.neighbours(sym, v, sum(col("v")).as("s"), count(lit(1)).as("deg"))
           .select(col("grp"), col("node"),
             (col("deg") * lit(1000000L) +
               floor(lit(beta) * col("s") + lit(0.5))).as("v"))
       }
-      v.select(col("grp"), col("node"), col("v").as("power_scaled"))
-    }
-  }
+    }.select(col("grp"), col("node"), col("v").as("power_scaled"))
 
   /** Exact-scaled HITS (Kleinberg hubs & authorities, beyond-
     * reference): on the directed graph, h ← A·a then a ← Aᵀ·h per
@@ -804,33 +556,28 @@ object GraphAnalytics {
     * sums are exact BIGINTs and the single rounded op per node per
     * half-step (⌊s·1e6/max + 0.5⌋) keeps the trajectory engine-
     * independent, the [[eigenExactScaled]] discipline applied to the
-    * two-sided iteration. The global max travels as a broadcast 1-row
-    * aggregate (not a whole-table window). Nodes without out-(in-)
-    * edges carry hub (authority) 0 exactly. Output:
+    * two-sided iteration. The global max of a half-step is observed
+    * while it is checkpointed, so every half-step is one action of its
+    * own — the recurrence reads each iterate twice. Nodes without
+    * out-(in-) edges carry hub (authority) 0 exactly. Output:
     * (id, hub_scaled, auth_scaled). */
-  def hitsExactScaled(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val (e0, nE) = materialized(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct())
-    withSuperstepScope(spark, superstepPartitions(spark, nE)) {
-      val e = e0.repartition(col("dst")).localCheckpoint(true)
-      val v = e.select(col("src").as("id"))
+  def hitsExactScaled(edges: DataFrame, iters: Int): DataFrame =
+    Superstep(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")).distinct()) { st =>
+      val e = Superstep.checkpoint(st.operand.repartition(col("dst")))
+      val v = Superstep.checkpoint(e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct()
-        .repartition(col("id")).localCheckpoint(true)
+        .repartition(col("id")))
       // zero-score nodes contribute nothing to any later neighbor sum,
       // so iterations normalize only the nodes WITH mass (drops the
       // all-node left join — 2 stages/iteration in a kernel whose cost
       // is pure stage count); the zeros re-enter once at the end.
       // The global max is collected DURING the half-step's checkpoint
-      // action (Observation) and re-injected as a LITERAL: the old
-      // broadcast-agg form embedded the sums subtree twice (once for
-      // the 1-row max, once for the divide), executing the join+agg
-      // twice per half-step and paying a broadcast exchange — the
-      // arithmetic ⌊s·1e6/mx + 0.5⌋ is unchanged, mx is the same
-      // exact BIGINT either way.
+      // action (Observation) and re-injected as a LITERAL, so the sums
+      // subtree executes once per half-step.
       def normalized(sums: DataFrame, out: String): DataFrame = {
         val obs = org.apache.spark.sql.Observation()
-        val s = sums.observe(obs, max(col("s")).as("mx")).localCheckpoint(true)
+        val s = Superstep.checkpoint(sums.observe(obs, max(col("s")).as("mx")))
         val mx = obs.get.getOrElse("mx", null) match {
           case n: java.lang.Long => n.longValue()
           case _ => 0L // empty frame: max is null — everything scores 0
@@ -840,7 +587,7 @@ object GraphAnalytics {
            else floor(col("s") * lit(1000000.0) / lit(mx) + lit(0.5))
              .cast("long")).as(out))
       }
-      var a = v.select(col("id"), lit(1000000L).as("a")).localCheckpoint(true)
+      var a = Superstep.checkpoint(v.select(col("id"), lit(1000000L).as("a")))
       var h = v.select(col("id"), lit(1000000L).as("h"))
       (0 until iters).foreach { _ =>
         h = normalized(
@@ -854,7 +601,6 @@ object GraphAnalytics {
         .select(col("id"), coalesce(col("h"), lit(0L)).as("hub_scaled"),
           coalesce(col("a"), lit(0L)).as("auth_scaled"))
     }
-  }
 
   /** Exact-scaled Brandes betweenness per group — the
     * driver-oracle-able form of the "no SQL form" kernel (G7).
@@ -999,17 +745,6 @@ object GraphAnalytics {
     spark.createDataFrame(cc.map(t => Row(t._1, t._2)),
       new org.apache.spark.sql.types.StructType()
         .add("id", "long").add("component", "long"))
-  }
-
-  /** Label propagation communities (distributed analog of the
-    * reference's walktrap/fastgreedy — SURVEY G14 note). */
-  def labelPropagation(spark: SparkSession, g: PropertyGraph, iters: Int = 10): DataFrame = {
-    val lp = org.apache.spark.graphx.lib.LabelPropagation
-      .run(toGraphX(unitWeighted(g), "unit_w",
-        gxPartitions(spark, g.edges.count())), iters).vertices
-    spark.createDataFrame(lp.map(t => Row(t._1, t._2)),
-      new org.apache.spark.sql.types.StructType()
-        .add("id", "long").add("community", "long"))
   }
 
   /** Materialize one group's edges into task memory, failing fast past
@@ -1241,17 +976,21 @@ object GraphAnalytics {
         (col("s").cast("double") * col("s") / col("q")).as("simpson"))
   }
 
-  /** Largest connected-component size of one edge list, computed
-    * task-locally by union-find with path halving — the per-layer
-    * kernel of [[robustnessExact]]'s small tier. Component sizes are
-    * algorithm-independent, so this agrees exactly with GraphX CC and
-    * with a recursive-CTE closure. Counts only edge endpoints
-    * (isolated vertices are the caller's singleton arithmetic). */
-  private def largestComponentOf(edges: Iterator[(Long, Long)]): Long = {
+  /** Weak components of one edge list, computed task-locally by
+    * union-find with path halving: each edge endpoint with its
+    * component's min id. The larger-id root always joins the
+    * smaller-id one, so every root IS its component's min id —
+    * GraphX's labeling convention, and the recursive-CTE closure's.
+    * Covers only edge endpoints (isolated vertices are the caller's
+    * singleton arithmetic). The per-group kernel of
+    * [[perGroupComponents]] and, via [[largestComponentOf]], of
+    * [[robustnessExact]]'s small tier. */
+  private def componentsOf(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
     val idx = scala.collection.mutable.HashMap.empty[Long, Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
     def nodeOf(v: Long): Int = idx.getOrElseUpdate(v, {
-      parent += parent.length; parent.length - 1
+      ids += v; parent += parent.length; parent.length - 1
     })
     def find(x0: Int): Int = {
       var x = x0
@@ -1260,16 +999,32 @@ object GraphAnalytics {
     }
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(nodeOf(a)), find(nodeOf(b)))
-      if (ra != rb) parent(ra) = rb
+      if (ids(ra) < ids(rb)) parent(rb) = ra
+      else if (ids(rb) < ids(ra)) parent(ra) = rb
     }
-    if (parent.isEmpty) 0L
-    else {
-      val sizes = scala.collection.mutable.HashMap.empty[Int, Long]
-      parent.indices.foreach { i =>
-        val r = find(i); sizes.update(r, sizes.getOrElse(r, 0L) + 1L)
-      }
-      sizes.values.max
-    }
+    ids.indices.iterator.map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Largest connected-component size of one edge list (0 without
+    * edges): a size count over [[componentsOf]]'s labels. Component
+    * sizes are algorithm-independent, so this agrees exactly with
+    * GraphX CC and with a recursive-CTE closure. */
+  private def largestComponentOf(edges: Iterator[(Long, Long)]): Long =
+    componentsOf(edges).toSeq.groupMapReduce(_._2)(_ => 1L)(_ + _)
+      .values.maxOption.getOrElse(0L)
+
+  /** G5 per group — weak connected components of every group's
+    * subgraph on the keyed per-group tier ([[keyedGroupsUnweighted]],
+    * one task-local union-find per group). Input: (group, src, dst).
+    * Output: (group, node, component), the component labeled by its
+    * min node id. */
+  private[graft] def perGroupComponents(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    keyedGroupsUnweighted(edges)
+      .flatMapGroups { (grp, it) =>
+        componentsOf(it.map(e => (e._2, e._3))).map { case (n, c) => (grp, n, c) }
+      }.toDF("group", "node", "component")
   }
 
   /** G19 exact twin — targeted-removal robustness with every decision
@@ -1304,8 +1059,7 @@ object GraphAnalytics {
     // argmax), so the superstep partition scope applies to it — each
     // step's degree agg is ~2|E| rows, the contention-amplifier shape
     val nEdges = canon.count()
-    val parts = superstepPartitions(spark, nEdges * 2)
-    val ccMaxByLayer = withSuperstepScope(spark, parts) {
+    val ccMaxByLayer = Superstep.scoped(spark, nEdges * 2, 65536L) {
       // Phase 1 — the removal sequence, BATCHED (round-12 verdict
       // item 5): the old loop ran one argmax collect + one
       // localCheckpoint Spark job PER removal step — inherently
@@ -1363,7 +1117,7 @@ object GraphAnalytics {
         // guard tripped: finish with the incremental distributed loop
         // (degrees recomputed once under the removals so far, then
         // victim-decrement maintenance per step — round-7 shape)
-        var degrees = canon
+        var degrees = Superstep.checkpoint(canon
           .where(!col("a").isin(removed.toSeq: _*) &&
             !col("b").isin(removed.toSeq: _*))
           .select(col("a").as("v"))
@@ -1371,8 +1125,7 @@ object GraphAnalytics {
             .where(!col("a").isin(removed.toSeq: _*) &&
               !col("b").isin(removed.toSeq: _*))
             .select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("d"))
-          .localCheckpoint(true)
+          .groupBy("v").agg(count(lit(1)).as("d")))
         (removed.length until nWanted).foreach { _ =>
           val top1 = degrees.orderBy(col("d").desc, col("v").asc).limit(1)
             .select(col("v")).as[Long].collect()
@@ -1391,11 +1144,10 @@ object GraphAnalytics {
               !col("b").isin(prevRemoved: _*))
             .select(when(col("a") === victim, col("b")).otherwise(col("a")).as("v"))
             .groupBy("v").agg(count(lit(1)).as("dec"))
-          degrees = degrees.where(col("v") =!= victim)
+          degrees = Superstep.checkpoint(degrees.where(col("v") =!= victim)
             .join(nbDec, Seq("v"), "left_outer")
             .select(col("v"), (col("d") - coalesce(col("dec"), lit(0L))).as("d"))
-            .where(col("d") > 0)
-            .localCheckpoint(true)
+            .where(col("d") > 0))
         }
       }
       // Phase 2 — per-layer largest component, TIERED like every graph

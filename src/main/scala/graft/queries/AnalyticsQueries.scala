@@ -322,14 +322,14 @@ object AnalyticsQueries {
       sum("harmonic_scaled").as("harmonic_sum"))
   }
 
-  /** G5 — the REAL GraphX connectedComponents job, hash-oracled.
-    * Vertex ids encode (nation, node) as nationkey·10⁸ + node so one
-    * distributed CC run labels every per-group subgraph at once, and
-    * GraphX's component label (min vertex id in the component) decodes
-    * to min node id WITHIN the group — which a DuckDB recursive-CTE
-    * reachability computes exactly. Integers end to end → bit-safe.
-    * (The arithmetic encoding suits test scales; at 100 TB the same
-    * plan runs on one global graph with native long ids — q57.) */
+  /** G5 — per-nation connected components, hash-oracled. Each
+    * nation's supplier-customer subgraph is one group on the keyed
+    * per-group tier ([[GraphAnalytics.perGroupComponents]]): a
+    * task-local union-find labels every component by its min node id,
+    * which a DuckDB recursive-CTE reachability computes exactly.
+    * Integers end to end → bit-safe. (The gate keeps its GraphX name
+    * for continuity; a whole graph too large for one task belongs on
+    * the global tier — q57.) */
   val q75 = QuerySpec.sql(
     "q75_graphx_components",
     """WITH RECURSIVE e AS (
@@ -351,29 +351,15 @@ object AnalyticsQueries {
       |  FROM r w JOIN sym s ON s.grp = w.grp AND s.a = w.node)
       |SELECT grp, root AS node, CAST(min(node) AS BIGINT) AS component
       |FROM r GROUP BY grp, root""",
-    "distributed GraphX connected components, recursive-CTE-oracled (SURVEY G5)") { (s, d) =>
-    import graft.graph.PropertyGraph
-    val enc = lit(100000000L)
+    "per-nation connected components on the keyed per-group tier, recursive-CTE-oracled (SURVEY G5)") { (s, d) =>
     val e = Tables.lineitem(s, d).filter(col("l_quantity") >= 49)
       .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
       .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name").as("grp"), col("n_nationkey").cast("long").as("nk"),
-        col("l_suppkey").cast("long").as("node_src"),
-        (col("o_custkey") + 1000000L).cast("long").as("node_dst"))
-      .distinct()
-    val edges = e.select((col("nk") * enc + col("node_src")).as("src"),
-      (col("nk") * enc + col("node_dst")).as("dst"))
-    val vtx = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().withColumn("name", col("id").cast("string"))
-    val cc = GraphAnalytics.connectedComponents(s, PropertyGraph(vtx, edges))
-    val grpNames = broadcast(Tables.nation(s, d)
-      .select(col("n_nationkey").cast("long").as("nk"), col("n_name").as("grp")))
-    cc.select((col("id") / enc).cast("long").as("nk"),
-        pmod(col("id"), enc).as("node"), pmod(col("component"), enc).as("component"))
-      .join(grpNames, "nk")
-      .select(col("grp"), col("node"), col("component"))
+      .select(col("n_name").as("group"), col("l_suppkey").cast("long").as("src"),
+        (col("o_custkey") + 1000000L).cast("long").as("dst"))
+    GraphAnalytics.perGroupComponents(e)
+      .select(col("group").as("grp"), col("node"), col("component"))
   }
 
   /** G8 — per-vertex closeness, hash-oracled. The kernel's value is

@@ -1,17 +1,13 @@
 package graft.graph
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Laws of [[GraphAnalytics.kcore]]'s live-edge-set peel:
-  *
-  *  - it equals the node-membership peel (replayed on the driver) on
-  *    seeded random multi-group graphs with self-loops, duplicate and
-  *    reversed edges and isolated pairs, for k ∈ {1,2,3} and
-  *    iters ∈ {1..5};
-  *  - the peel rounds run in one action: the job count does not grow
-  *    with `iters`.
-  */
+/** Law of [[GraphAnalytics.kcore]]'s live-edge-set peel: it equals
+  * the node-membership peel (replayed on the driver) on seeded random
+  * multi-group graphs with self-loops, duplicate and reversed edges
+  * and isolated pairs, for k ∈ {1,2,3} and iters ∈ {1..5}. That its
+  * peel rounds run in one action is [[SuperstepSpec]]'s job-count
+  * table. */
 class KcoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -69,40 +65,5 @@ class KcoreSpec extends SparkSpec {
     // k = 3 and is dropped by later rounds
     val g = randomGraph(1)
     assert(peel(g, 3, 5).nonEmpty && peel(g, 3, 1).size > peel(g, 3, 5).size)
-  }
-
-  test("kcore runs its peel rounds in one action: jobs do not grow with iters") {
-    val edges = randomGraph(3).toDF("group", "src", "dst").cache()
-    edges.count()
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    def jobs(iters: Int): Int = {
-      val tag = s"kcore-iters-$iters"
-      sc.setJobGroup(tag, tag)
-      try GraphAnalytics.kcore(edges, k = 2, iters).collect()
-      finally sc.clearJobGroup()
-      // the listener bus delivers in order: once a marker job's start
-      // is seen, every kcore job's start has been counted
-      sc.setJobGroup(s"$tag-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$tag-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains(s"$tag-end"), "marker job start never delivered")
-      groups.toArray.count(_ == tag)
-    }
-    sc.addSparkListener(l)
-    try {
-      val (two, six) = (jobs(2), jobs(6))
-      assert(two > 0 && two == six, s"kcore jobs: iters=2 → $two, iters=6 → $six")
-    } finally {
-      sc.removeSparkListener(l)
-      edges.unpersist()
-    }
   }
 }
