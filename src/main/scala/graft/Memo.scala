@@ -22,7 +22,7 @@ object Memo {
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   private val hooked =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
+    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
   // Per-key build locks: TrieMap.getOrElseUpdate is atomic about which
   // VALUE wins, but racing callers each evaluate the by-name argument —
   // for `build.persist()` that means two persisted plans, one of them
@@ -38,13 +38,7 @@ object Memo {
     * first action materializes it). */
   def df(spark: SparkSession, key: String, dir: String)(build: => DataFrame): DataFrame = {
     val uuid = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)
-    hooked.getOrElseUpdate(uuid, {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-          evictSession(uuid)
-      })
-      true
-    })
+    onApplicationEnd(spark, "Memo")(evictSession)
     val k = (uuid, s"$dir#$key")
     cache.get(k).getOrElse {
       val lock = locks.getOrElseUpdate(k, new Object)
@@ -56,6 +50,24 @@ object Memo {
         }
       }
     }
+  }
+
+  /** Register `evict(sessionUUID)` to run when the session's
+    * application ends — once per (session, owner), so every
+    * session-scoped driver cache drops its entries the way this memo
+    * does. */
+  private[graft] def onApplicationEnd(spark: SparkSession, owner: String)(
+      evict: String => Unit): Unit = {
+    val uuid = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)
+    hooked.getOrElseUpdate((uuid, owner), {
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          evict(uuid)
+          hooked.remove((uuid, owner))
+        }
+      })
+      true
+    })
   }
 
   /** Drop every cached entry belonging to one session (unpersist is

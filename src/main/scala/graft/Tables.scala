@@ -5,11 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Single choke-point loaders for the driver-generated test tables
   * (TESTDATA.md). All queries read through here so scan behavior
   * (column pruning, filter pushdown, future bucketing) is reviewable
-  * in one place. Parquet carries the schema; no inference cost.
+  * in one place. Parquet carries the schema, and no load pays to infer
+  * it: the schema is read from the file's footer on the driver
+  * ([[graft.operators.MetaIO.footerSchema]], the same conversion as
+  * Spark's inference job) and handed to the reader, so a load launches
+  * no Spark job.
   */
 object Tables {
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.operators.MetaIO.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

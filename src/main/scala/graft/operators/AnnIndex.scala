@@ -326,18 +326,20 @@ object AnnIndex {
     * residual flag), the ONLY thing probe/append read besides the
     * probed code lists.
     *
-    * Round 14: memoized per (session, dir, FILE FINGERPRINT). The
-    * model is FROZEN by the index contract (appends never retrain),
-    * yet every probe/append paid two collect jobs re-reading it —
-    * 2 jobs × every micro-batch of the q272/q281 streams (guide §5).
-    * The fingerprint is the driver-side file listing (name, length,
-    * mtime) of both model tables, so a [[rebuild]] — the one operation
-    * that REPLACES the model — changes the key and the next reader
-    * re-reads from parquet; nothing is ever served from a stale
-    * model, and nothing persists across sessions. */
-  private val modelMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String),
-      (Array[(Int, Array[Double])], PqModel, Boolean)]
+    * Round 14: memoized per (session, dir), tagged with the model
+    * tables' FILE FINGERPRINT. The model is FROZEN by the index
+    * contract (appends never retrain), yet every probe/append paid two
+    * collect jobs re-reading it — 2 jobs × every micro-batch of the
+    * q272/q281 streams (guide §5). The fingerprint is the driver-side
+    * file listing (name, length, mtime) of both model tables, so a
+    * [[rebuild]] — the one operation that REPLACES the model — changes
+    * it and the next reader re-reads from parquet, REPLACING the
+    * entry: one entry per (session, dir), however often the index is
+    * rebuilt. Nothing is ever served from a stale model, and a
+    * session's entries are dropped when its application ends. */
+  private[operators] val modelMemo = scala.collection.concurrent.TrieMap
+    .empty[(String, String),
+      (String, (Array[(Int, Array[Double])], PqModel, Boolean))]
 
   private def modelFingerprint(spark: SparkSession, dir: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -351,12 +353,19 @@ object AnnIndex {
 
   private[graft] def readModel(spark: SparkSession, dir: String)
       : (Array[(Int, Array[Double])], PqModel, Boolean) = {
-    val key = (org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark),
-      dir, modelFingerprint(spark, dir))
-    modelMemo.getOrElseUpdate(key, readModelUncached(spark, dir))
+    val key = (org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark), dir)
+    val fp = modelFingerprint(spark, dir)
+    graft.Memo.onApplicationEnd(spark, "AnnIndex.modelMemo") { uuid =>
+      modelMemo.keys.filter(_._1 == uuid).foreach(modelMemo.remove)
+    }
+    modelMemo.get(key).collect { case (`fp`, model) => model }.getOrElse {
+      val model = readModelUncached(spark, dir)
+      modelMemo.put(key, (fp, model))
+      model
+    }
   }
 
-  private def readModelUncached(spark: SparkSession, dir: String)
+  private[operators] def readModelUncached(spark: SparkSession, dir: String)
       : (Array[(Int, Array[Double])], PqModel, Boolean) = {
     val cents = spark.read.parquet(centroidsPath(dir))
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types._
   *    per-file min/max ZONE STATS — one metadata read serves schema,
   *    bucket map, and file skipping (no sidecar round trips).
   *  - **copy-on-write [[merge]]**: the changed keys' buckets are
-  *    computed first (a distinct over the batch-sized change set);
+  *    computed first (one aggregate over the batch-sized change set,
+  *    which also checks the batch contract — one action);
   *    ONLY those buckets' live content is read (path-selected from
   *    the manifest — the planning-time analog of partition pruning),
   *    survivors are anti-joined against the changed keys (AQE
@@ -41,6 +42,11 @@ import org.apache.spark.sql.types._
   *    base generation. Gen numbers within a bucket's (base, chain)
   *    are strictly ascending by construction, so "latest" is just
   *    the max generation — no per-file sequence metadata.
+  *  - **reads** name bucket directories straight from the manifest
+  *    and list them on the driver, for that one read only ([[scan]]):
+  *    no Spark listing job however many directories a read names, and
+  *    no listing outlives the read ([[vacuum]] deletes directories,
+  *    and a reclaimed generation number can be claimed again).
   *  - **multi-writer**: the manifest rename IS a compare-and-swap
   *    (the target version either commits or already exists). Writers
   *    claim generations via create-exclusive markers so concurrent
@@ -509,7 +515,10 @@ object MergeTable {
     * strictly ascending within a bucket by construction), so it
     * partial-aggregates map-side and never builds a data-sized
     * window. The generation rides in the file PATH (`gen=G/…`), so
-    * one parquet scan serves every generation — no per-path unions. */
+    * one parquet scan serves every generation — no per-path unions.
+    * Both scans take their file list from a READ-SCOPED driver
+    * listing of the manifest's bucket directories ([[scan]]), never
+    * from a Spark listing job. */
   private def contentOf(spark: SparkSession, dir: String,
       states: Map[Int, BucketState], schema: StructType,
       keyCol: String): DataFrame = {
@@ -517,8 +526,7 @@ object MergeTable {
     val plainPaths = plain.toSeq.sortBy(_._1)
       .map { case (b, st) => bucketDir(dir, st.base.get, b) }
     val parts = Seq(
-      if (plainPaths.isEmpty) None
-      else Some(spark.read.schema(schema).parquet(plainPaths: _*)),
+      if (plainPaths.isEmpty) None else Some(scan(spark, plainPaths, schema)),
       foldRead(spark, dir, chained, schema, keyCol, basePaths = None)
     ).flatten
     if (parts.isEmpty)
@@ -550,7 +558,7 @@ object MergeTable {
     // table ROOTED under a directory that happens to contain
     // "gen=<digits>" (even ".../gen=3/bucket=old/mytable") still
     // extracts the file's own generation, not the root's constant
-    val raw = spark.read.schema(withOp).parquet(paths: _*)
+    val raw = scan(spark, paths, withOp)
       .withColumn("_graft_gen",
         element_at(regexp_extract_all(input_file_name(),
           lit("/gen=(\\d+)/bucket="), lit(1)), -1).cast("long"))
@@ -562,6 +570,53 @@ object MergeTable {
       .where(coalesce(col(s"_graft_w.$OP"), lit("u")) === "u")
       .select(fields.map(n => col(s"_graft_w.$n").as(n)): _*)
     Some(folded)
+  }
+
+  /** `spark.read.schema(schema).parquet(paths: _*)` over bucket
+    * directories or files, with the file list made HERE, on the driver:
+    * one `listLocatedStatus` per path. Spark itself lists more than
+    * `parallelPartitionDiscovery.threshold` (32) paths with a Spark
+    * job, although the manifest already names every directory. The listing lives in a FileStatusCache private to this
+    * one relation — never the session-shared cache: [[vacuum]] deletes
+    * directories and a reclaimed generation number can be claimed
+    * again, so no listing may outlive the read that made it. The
+    * relation is otherwise the reader's own: an InMemoryFileIndex over
+    * the same root paths, the same nullable schema, no partition
+    * columns, and the file paths `input_file_name()` reports (the fold
+    * reads the generation from them). */
+  private def scan(spark: SparkSession, paths: Seq[String],
+      schema: StructType): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionSpec}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }
+    val listed: Map[Path, Array[FileStatus]] = roots.map { r =>
+      val it = r.getFileSystem(conf).listLocatedStatus(r)
+      val leaves = Array.newBuilder[FileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && !MetaIO.hidden(st.getPath.getName)) leaves += st
+      }
+      r -> leaves.result()
+    }.toMap
+    val readScoped = new FileStatusCache {
+      private var leaves = listed
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        leaves.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = leaves = Map.empty
+    }
+    val nullable = MetaIO.nullable(schema)
+    val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(nullable),
+      readScoped, Some(PartitionSpec(new StructType(), Nil)))
+    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark, LogicalRelation(
+      HadoopFsRelation(index, new StructType(), nullable, None,
+        new ParquetFileFormat, Map.empty)(spark), isStreaming = false))
   }
 
   private def asNullable(st: StructType): StructType =
@@ -706,34 +761,36 @@ object MergeTable {
     val (keyCol, nBuckets) = (m0.keyCol, m0.nBuckets)
     val delK = deleteKeys.select(col(deleteKeys.columns.head).as(keyCol))
     val upK = upserts.select(col(keyCol))
-    // both batch-contract probes in ONE action (they were two jobs
-    // per merge; each collects ≤ a handful of offending keys): the
-    // duplicate-key aggregate and the upsert∩delete overlap union into
-    // a tagged violation stream, limit-collected together
-    // per-branch limits (round-13 advisor): a single limit over the
-    // union could fill all its slots with one violation kind and hide
-    // the other from the error sample (the batch still always throws)
-    val bad = upserts.groupBy(col(keyCol)).count().where(col("count") > 1)
-      .select(col(keyCol).cast("string").as("k"), lit("dup").as("why"))
-      .limit(5)
-      .unionByName(upK.join(delK, keyCol)
-        .select(col(keyCol).cast("string").as("k"), lit("both").as("why"))
-        .limit(5))
-      .collect()
-    require(!bad.exists(_.getString(1) == "dup"),
-      s"merge: duplicate keys in batch — ${bad.filter(_.getString(1) == "dup")
-        .map(_.getString(0)).mkString(", ")}" +
+    // the batch contract and the affected bucket set in ONE action:
+    // per key, count its upserts and flag a delete; per bucket, keep up
+    // to five sample keys of each violation kind (one kind can never
+    // crowd the other out of the message). The tagged key set is
+    // bucket-aligned once, so both aggregates run inside that one
+    // shuffle, and the collect is bounded by nBuckets. A null key is
+    // never "both" (it joins nothing); duplicate delete keys are fine.
+    def samples(bad: Column): Column = slice(sort_array(collect_list(
+      when(bad, struct(col(keyCol).cast("string"))))), 1, 5)
+    val perBucket = upK.withColumn("u", lit(1)).withColumn("d", lit(false))
+      .union(delK.withColumn("u", lit(0)).withColumn("d", lit(true)))
+      .withColumn("bucket", bucketOf(col(keyCol), nBuckets))
+      .repartition(col("bucket"))
+      .groupBy(col("bucket"), col(keyCol))
+      .agg(sum("u").as("ups"), max("d").as("deleted"))
+      .groupBy("bucket")
+      .agg(samples(col("ups") > 1),
+        samples(col("ups") > 0 && col("deleted") && col(keyCol).isNotNull))
+      .collect().sortBy(_.getInt(0))
+    def violations(i: Int): Seq[String] = perBucket.iterator
+      .flatMap(_.getSeq[Row](i)).map(_.getString(0)).take(5).toSeq
+    val dup = violations(1)
+    require(dup.isEmpty,
+      s"merge: duplicate keys in batch — ${dup.mkString(", ")}" +
         " (a merge batch must resolve its own conflicts; an arbitrary" +
         " last-writer would be nondeterministic under shuffles)")
-    require(!bad.exists(_.getString(1) == "both"),
-      s"merge: keys both upserted and deleted — ${bad
-        .filter(_.getString(1) == "both").map(_.getString(0)).mkString(", ")}")
-    // changed keys with their buckets; affected bucket ids are a
-    // bounded collect (≤ nBuckets ints, never data-sized)
-    val changed = upK.union(delK)
-      .withColumn("bucket", bucketOf(col(keyCol), nBuckets))
-    val affected = changed.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+    val both = violations(2)
+    require(both.isEmpty,
+      s"merge: keys both upserted and deleted — ${both.mkString(", ")}")
+    val affected = perBucket.map(_.getInt(0)).toSet
     if (affected.isEmpty) return
     val snap = manifestAt(spark, dir, baseV)
     val cur = snap.schema
@@ -788,7 +845,7 @@ object MergeTable {
       // + any delta chains), drop changed keys, union the upserts in
       val states = snap.buckets.view.filterKeys(affected.contains).toMap
       val survivors = contentOf(spark, dir, states, cur, keyCol)
-        .join(changed.select(keyCol), Seq(keyCol), "left_anti")
+        .join(upK.union(delK), Seq(keyCol), "left_anti")
       writeGen(spark, dir,
         survivors.unionByName(upserts, allowMissingColumns = true)
           .select(nextSchema.fieldNames.map(col).toSeq: _*)
@@ -934,8 +991,7 @@ object MergeTable {
       kept.getOrElse((b, st.base.get), Nil)
     }
     val parts = Seq(
-      if (plainKept.isEmpty) None
-      else Some(spark.read.schema(snap.schema).parquet(plainKept: _*)),
+      if (plainKept.isEmpty) None else Some(scan(spark, plainKept, snap.schema)),
       foldRead(spark, dir, chained, snap.schema, m0.keyCol,
         basePaths = Some(chained.toSeq.sortBy(_._1).flatMap { case (b, st) =>
           st.base.toSeq.flatMap(g => kept.getOrElse((b, g), Nil))

@@ -10,6 +10,12 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Driver-side parquet I/O for METADATA-SIZED tables (manifests, meta
   * rows, batch markers): a handful of rows written/read through
@@ -89,6 +95,79 @@ private[graft] object MetaIO {
 
   def read(conf: Configuration, path: Path): Seq[Map[String, Any]] =
     readWithSchema(conf, path)._2
+
+  /** Names a Spark file listing skips: `_`/`.`-prefixed files (commit
+    * markers, checksums, sidecars) and in-flight copies, but not the
+    * parquet summary files. */
+  def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** The schema `spark.read.parquet(paths: _*)` reports, read from one
+    * footer on the driver instead of Spark's schema-inference job. The
+    * footer is the one Spark's non-merging inference reads: a
+    * `_common_metadata` summary, else a `_metadata` summary, else the
+    * first data file in path order; it is converted by
+    * `ParquetFileFormat.readSchemaFromFooter` with a converter built from
+    * the session conf, as the inference job does, and widened to
+    * [[nullable]], as every file relation is. Paths whose file set is not a
+    * plain listing (globs, partition subdirectories, a streaming sink's
+    * `_spark_metadata` log) or that do not resolve to any file go to
+    * Spark's own inference, so the answer, or the error, is Spark's. */
+  def footerSchema(spark: SparkSession, paths: String*): StructType = {
+    def inferred = spark.read.parquet(paths: _*).schema
+    val conf = spark.sparkContext.hadoopConfiguration
+    val leaves = paths.flatMap { p =>
+      if (p.exists("{}[]*?\\".contains(_))) return inferred
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      if (!fs.exists(path)) return inferred
+      val st = fs.getFileStatus(path)
+      if (!st.isDirectory) Seq(st)
+      else {
+        val kids = fs.listStatus(path)
+        if (kids.exists(_.getPath.getName == "_spark_metadata")) return inferred
+        val shown = kids.filterNot(k => hidden(k.getPath.getName))
+        if (shown.exists(_.isDirectory)) return inferred
+        shown.toSeq
+      }
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val chosen = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(l => !Set("_common_metadata", "_metadata")
+        .contains(l.getPath.getName)))
+      .getOrElse(return inferred)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(chosen, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val sq = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sq.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sq.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sq.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sq.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sq.parquetReaderRespectUnknownTypeAnnotation)
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(chosen.getPath, footer), converter))
+  }
+
+  /** `spark.read.parquet(paths: _*)` under its [[footerSchema]]: the
+    * same relation, without the schema-inference job. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, paths: _*)).parquet(paths: _*)
+
+  /** `schema` with every field, array element and map value nullable —
+    * what Spark does to every file relation's data schema. */
+  def nullable(schema: StructType): StructType = {
+    def widen(t: DataType): DataType = t match {
+      case s: StructType => nullable(s)
+      case a: ArrayType => ArrayType(widen(a.elementType), containsNull = true)
+      case m: MapType => MapType(widen(m.keyType), widen(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    StructType(schema.fields.map(f => f.copy(dataType = widen(f.dataType), nullable = true)))
+  }
 
   /** Read every row of the parquet file — or every `*.parquet` /
     * `part-*` file of a directory (old Spark-written layouts) — as

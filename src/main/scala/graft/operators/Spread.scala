@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-conditional redistribution of COMPUTE-AMPLIFIED inputs
@@ -26,21 +27,35 @@ import org.apache.spark.sql.internal.SQLConf
   *    scan cannot reach full parallelism on its own → repartition;
   *  - estimated size above that bound → the input is already wide
   *    (file scans split at maxPartitionBytes) → NO-OP;
-  *  - statistics unknown (defaultSizeInBytes sentinel, e.g. an
-  *    RDD-backed micro-batch) → repartition, preserving the round-13
-  *    behavior: under-partitioned amplification serializes O(L^k)
-  *    work (catastrophic), an extra exchange of un-amplified rows is
-  *    linear (bounded).
+  *  - statistics unknown (a leaf with no size statistics of its own,
+  *    e.g. an RDD-backed micro-batch) → repartition, preserving the
+  *    round-13 behavior: under-partitioned amplification serializes
+  *    O(L^k) work (catastrophic), an extra exchange of un-amplified
+  *    rows is linear (bounded).
+  *
+  * "Unknown" is read from the plan's LEAVES, not from the magnitude of
+  * the total: `Superstep.checkpoint` (graph) clamps a large
+  * measured estimate to exactly `defaultSizeInBytes`, the value Spark
+  * also reports for a leaf it cannot measure, so the total alone cannot
+  * tell a huge measured plan from an unmeasured one.
   */
 private[graft] object Spread {
 
   /** True when `plan` would scan with fewer partitions than the
     * session's shuffle parallelism (or its size is unknown). */
-  def underPartitioned(plan: LogicalPlan, conf: SQLConf): Boolean = {
-    val est = plan.stats.sizeInBytes
-    val unknown = est >= BigInt(conf.defaultSizeInBytes)
-    unknown ||
-      est < BigInt(conf.numShufflePartitions) * conf.filesMaxPartitionBytes
+  def underPartitioned(plan: LogicalPlan, conf: SQLConf): Boolean =
+    plan.collectLeaves().exists(unmeasured(_, conf)) ||
+      plan.stats.sizeInBytes <
+        BigInt(conf.numShufflePartitions) * conf.filesMaxPartitionBytes
+
+  /** A leaf without size statistics: an RDD-backed leaf that is not a
+    * checkpoint (a checkpoint carries the statistics of the plan it
+    * materialized, clamped or not), or any other leaf that falls back
+    * to the `defaultSizeInBytes` sentinel. */
+  private def unmeasured(leaf: LogicalPlan, conf: SQLConf): Boolean = leaf match {
+    case r: LogicalRDD => !r.rdd.isCheckpointed
+    case _: ExternalRDD[_] => true
+    case l => l.stats.sizeInBytes >= BigInt(conf.defaultSizeInBytes)
   }
 
   /** Round-robin repartition `df` to the session's shuffle parallelism

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.MetaIO
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -214,21 +215,6 @@ object ZoneMap {
     harvestFiles(spark, files, cols).coalesce(1)
       .write.mode("overwrite").parquet(sidecarPath)
 
-  /** The relative file names of `zm` whose zone intersects
-    * `lo <= c <= hi` — the shared long-range pruning predicate
-    * (unusable or non-long zones keep conservatively; all-null
-    * files prove empty). */
-  private[graft] def keptOf(zm: DataFrame, c: String,
-      lo: Long, hi: Long): Seq[String] = {
-    require(zm.columns.contains(s"${c}_ok"),
-      s"no zone map for column $c — harvested: " +
-        zm.columns.filter(_.endsWith("_ok")).map(_.dropRight(3)).mkString(", "))
-    zm.where(!col(s"${c}_ok") || col(s"${c}_ty") =!= "long" ||
-        (col(s"${c}_min").isNotNull &&
-          col(s"${c}_min") <= hi && col(s"${c}_max") >= lo))
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-  }
-
   /** Harvest and persist the sidecar at `path/_zonemap` (the `_`
     * prefix hides it from every scan of `path`). Call once after the
     * layout write; re-call after rewriting files. */
@@ -236,15 +222,23 @@ object ZoneMap {
     harvest(spark, path, cols).coalesce(1)
       .write.mode("overwrite").parquet(sidecar(path))
 
-  /** The file paths a `lo <= c <= hi` scan must open: files whose
-    * zone proves emptiness are dropped; files with unusable stats
-    * are kept conservatively. Bounded by the file count (the same
-    * driver-side listing any parquet scan performs). */
+  /** The file paths a `lo <= c <= hi` scan must open, and the number of
+    * files the zone map covers: files whose zone proves emptiness are
+    * dropped; files with unusable stats or non-long zones are kept
+    * conservatively; all-null files prove empty. One collect of the
+    * sidecar (one row per file, read under its footer schema, so no
+    * inference job) gives both. */
   private[graft] def keptFiles(spark: SparkSession, path: String,
       c: String, lo: Long, hi: Long): (Seq[String], Int) = {
-    val zm = spark.read.parquet(sidecar(path))
-    val kept = keptOf(zm, c, lo, hi).map(f => s"$path/$f")
-    (kept, zm.count().toInt)
+    val zm = MetaIO.parquet(spark, sidecar(path))
+    require(zm.columns.contains(s"${c}_ok"),
+      s"no zone map for column $c — harvested: " +
+        zm.columns.filter(_.endsWith("_ok")).map(_.dropRight(3)).mkString(", "))
+    val keep = !col(s"${c}_ok") || col(s"${c}_ty") =!= "long" ||
+      (col(s"${c}_min").isNotNull && col(s"${c}_min") <= hi && col(s"${c}_max") >= lo)
+    val rows = zm.select(col("file"), keep).collect()
+    (rows.filter(_.getBoolean(1)).map(r => s"$path/${r.getString(0)}").toSeq.sorted,
+      rows.length)
   }
 
   /** Range scan through the zone map: open ONLY files whose zone
@@ -254,8 +248,8 @@ object ZoneMap {
   def scanRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long): DataFrame = {
     val (kept, _) = keptFiles(spark, path, c, lo, hi)
-    if (kept.isEmpty) spark.read.parquet(path).where(lit(false))
-    else spark.read.parquet(kept: _*).where(col(c).between(lo, hi))
+    if (kept.isEmpty) MetaIO.parquet(spark, path).where(lit(false))
+    else MetaIO.parquet(spark, kept: _*).where(col(c).between(lo, hi))
   }
 
   /** Full-scan reference form — law twin (ZoneMapSpec). */
@@ -286,7 +280,7 @@ object ZoneMap {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val idx = new ZoneMapFileIndex(spark, path)
-    val dataSchema = spark.read.parquet(path).schema
+    val dataSchema = MetaIO.footerSchema(spark, path)
     val rel = HadoopFsRelation(idx, new StructType(), dataSchema, None,
       new ParquetFileFormat, Map("path" -> path))(spark)
     LogicalRelation(rel, isStreaming = false)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.MetaIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -68,7 +69,7 @@ object StreamOps {
   def runWindowedStream(spark: SparkSession, dir: String,
       windowLen: String = "1 hour"): DataFrame = withNanosAsLong(spark) {
     // nanos-as-long + micros conversion, matching Tables.events
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     // file-stream source wants a directory; glob-filter to the events file
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -111,7 +112,7 @@ object StreamOps {
     * gate's oracle. */
   def attributionJoinStream(spark: SparkSession, dir: String,
       fromType: String, toType: String, horizonMinutes: Int): DataFrame = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     def source = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Tables.normalizeEventTs)
@@ -148,7 +149,7 @@ object StreamOps {
     * (0 on an idempotent re-run over unchanged input). */
   def runIngestToParquet(spark: SparkSession, dir: String, outDir: String,
       checkpointDir: String): Long = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Tables.normalizeEventTs)
@@ -175,7 +176,7 @@ object StreamOps {
     * replay exactly in an external engine via the md5-slice twin. */
   def runSketchStream(spark: SparkSession, dir: String, d: Int, w: Int,
       seed: Long): DataFrame = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val cells = graft.operators.Sketches.countMinCells(
@@ -198,7 +199,7 @@ object StreamOps {
     * cell-for-cell). */
   def runHistogramStream(spark: SparkSession, dir: String, lo: Long,
       hi: Long, nBuckets: Int): DataFrame = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val cells = graft.operators.Sketches.histogramCells(
@@ -227,7 +228,7 @@ object StreamOps {
   def runQdigestStream(spark: SparkSession, dir: String, loVal: Long,
       levels: Int, k: Int, percents: Seq[Int]): DataFrame = withNanosAsLong(spark) {
     val U = 1L << levels
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val cells = stream
@@ -287,7 +288,7 @@ object StreamOps {
       dir: String, keyCol: String, loVal: Long,
       levels: Int): DataFrame = withNanosAsLong(spark) {
     val U = 1L << levels
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val cells = stream
@@ -325,7 +326,7 @@ object StreamOps {
     * shuffles; cost per batch = batch rows × broadcast probe. Driven
     * to completion over bounded input via a memory sink. */
   def enrichStream(spark: SparkSession, dir: String): DataFrame = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
@@ -381,7 +382,7 @@ object StreamOps {
       indexDir: String, checkpointDir: String,
       minJaccard: Double): DataFrame = withNanosAsLong(spark) {
     import org.apache.spark.sql.DataFrame
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = MetaIO.footerSchema(spark, srcDir)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val qdir = s"$indexDir/quarantine"
@@ -460,7 +461,7 @@ object StreamOps {
       vecCol: String, nCentroids: Int, m: Int, k: Int): DataFrame =
     withNanosAsLong(spark) {
       import org.apache.spark.sql.DataFrame
-      val schema = spark.read.parquet(srcDir).schema
+      val schema = MetaIO.footerSchema(spark, srcDir)
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       val mdir = s"$indexDir/ingested"
@@ -519,7 +520,7 @@ object StreamOps {
       outDir: String, idCol: String, vecCol: String, nProbe: Int, k: Int,
       shortlist: Int): DataFrame = withNanosAsLong(spark) {
     import org.apache.spark.sql.DataFrame
-    val schema = spark.read.parquet(querySrcDir).schema
+    val schema = MetaIO.footerSchema(spark, querySrcDir)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(querySrcDir)
     val q = stream.writeStream
@@ -572,7 +573,7 @@ object StreamOps {
       opCol: String = "op", mergeOnRead: Boolean = false): DataFrame =
     withNanosAsLong(spark) {
     import org.apache.spark.sql.DataFrame
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = MetaIO.footerSchema(spark, srcDir)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val q = stream.writeStream
@@ -607,11 +608,11 @@ object StreamOps {
     * filename carries the batch id, so writes stay unique per batch —
     * the undo-log contract ("appends only create uniquely-named new
     * files") is unchanged. */
-  private val markerSchema = graft.operators.MetaIO.schemaOf("marker",
+  private val markerSchema = MetaIO.schemaOf("marker",
     Seq(("batch_id", "long", true)))
 
   private[graft] def readMarkers(sp: SparkSession, mdir: String): Set[Long] =
-    try graft.operators.MetaIO.read(
+    try MetaIO.read(
         sp.sparkContext.hadoopConfiguration,
         new org.apache.hadoop.fs.Path(mdir))
       .map(_("batch_id").asInstanceOf[Long]).toSet
@@ -619,7 +620,7 @@ object StreamOps {
 
   private[graft] def writeMarker(sp: SparkSession, mdir: String,
       batchId: Long): Unit =
-    graft.operators.MetaIO.write(sp.sparkContext.hadoopConfiguration,
+    MetaIO.write(sp.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(s"$mdir/part-batch-$batchId.parquet"),
       markerSchema, Seq(Seq(batchId)))
 
@@ -699,7 +700,7 @@ object StreamOps {
     * order; the retained key set does not. */
   def runDedupStream(spark: SparkSession, dir: String,
       keyCols: Seq[String], horizon: String = "3650 days"): DataFrame = withNanosAsLong(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Tables.normalizeEventTs)
@@ -771,7 +772,7 @@ object StreamOps {
   def runSessionizeStream(spark: SparkSession, dir: String,
       gapMinutes: Int): DataFrame = withNanosAsLong(spark) {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Tables.normalizeEventTs)
@@ -848,7 +849,7 @@ object StreamOps {
     * (oracle: q201's SQL). */
   def runCdcMergeStream(spark: SparkSession, dir: String): DataFrame = withNanosAsLong(spark) {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Tables.normalizeEventTs)

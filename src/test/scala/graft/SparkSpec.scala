@@ -1,12 +1,50 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Shared session for all suites — one local JVM session, 8 threads. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs it launched, in start order,
+    * each as the root SQL execution it ran under (None outside any: a
+    * bare RDD action or a listing job). A local property tags the
+    * caller's jobs (threads Spark starts for them inherit it); a marker
+    * job flushes the listener bus before the jobs are read. */
+  def jobsOf[A](body: => A): (A, Seq[Option[String]]) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID.toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          Option(p.getProperty(key)).foreach(t => seen.add(t ->
+            Option(p.getProperty("spark.sql.execution.root.id"))
+              .orElse(Option(p.getProperty("spark.sql.execution.id")))))
+        }
+    }
+    val prev = sc.getLocalProperty(key)
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == s"$tag-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.asScala.exists(_._1 == s"$tag-end"), "marker job start never delivered")
+      (out, seen.asScala.collect { case (`tag`, e) => e }.toSeq)
+    } finally {
+      sc.setLocalProperty(key, prev)
+      sc.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkSpec {

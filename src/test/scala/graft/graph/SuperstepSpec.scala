@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,9 @@ import org.apache.spark.sql.functions._
   *    (a cost choice, not part of the chain);
   *  - its checkpoint does not let Catalyst's size estimate compound
   *    across rounds: a loop that checkpoints a self-join every round
-  *    reports a bounded estimate however many rounds it runs.
+  *    reports a bounded estimate however many rounds it runs, and
+  *    the clamped estimate still reads as measured, not unknown, to
+  *    `Spread`.
   */
 class SuperstepSpec extends SparkSpec {
   import spark.implicits._
@@ -47,41 +48,17 @@ class SuperstepSpec extends SparkSpec {
       "alphaExactScaled" -> (i => GraphAnalytics.alphaExactScaled(unw, 0.1, i)),
       "pprExactScaled" -> (i => GraphAnalytics.pprExactScaled(unw, 0.85, i)),
       "powerExactScaled" -> (i => GraphAnalytics.powerExactScaled(unw, 0.1, i)))
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    def jobs(name: String, run: Int => DataFrame, iters: Int): Int = {
-      val tag = s"$name-iters-$iters"
-      sc.setJobGroup(tag, tag)
-      try run(iters).collect()
-      finally sc.clearJobGroup()
-      // the listener bus delivers in order: once a marker job's start
-      // is seen, every kernel job's start has been counted
-      sc.setJobGroup(s"$tag-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$tag-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains(s"$tag-end"), "marker job start never delivered")
-      groups.toArray.count(_ == tag)
-    }
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
     val savedThreshold = spark.conf.get(threshold)
     spark.conf.set(threshold, "-1")
-    sc.addSparkListener(l)
     try {
       val counts = kernels.map { case (name, run) =>
-        (name, jobs(name, run, 2), jobs(name, run, 6))
+        (name, jobsOf(run(2).collect())._2.size, jobsOf(run(6).collect())._2.size)
       }
       val grown = counts.filter { case (_, two, six) => two == 0 || two != six }
       assert(grown.isEmpty, grown.map { case (n, two, six) =>
         s"$n: iters=2 → $two jobs, iters=6 → $six" }.mkString("; "))
     } finally {
-      sc.removeSparkListener(l)
       spark.conf.set(threshold, savedThreshold)
       g.unpersist(); dir.unpersist()
     }
@@ -120,5 +97,26 @@ class SuperstepSpec extends SparkSpec {
     val bits = Seq(16, 1024).map(n => estimate(n).bitLength)
     assert(bits.forall(_ <= cap.bitLength),
       s"estimate bit lengths after 5 and 11 rounds: ${bits.mkString(", ")}")
+  }
+
+  test("a clamped checkpoint of a large measured plan is not 'unknown' to Spread") {
+    val conf = spark.sessionState.conf
+    // three empty filters of a million-row range: Catalyst estimates the
+    // cross join at 8 MB³ ≈ 5·10²⁰ bytes, above defaultSizeInBytes, yet
+    // it produces no rows, so the checkpoint is cheap
+    def side(c: String) = spark.range(1000000L).where(col("id") < 0).select(col("id").as(c))
+    val huge = side("a").crossJoin(side("b")).crossJoin(side("c"))
+    assert(huge.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(conf.defaultSizeInBytes))
+    val clamped = Superstep.checkpoint(huge).queryExecution.optimizedPlan
+    assert(clamped.stats.sizeInBytes == BigInt(conf.defaultSizeInBytes))
+    assert(!graft.operators.Spread.underPartitioned(clamped, conf),
+      "a measured estimate clamped to defaultSizeInBytes was read as unknown")
+    // an RDD-backed leaf without statistics still counts as unknown
+    val rddBacked = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
+      huge.select(col("a")).schema)
+    assert(graft.operators.Spread.underPartitioned(
+      rddBacked.queryExecution.optimizedPlan, conf))
   }
 }

@@ -277,4 +277,28 @@ class AnnIndexSpec extends SparkSpec {
         "shifted batch lost rows in the stats")
     } finally emb.unpersist()
   }
+
+  test("the model memo keeps one entry per (session, dir) across rebuilds") {
+    val emb = graft.Tables.embeddings(spark, sf).cache()
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-annmemo")
+        .toString + "/idx"
+      val uuid = org.apache.spark.sql.graftbridge.SessionBridge.sessionUUID(spark)
+      def entries = AnnIndex.modelMemo.keys.count(_ == ((uuid, dir)))
+      AnnIndex.build(emb, "vec_id", "embedding", dir, nCentroids = 8, m = 8, k = 16)
+      AnnIndex.readModel(spark, dir)
+      assert(entries == 1)
+      for (seed <- 1 to 2) {
+        // a different corpus each time, so each rebuild swaps in a model
+        // whose fingerprint the memo has not seen
+        AnnIndex.rebuild(emb.where(col("vec_id") % 3 =!= seed), "vec_id", "embedding",
+          dir, nCentroids = 8, m = 8, k = 16)
+        val (_, model, _) = AnnIndex.readModel(spark, dir)
+        val (_, fresh, _) = AnnIndex.readModelUncached(spark, dir)
+        assert(model.codebooks.flatten.flatten.toSeq == fresh.codebooks.flatten.flatten.toSeq,
+          s"rebuild $seed: the memo served a stale model")
+        assert(entries == 1, s"rebuild $seed: $entries memo entries for one dir")
+      }
+    } finally emb.unpersist()
+  }
 }

@@ -844,4 +844,66 @@ class MergeTableSpec extends SparkSpec {
     MergeTable.compact(spark, dirM)
     assert(content(MergeTable.read(spark, dirM)) == got)
   }
+
+  test("a merge checks its batch contract and finds its buckets in one action") {
+    import spark.implicits._
+    val keys = base.select("k").as[Long].collect().sorted
+    for (mor <- Seq(true, false)) {
+      val perSize = Seq(10, 1000).map { n =>
+        val dir = tmpDir()
+        MergeTable.create(base, dir, "k", nBuckets = 4)
+        val ups = keys.take(n).toSeq.map(k => (k, k % 50, k * 3)).toDF("k", "ck", "cents")
+        val del = keys.slice(n, n + n / 10 + 1).toSeq.toDF("k")
+        val (_, jobs) = jobsOf {
+          if (mor) MergeTable.mergeOnRead(spark, dir, ups, del)
+          else MergeTable.merge(spark, dir, ups, del)
+        }
+        // the first action is the contract step; the other is the write
+        assert(jobs.distinct.size == 2,
+          s"mor=$mor, $n keys: ${jobs.distinct.size} actions (${jobs.mkString(", ")})")
+        jobs.count(_ == jobs.head)
+      }
+      assert(perSize.distinct.size == 1,
+        s"mor=$mor: contract-step jobs for 10 vs 1000 keys: ${perSize.mkString(" vs ")}")
+    }
+  }
+
+  test("a read that names more than 32 bucket directories launches no listing job") {
+    val dir = tmpDir()
+    MergeTable.create(base, dir, "k", nBuckets = 40)
+    assert(fileSig(dir).size > 32, "the read must name more than 32 directories")
+    val (plain, jobs) = jobsOf(MergeTable.read(spark, dir))
+    assert(jobs.isEmpty, s"${jobs.size} job(s) while planning a fold-free read")
+    assert(content(plain) == content(base))
+    // the merge-on-read fold names base and delta directories of every bucket
+    val ups = base.where(col("k") % 3 === 0).withColumn("cents", col("cents") + 7L)
+    val del = base.where(col("k") % 3 === 1).select("k")
+    MergeTable.mergeOnRead(spark, dir, ups, del)
+    val (folded, foldJobs) = jobsOf(MergeTable.read(spark, dir))
+    assert(foldJobs.isEmpty, s"${foldJobs.size} job(s) while planning a folded read")
+    assert(content(folded) == content(MergeTable.mergeBrute(base, "k", ups, del)))
+  }
+
+  test("batch-contract messages: duplicate, both, null keys, at most five samples") {
+    import spark.implicits._
+    val dir = tmpDir()
+    MergeTable.create(base, dir, "k", nBuckets = 4)
+    def ups(ks: Option[Long]*) = ks.map(k => (k, 1L, 1L)).toDF("k", "ck", "cents")
+    def dels(ks: Option[Long]*) = ks.toDF("k")
+    def message(u: org.apache.spark.sql.DataFrame, d: org.apache.spark.sql.DataFrame) =
+      intercept[IllegalArgumentException](MergeTable.mergeOnRead(spark, dir, u, d)).getMessage
+    val dupTail = " (a merge batch must resolve its own conflicts; an arbitrary" +
+      " last-writer would be nondeterministic under shuffles)"
+    assert(message(ups(Some(5L), Some(5L)), dels()) ==
+      "requirement failed: merge: duplicate keys in batch — 5" + dupTail)
+    assert(message(ups(Some(7L)), dels(Some(7L))) ==
+      "requirement failed: merge: keys both upserted and deleted — 7")
+    assert(message(ups(None, None), dels()) ==
+      "requirement failed: merge: duplicate keys in batch — null" + dupTail)
+    val many = message(ups((1L to 7L).flatMap(k => Seq(Some(k), Some(k))): _*), dels())
+    assert(many.stripSuffix(dupTail).split(", ").length == 5, many)
+    // a null key joins nothing: upserted and deleted is no conflict, and
+    // duplicate delete keys are allowed
+    MergeTable.mergeOnRead(spark, dir, ups(None), dels(None, Some(3L), Some(3L)))
+  }
 }

@@ -38,22 +38,12 @@ class SpreadSpec extends SparkSpec {
 
   test("Spread decides from statistics without running any job") {
     import spark.implicits._
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // a plan WITH a shuffle in it: the old rdd.getNumPartitions probe
-      // materialized the upstream stages here (r13 advisor finding)
-      val df = (1 to 50).toDF("x").groupBy("x").agg(count(lit(1)).as("c"))
-      Spread(df)
-      Thread.sleep(500) // let any (unexpected) job-start event land
-      assert(jobs.get == 0L,
-        s"Spread ran ${jobs.get} job(s) while deciding — it must be plan-only")
-    } finally spark.sparkContext.removeSparkListener(l)
+    // a plan WITH a shuffle in it: the old rdd.getNumPartitions probe
+    // materialized the upstream stages here (r13 advisor finding)
+    val df = (1 to 50).toDF("x").groupBy("x").agg(count(lit(1)).as("c"))
+    val jobs = jobsOf(Spread(df))._2
+    assert(jobs.isEmpty,
+      s"Spread ran ${jobs.size} job(s) while deciding — it must be plan-only")
   }
 
   test("fuzzy SQL join keeps the pre-explode Repartition for small inputs " +
