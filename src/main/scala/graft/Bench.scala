@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *    order (a Map's hash order shifts when the key set changes,
   *    silently re-assigning shared-cache costs between rounds) with
   *    the heavy-I/O corpus family moved last so its heat cannot
-  *    inflate the iterative/GraphX family (round-9 verdict item 2);
+  *    inflate the iterative graph family (round-9 verdict item 2);
   *  - the warm-up pays for session init AND materializes the memoized
   *    shared intermediates (tpch graph, group edges, kernel battery,
   *    minhash/LSH tables) so no query is billed another query's cache
@@ -172,7 +172,7 @@ object Bench {
     var warmupSec = (System.nanoTime() - w0) / 1e9
     // battery order: benchSpecs = declared order with the heavy-I/O
     // corpus family LAST (round-9 verdict item 2 — its page-cache/heap
-    // heat inflated the iterative/GraphX family that followed); the
+    // heat inflated the iterative graph family that followed); the
     // family boundary gets an explicit GC+settle checkpoint so the
     // corpus block starts from a reaped session, measurable in the
     // calib_mid trace

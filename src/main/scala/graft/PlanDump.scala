@@ -13,7 +13,7 @@ object PlanDump {
     val outDir = if (args.length > 0) args(0) else "plans/r13"
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

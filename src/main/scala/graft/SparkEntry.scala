@@ -19,7 +19,7 @@ object SparkEntry {
     * heavy-I/O index build (q246 deletion neighborhoods, q250 IVF-PQ
     * build+append, q260 streaming ingest); run second as declared,
     * their page-cache/heap heat inflated the environment-sensitive
-    * iterative/GraphX family that followed by 1.7-2.5× with untouched
+    * iterative graph family that followed by 1.7-2.5× with untouched
     * code (SCALE.md round-9 notes). With corpus last, the iterative
     * family runs in the cool half of the session and nothing follows
     * the heat. Still fully deterministic (same Seq each run); relative
@@ -76,16 +76,6 @@ object SparkEntry {
     queries.get("q35_jaccard_pairs").foreach(_(spark, dir).count())
     // the 2-shingle token table is q43-only but read 3× inside it
     graft.queries.Corpus.warmShared(spark, dir)
-    // GraphX class-loading/closure-cleaning is a one-time JVM cost
-    // (~2-4 s) otherwise billed to whichever GraphX query runs first
-    locally {
-      import org.apache.spark.graphx.{Edge, Graph}
-      val sc = spark.sparkContext
-      val tiny = Graph(sc.parallelize(Seq((1L, 1), (2L, 1))),
-        sc.parallelize(Seq(Edge(1L, 2L, 1.0))))
-      tiny.connectedComponents().vertices.count()
-      tiny.staticPageRank(1).vertices.count()
-    }
     // evidence edge table is shared by q70 (RF lifecycle) and q84
     // (model metrics): build it here so neither is billed for it
     graft.queries.PipelineQueries.warmShared(spark, dir)

@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics (SURVEY §2.10).
@@ -9,97 +8,43 @@ import org.apache.spark.sql.functions._
   * Two execution tiers, mirroring the reference's split between
   * whole-network igraph calls and per-sample subgraph loops:
   *
-  *  - **Global graph** → DataFrame supersteps over the [[Superstep]]
+  *  - **Whole graph** → DataFrame supersteps over the [[Superstep]]
   *    operator: PageRank + components (`pageRankAndComponentsDF`) and
   *    the exact-scaled kernels (PageRank, eigen, SSSP, k-core, LPA,
   *    alpha, PPR, power, HITS), one join + one group-by per superstep.
-  *    GraphX still serves `connectedComponents` (dedup clusters and
-  *    the robustness curve's layered union) and the
-  *    `pageRankAndComponents` law twin. Right tier when the graph
-  *    itself is huge.
-  *  - **Per-group subgraphs** → `perGroupMetrics`/`perGroupEigen`/
-  *    `perGroupComponents`: a keyed group-by feeding task-local
-  *    kernels ([[LocalGraph]], union-find). One shuffle on the group
-  *    key, then thousands of small graphs execute in parallel across
-  *    executors — the 100 TB-scale path for "compute centrality per
-  *    sample" (reference bin/interpersonaldiversity.R:82-115) where
-  *    groups are small but group count is massive.
+  *  - **Task-local** → a graph of at most [[LocalMaxEdges]] edges runs
+  *    whole inside one task: the per-group kernels
+  *    (`perGroupMetrics`/`perGroupEigen`/`perGroupComponents`…, one
+  *    shuffle on the group key, then thousands of small graphs in
+  *    parallel — the 100 TB-scale path for "compute centrality per
+  *    sample", reference bin/interpersonaldiversity.R:82-115) and the
+  *    whole-graph kernels [[components]] (union-find) and
+  *    [[edgeSupport]] (sorted out-list intersection), which serve
+  *    dedup clusters, the robustness curve, triangles and k-truss.
+  *    Above the bound, each of those two has one distributed path on
+  *    the superstep tier.
   *
   * β-diversity ops (G17/G18) are pure relational plans — no graph
   * materialization at all.
   */
 object GraphAnalytics {
 
-  /** PropertyGraph → GraphX graph with a double edge weight. */
-  def toGraphX(g: PropertyGraph, weightCol: String,
-      partitions: Int = 0): GXGraph[String, Double] = {
-    val vrdd0 = g.nodes.select("id", "name").rdd
-      .map(r => (r.getLong(0), r.getString(1)))
-    val erdd0 = g.edges.select(col("src"), col("dst"), col(weightCol).cast("double")).rdd
-      .map(r => GXEdge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val (vrdd, erdd) =
-      if (partitions > 0) (vrdd0.coalesce(partitions), erdd0.coalesce(partitions))
-      else (vrdd0, erdd0)
-    GXGraph(vrdd, erdd)
-  }
-
-  /** GraphX partition sizing: one task per ~100k edges, clamped to
-    * [4, defaultParallelism]. Iterative GraphX jobs run several stages
-    * PER superstep, so per-task overhead multiplies by ~3× iteration
-    * count; inheriting the SQL-side partition count over-fragments
-    * small graphs (measured on the sf0.1 graph: PageRank+CC core
-    * 9.0 s at 32 partitions → 4.8 s at 8). The edge-count scaling
-    * restores full spread on real volumes — the same size-to-data
-    * rule as the streaming state stores. */
-  private[graft] def gxPartitions(spark: SparkSession, nEdges: Long): Int =
-    math.max(4, math.min(spark.sparkContext.defaultParallelism,
-      (nEdges / 100000L).toInt))
-
-  /** PageRank + weak components off ONE cached GraphX graph — the two
-    * jobs share the materialized vertex/edge RDDs instead of
-    * rebuilding the graph per metric. Returns (id, pagerank, component). */
-  def pageRankAndComponents(spark: SparkSession, g: PropertyGraph,
-      weightCol: String, iters: Int = 10): DataFrame = {
-    val sym = PropertyGraph(g.nodes,
-      g.edges.unionByName(g.edges
-        .withColumn("tmp", col("src")).withColumn("src", col("dst"))
-        .withColumn("dst", col("tmp")).drop("tmp")))
-    val gx = toGraphX(sym, weightCol,
-      gxPartitions(spark, sym.edges.count())).cache()
-    val pr = gx.staticPageRank(iters).vertices
-    val cc = gx.connectedComponents().vertices
-    // materialize the (vertex-sized) result while the graph is cached,
-    // then free the graph: without this, every call leaks a cached
-    // edge+vertex RDD pair and repeated use degrades under heap
-    // pressure (measured: 9.7 s → 36 s on the third call)
-    val joined = pr.join(cc).map { case (id, (rank, comp)) => Row(id, rank, comp) }
-      .cache()
-    joined.count()
-    gx.unpersist(blocking = false)
-    spark.createDataFrame(joined,
-      new org.apache.spark.sql.types.StructType()
-        .add("id", "long").add("pagerank", "double").add("component", "long"))
-  }
-
-  /** PageRank + weak components as PURE DataFrame iterations — the
-    * production form of [[pageRankAndComponents]] (GraphX stays the
-    * law twin; PageRankParitySpec pins component identity and rank
-    * agreement). Reproduces GraphX `staticPageRank` semantics on the
-    * symmetrized multigraph exactly: r₀ = 1, r' = 0.15 + 0.85·Σ
-    * incoming r/outdeg (edge MULTIPLICITY counts in the out-degree,
-    * dangling mass dropped — none exists on a symmetric graph), 10
-    * fixed supersteps. Components are min-vertex-id labels (GraphX's
-    * own convention) via min-label propagation with POINTER JUMPING
-    * (`l ← l∘l` each round), so rounds ∝ log(diameter), not
-    * diameter; convergence is detected, not assumed. Why this tier:
-    * each superstep is one co-partitioned join + one partial
-    * aggregation under Catalyst/AQE and whole-stage codegen, where
-    * GraphX materializes fresh vertex/edge RDD pairs per superstep —
-    * measured 9.2 s → DataFrame ~3 s on the same sf0.1 graph, and
-    * the gap widens with scale (the RDD path neither prunes columns
-    * nor codegens). Returns (id, pagerank, component) for every
-    * node, isolated nodes included (rank 0.15·Σ0.85ⁱ partial — the
-    * same value GraphX assigns). */
+  /** PageRank + weak components as PURE DataFrame iterations, FUSED
+    * into one loop (PageRankParitySpec pins it against a driver-side
+    * replay: components exact, ranks to 1e-8). Reproduces GraphX
+    * `staticPageRank` semantics on the symmetrized multigraph
+    * exactly: r₀ = 1, r' = 0.15 + 0.85·Σ incoming r/outdeg (edge
+    * MULTIPLICITY counts in the out-degree, dangling mass dropped —
+    * none exists on a symmetric graph), 10 fixed supersteps.
+    * Components are min-vertex-id labels via min-label propagation
+    * with POINTER JUMPING (`l ← l∘l` each round), so rounds ∝
+    * log(diameter), not diameter; convergence is detected, not
+    * assumed. Fused, each superstep scans the edges once for both
+    * kernels: a split into chained PageRank plus the one-task
+    * [[components]] gave identical output at sf0.1 but ran 18.3-18.9 s
+    * against 14.8-17.8 s fused. Returns (id, pagerank, component) for
+    * every node, isolated nodes included (rank 0.15 after the first
+    * superstep). */
   def pageRankAndComponentsDF(spark: SparkSession, g: PropertyGraph,
       iters: Int = 10): DataFrame = {
     val dir = g.edges.select(col("src").cast("long").as("src"),
@@ -497,35 +442,23 @@ object GraphAnalytics {
     }.select(col("grp"), col("node"), col("v").as("ppr_scaled"))
   }
 
-  /** Fixed-round k-truss peel over a canonical (u &lt; v) edge list: each
-    * round measures per-edge triangle support with the wedge join
-    * (edge ⋈ adjacency on u, then adjacency on (v, shared-neighbor) —
-    * co-partitioned equi-joins, never an all-pairs product) and drops
-    * edges below k−2. A FIXED round count keeps cluster cost
+  /** Fixed-round k-truss peel over an edge list `(u, v)`: each round
+    * measures every edge's triangle support ([[edgeSupport]]) and
+    * drops edges below k−2. A FIXED round count keeps cluster cost
     * predictable at scale (converged peeling is an unbounded number of
     * full passes — same design call as the superstep kernels) and
-    * gives the recurrence an exact chained-CTE SQL form. Returns the
-    * surviving edges with the support measured in the admitting
+    * gives the recurrence an exact chained-CTE SQL form. Under the
+    * task-local bound every round runs in the one task, so the peel is
+    * one action however many rounds it has. Returns the surviving
+    * edges, u &lt; v, with the support measured in the admitting
     * round. */
-  def ktrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(rounds >= 1, "ktrussPeel needs at least one round")
-    var e = pairs.select(col("u"), col("v"))
-    var out: DataFrame = null
-    (0 until rounds).foreach { _ =>
-      val sym = e.select(col("u").as("a"), col("v").as("b"))
-        .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      val sup = e
-        .join(sym.select(col("a").as("u"), col("b").as("w")), "u")
-        .join(sym.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"))
-        .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      out = Superstep.checkpoint(e.join(sup, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          coalesce(col("support"), lit(0L)).as("support"))
-        .where(col("support") >= (k - 2).toLong))
-      e = out.select("u", "v")
-    }
-    out
-  }
+  def ktrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame =
+    ktrussPeel(pairs, k, rounds, LocalMaxEdges)
+
+  private[graph] def ktrussPeel(pairs: DataFrame, k: Int, rounds: Int,
+      maxLocalEdges: Long): DataFrame =
+    supportRounds(pairs.select(col("u").as("src"), col("v").as("dst")),
+      k - 2L, rounds, maxLocalEdges)
 
   /** Exact-scaled Bonacich power centrality (G11) — the oracle-able
     * companion of the LocalGraph dense solve. The solve's target
@@ -620,7 +553,7 @@ object GraphAnalytics {
     * textbook undirected value). BFS is depth-capped at `maxDepth`
     * (mirrored by the oracle's recursion bound); σ must stay within
     * Long — true for sparse per-sample graphs, the tier this kernel
-    * serves (the dense-megagraph path is GraphX). One shuffle on the
+    * serves (a megagraph belongs on the superstep tier). One shuffle on the
     * group key, then groups run independently — same scale shape as
     * [[perGroupVertexMetrics]]. */
   def betweennessExactScaled(edges: DataFrame, maxDepth: Int = 32): DataFrame = {
@@ -735,18 +668,6 @@ object GraphAnalytics {
       .toDF("grp", "node", "ecc", "harmonic_scaled")
   }
 
-  private def unitWeighted(g: PropertyGraph): PropertyGraph =
-    PropertyGraph(g.nodes, g.edges.withColumn("unit_w", lit(1.0)))
-
-  /** Weak connected components via GraphX; (id, component). */
-  def connectedComponents(spark: SparkSession, g: PropertyGraph): DataFrame = {
-    val cc = toGraphX(unitWeighted(g), "unit_w",
-      gxPartitions(spark, g.edges.count())).connectedComponents().vertices
-    spark.createDataFrame(cc.map(t => Row(t._1, t._2)),
-      new org.apache.spark.sql.types.StructType()
-        .add("id", "long").add("component", "long"))
-  }
-
   /** Materialize one group's edges into task memory, failing fast past
     * the cap: the per-group kernels are the many-small-groups tier, and
     * a megagroup must error with an actionable message instead of
@@ -758,8 +679,9 @@ object GraphAnalytics {
       if (buf.length >= cap)
         throw new IllegalStateException(
           s"group '$grp' has more than $cap edges — too large for a task-local " +
-            "graph kernel. Pre-aggregate the group, raise maxGroupEdges, or use " +
-            "the GraphX tier (pageRankAndComponents/connectedComponents).")
+            "graph kernel. Pre-aggregate the group, raise maxGroupEdges, or run " +
+            "the graph whole on the superstep tier (components, " +
+            "pageRankAndComponentsDF, the exact-scaled kernels).")
       val t = it.next()
       buf += ((t._2, t._3, t._4))
     }
@@ -820,12 +742,12 @@ object GraphAnalytics {
     *   single 100k-node group under the edge cap would still burn hours
     *   in one task. Groups past this node count report -1 / NaN for
     *   those metrics and keep the linear ones (degree, eigen,
-    *   connectivity); the distributed tier (GraphX) is the right tool
-    *   for the megagroup. */
+    *   connectivity); the whole-graph superstep tier is the right
+    *   tool for the megagroup. */
   def perGroupMetrics(edges: DataFrame, directed: Boolean = false,
       communityMaxNodes: Int = 200,
       communityAlgorithm: String = "greedy",
-      maxGroupEdges: Int = 2000000,
+      maxGroupEdges: Int = LocalMaxEdges,
       quadraticMaxNodes: Int = 20000): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -868,7 +790,7 @@ object GraphAnalytics {
     * tier). */
   def perGroupCommunities(edges: DataFrame, directed: Boolean = false,
       steps: Int = 4, communityMaxNodes: Int = 200,
-      maxGroupEdges: Int = 2000000): DataFrame = {
+      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     keyedGroups(edges)
@@ -892,7 +814,7 @@ object GraphAnalytics {
     * feeding β-diversity (G18; reference bin/interpersonaldiversity.R:98-116).
     * Output: (group, id, eigen). */
   def perGroupEigen(edges: DataFrame, directed: Boolean = false,
-      maxGroupEdges: Int = 2000000): DataFrame = {
+      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     keyedGroups(edges)
@@ -913,7 +835,7 @@ object GraphAnalytics {
     * @param denseMaxNodes alpha centrality solves a dense n×n system
     *   (O(n²) memory, O(n³) time) — NaN past this node count. */
   def perGroupVertexMetrics(edges: DataFrame, directed: Boolean = false,
-      alpha: Double = 0.1, maxGroupEdges: Int = 2000000,
+      alpha: Double = 0.1, maxGroupEdges: Int = LocalMaxEdges,
       quadraticMaxNodes: Int = 20000, denseMaxNodes: Int = 2000): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -945,7 +867,7 @@ object GraphAnalytics {
     * fraction after deleting that many highest-degree vertices.
     * Same many-small-groups tier as the other kernels. */
   def perGroupRobustness(edges: DataFrame, steps: Int = 5,
-      maxGroupEdges: Int = 2000000): DataFrame = {
+      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     keyedGroups(edges)
@@ -979,14 +901,12 @@ object GraphAnalytics {
   /** Weak components of one edge list, computed task-locally by
     * union-find with path halving: each edge endpoint with its
     * component's min id. The larger-id root always joins the
-    * smaller-id one, so every root IS its component's min id —
-    * GraphX's labeling convention, and the recursive-CTE closure's.
-    * Covers only edge endpoints (isolated vertices are the caller's
-    * singleton arithmetic). The per-group kernel of
-    * [[perGroupComponents]] and, via [[largestComponentOf]], of
-    * [[robustnessExact]]'s small tier. */
+    * smaller-id one, so every root IS its component's min id — the
+    * recursive-CTE closure's labeling convention. Covers only edge
+    * endpoints; a self-loop (v, v) puts v in. The per-group kernel of
+    * [[perGroupComponents]] and the one-task path of [[components]]. */
   private def componentsOf(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val idx = scala.collection.mutable.HashMap.empty[Long, Int]
+    val idx = scala.collection.mutable.LongMap.empty[Int]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
     def nodeOf(v: Long): Int = idx.getOrElseUpdate(v, {
@@ -1005,13 +925,153 @@ object GraphAnalytics {
     ids.indices.iterator.map(i => (ids(i), ids(find(i))))
   }
 
-  /** Largest connected-component size of one edge list (0 without
-    * edges): a size count over [[componentsOf]]'s labels. Component
-    * sizes are algorithm-independent, so this agrees exactly with
-    * GraphX CC and with a recursive-CTE closure. */
-  private def largestComponentOf(edges: Iterator[(Long, Long)]): Long =
-    componentsOf(edges).toSeq.groupMapReduce(_._2)(_ => 1L)(_ + _)
-      .values.maxOption.getOrElse(0L)
+  /** The task-local tier's edge bound: the most edges one task holds
+    * — one group of a per-group kernel ([[boundedEdges]]), or the
+    * whole graph of [[components]] and [[edgeSupport]]. */
+  private[graph] val LocalMaxEdges = 2000000
+
+  /** Weak connected components of a whole graph: `(id, component)`,
+    * each component labelled by its min id. `edges` is `(src, dst)`;
+    * every `id` of `ids` is in the output too, an isolated one
+    * labelled by itself. Self-loops, duplicate and reversed edges are
+    * harmless. Two paths, picked on the measured operand (edges plus
+    * ids):
+    *  - at or under [[LocalMaxEdges]] rows, ONE shuffle sends the graph
+    *    to one task, where [[componentsOf]]'s union-find labels it. The
+    *    result is lazy: its one exchange has a fixed partition count,
+    *    so the consumer's action runs it the same under any conf;
+    *  - above, the min-label supersteps with POINTER JUMPING of
+    *    [[pageRankAndComponentsDF]]'s fused loop, run with no rank
+    *    steps: rounds grow with log(diameter). Contracting each
+    *    partition by union-find first (Kiveris et al., SoCC 2014)
+    *    would cut the rounds further (SCALE.md). */
+  def components(edges: DataFrame, ids: DataFrame): DataFrame =
+    components(edges, Some(ids), LocalMaxEdges)
+
+  private[graph] def components(edges: DataFrame, ids: Option[DataFrame],
+      maxLocalEdges: Long): DataFrame = {
+    import edges.sparkSession.implicits._
+    val e = edges.select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
+    Superstep(ids.fold(e)(i => e.unionByName(
+        i.select(col("id").cast("long").as("a"), col("id").cast("long").as("b"))))) { s =>
+      if (s.rows <= maxLocalEdges)
+        s.operand.as[(Long, Long)].repartition(1).mapPartitions(componentsOf)
+          .toDF("id", "component")
+      else
+        pageRankAndComponentsDF(edges.sparkSession,
+          PropertyGraph(s.operand.select(col("a").as("id")),
+            s.operand.select(col("a").as("src"), col("b").as("dst"))), iters = 0)
+          .select("id", "component")
+    }
+  }
+
+  /** Triangle support of every edge of a whole graph: `(u, v, support)`
+    * with u &lt; v and support = |N(u) ∩ N(v)|, zero-support edges
+    * included. `edges` is `(src, dst)`; self-loops, duplicate and
+    * reversed edges are dropped or merged. Each edge is oriented from
+    * the lower (degree, id) end, and a triangle is found once, at its
+    * lowest edge, as the intersection of its two ends' sorted
+    * out-lists (the wedge-closing count at the core of worst-case-
+    * optimal joins). Same two paths as [[components]]: the whole graph
+    * in one task at or under [[LocalMaxEdges]] input rows, else the
+    * relational form — oriented edges joined to both ends' out-lists
+    * — inside the superstep scope. Both share [[orientedBefore]] and
+    * [[commonOut]]. */
+  def edgeSupport(edges: DataFrame): DataFrame =
+    edgeSupport(edges, LocalMaxEdges)
+
+  private[graph] def edgeSupport(edges: DataFrame, maxLocalEdges: Long): DataFrame =
+    supportRounds(edges, 0L, 1, maxLocalEdges)
+
+  /** `rounds` of [[edgeSupport]], each over the edges the previous
+    * round kept (support ≥ `minSupport`); the last round's survivors.
+    * The operand is measured once: a peel only removes edges. */
+  private def supportRounds(edges: DataFrame, minSupport: Long, rounds: Int,
+      maxLocalEdges: Long): DataFrame = {
+    require(rounds >= 1, "a support peel needs at least one round")
+    import edges.sparkSession.implicits._
+    Superstep(edges.select(col("src").cast("long").as("a"),
+        col("dst").cast("long").as("b"))) { s =>
+      if (s.rows <= maxLocalEdges)
+        s.operand.as[(Long, Long)].repartition(1)
+          .mapPartitions(it => supportOf(it, minSupport, rounds))
+          .toDF("u", "v", "support")
+      else
+        (1 to rounds).foldLeft(s.operand) { (e, _) =>
+          Superstep.checkpoint(relationalSupport(e).where(col("support") >= minSupport))
+        }.select(col("a").as("u"), col("b").as("v"), col("support"))
+    }
+  }
+
+  /** The orientation rule of [[edgeSupport]]: edges point from the
+    * lower (degree, id) end, so every out-list is at most √(2m) long. */
+  private def orientedBefore(du: Long, u: Long, dv: Long, v: Long): Boolean =
+    du < dv || (du == dv && u < v)
+
+  /** The intersection of [[edgeSupport]]: merge the sorted lists `a`
+    * and `b`, calling `f` with the positions of every common element. */
+  private def commonOut(a: Array[Long], b: Array[Long])(f: (Int, Int) => Unit): Unit = {
+    var i = 0
+    var j = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { f(i, j); i += 1; j += 1 }
+    }
+  }
+
+  /** The one-task path of [[supportRounds]]: per round, the oriented
+    * out-lists with a support counter per entry; a triangle x→y, x→w,
+    * y→w credits the three entries it was found at. */
+  private def supportOf(edges: Iterator[(Long, Long)], minSupport: Long,
+      rounds: Int): Iterator[(Long, Long, Long)] = {
+    var es = edges.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
+      .toArray.distinct
+    var out = Array.empty[(Long, Long, Long)]
+    (1 to rounds).foreach { _ =>
+      val deg = es.flatMap(e => Array(e._1, e._2)).groupMapReduce(identity)(_ => 1L)(_ + _)
+      val adj = es.map { case (a, b) =>
+        if (orientedBefore(deg(a), a, deg(b), b)) (a, b) else (b, a)
+      }.groupMap(_._1)(_._2).map { case (x, o) => x -> o.sorted }
+      val sup = adj.map { case (x, o) => x -> new Array[Long](o.length) }
+      for ((x, ox) <- adj; p <- ox.indices; oy <- adj.get(ox(p)))
+        commonOut(ox, oy) { (i, j) => sup(x)(p) += 1; sup(x)(i) += 1; sup(ox(p))(j) += 1 }
+      out = for ((x, ox) <- adj.toArray; p <- ox.indices if sup(x)(p) >= minSupport)
+        yield (math.min(x, ox(p)), math.max(x, ox(p)), sup(x)(p))
+      es = out.map(t => (t._1, t._2))
+    }
+    out.iterator
+  }
+
+  /** One round of the above-bound [[edgeSupport]] path, `(a, b)` to
+    * `(a, b, support)` with a &lt; b: orient, collect each node's sorted
+    * out-list, join every oriented edge to both ends' lists and
+    * intersect them. */
+  private def relationalSupport(e: DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    val canon = e.select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+    val deg = Superstep.bothWays(canon).groupBy("a").agg(count(lit(1)).as("d"))
+    val oriented = Superstep.checkpoint(canon
+      .join(deg.select(col("a"), col("d").as("du")), "a")
+      .join(deg.select(col("a").as("b"), col("d").as("dv")), "b")
+      .select("a", "b", "du", "dv").as[(Long, Long, Long, Long)]
+      .map { case (u, v, du, dv) => if (orientedBefore(du, u, dv, v)) (u, v) else (v, u) }
+      .toDF("x", "y"))
+    val out = oriented.groupBy("x").agg(sort_array(collect_list(col("y"))).as("ox"))
+    val credits = oriented
+      .join(out, "x")
+      .join(out.select(col("x").as("y"), col("ox").as("oy")), "y")
+      .select("x", "y", "ox", "oy").as[(Long, Long, Array[Long], Array[Long])]
+      .flatMap { case (x, y, ox, oy) =>
+        val c = Array.newBuilder[(Long, Long)]
+        commonOut(ox, oy) { (i, _) => c ++= Seq((x, y), (x, ox(i)), (y, ox(i))) }
+        c.result()
+      }.toDF("x", "y")
+    credits.withColumn("c", lit(1L)).unionByName(oriented.withColumn("c", lit(0L)))
+      .groupBy(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
+      .agg(sum(col("c")).as("support"))
+  }
 
   /** G5 per group — weak connected components of every group's
     * subgraph on the keyed per-group tier ([[keyedGroupsUnweighted]],
@@ -1037,12 +1097,15 @@ object GraphAnalytics {
     * (degree-agg → argmax → CC) rounds; each round is a full
     * distributed job, so the plan survives scale even though the
     * driver holds only the k removed ids and the k curve points.
-    * Component sizes are algorithm-independent, so GraphX CC here and
-    * a recursive-CTE closure in an external engine agree exactly; the
-    * only float is the final size/n division. Input: (src, dst).
+    * Component sizes are algorithm-independent, so [[components]] here
+    * and a recursive-CTE closure in an external engine agree exactly;
+    * the only float is the final size/n division. Input: (src, dst).
     * Output: (n_removed, largest, largest_frac). */
-  def robustnessExact(edges: DataFrame, steps: Int,
-      maxLayeredLocalEdges: Long = 100000L): DataFrame = {
+  def robustnessExact(edges: DataFrame, steps: Int): DataFrame =
+    robustnessExact(edges, steps, LocalMaxEdges)
+
+  private[graph] def robustnessExact(edges: DataFrame, steps: Int,
+      maxLocalEdges: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val canon = edges.select(least(col("src"), col("dst")).as("a"),
@@ -1150,46 +1213,34 @@ object GraphAnalytics {
             .where(col("d") > 0))
         }
       }
-      // Phase 2 — per-layer largest component, TIERED like every graph
-      // kernel in this file: below the task-local cap the layers are
-      // independent groups, so ONE shuffle fans each layer's surviving
-      // edges to its own task and a union-find labels it there —
-      // GraphX's per-run fixed cost (~3-5 s of Pregel supersteps,
-      // measured) is pure overhead on a group-sized graph. Past the
-      // cap, ONE GraphX CC over the layered union (q75's encoding
-      // trick: layer t's ids offset by t·enc) labels every step at
-      // once instead of paying GraphX fixed cost per step (17.8 s →
-      // one run at gate scale).
+      // Phase 2 — per-layer largest component. The layered union has
+      // at most (steps + 1)·|E| rows. Under the task-local bound the
+      // layers are independent groups: ONE shuffle fans each to its own
+      // task and a union-find labels it there (one [[components]] run
+      // over the whole union measured 0.2-0.4 s slower on q136 at
+      // sf0.1: a measuring pass and two aggregations). Above the bound,
+      // ONE [[components]] run labels every step at once (q75's
+      // encoding: layer t's ids offset by t·enc).
+      val layered = (0 to steps).map { t =>
+        val r = removed.take(t).toSeq
+        canon.where(!col("a").isin(r: _*) && !col("b").isin(r: _*))
+          .select(lit(t).as("layer"), col("a"), col("b"))
+      }.reduce(_ unionByName _)
       val byLayer: Map[Long, Long] =
-        if ((steps + 1).toLong * nEdges <= maxLayeredLocalEdges) {
-          val layered = (0 to steps).map { t =>
-            val r = removed.take(t).toSeq
-            canon.where(!col("a").isin(r: _*) && !col("b").isin(r: _*))
-              .select(lit(t).as("layer"), col("a"), col("b"))
-          }.reduce(_ unionByName _)
+        if ((steps + 1) * nEdges <= maxLocalEdges)
           // explicit keyed distribution, same rationale as [[keyedGroups]]
-          layered
-            .repartition(spark.sessionState.conf.numShufflePartitions,
-              col("layer"))
+          layered.repartition(spark.sessionState.conf.numShufflePartitions, col("layer"))
             .groupBy(col("layer")).as[Int, (Int, Long, Long)]
             .mapGroups { (layer, it) =>
-              (layer.toLong, largestComponentOf(it.map(e => (e._2, e._3))))
+              (layer.toLong, componentsOf(it.map(e => (e._2, e._3))).toSeq
+                .groupMapReduce(_._2)(_ => 1L)(_ + _).values.max)
             }.collect().toMap
-        } else {
-          val layered = (0 to steps).map { t =>
-            val r = removed.take(t).toSeq
-            canon.where(!col("a").isin(r: _*) && !col("b").isin(r: _*))
-              .select((col("a") + t * enc).as("src"), (col("b") + t * enc).as("dst"))
-          }.reduce(_ unionByName _)
-          val vtx = layered.select(col("src").as("id"))
-            .unionByName(layered.select(col("dst").as("id"))).distinct()
-            .withColumn("name", col("id").cast("string"))
-          connectedComponents(spark, graft.graph.PropertyGraph(vtx, layered))
-            .groupBy((col("id") / enc).cast("long").as("layer"), col("component"))
-            .agg(count(lit(1)).as("sz"))
-            .groupBy("layer").agg(max(col("sz")).as("m"))
-            .as[(Long, Long)].collect().toMap
-        }
+        else components(layered.select((col("a") + col("layer") * enc).as("src"),
+            (col("b") + col("layer") * enc).as("dst")), None, maxLocalEdges)
+          .groupBy((col("id") / enc).cast("long").as("layer"), col("component"))
+          .agg(count(lit(1)).as("sz"))
+          .groupBy("layer").agg(max(col("sz")).as("m"))
+          .as[(Long, Long)].collect().toMap
       (byLayer, removed.length)
     }
     val (byLayerMax, nRemoved) = ccMaxByLayer

@@ -35,7 +35,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     Motif.compile(this, pattern, allowCross)
 
   /** Degree table: (id, inDeg, outDeg, deg) via a single agg each —
-    * no GraphX materialization needed for degree-family metrics. */
+    * no graph materialization needed for degree-family metrics. */
   def degrees: DataFrame = {
     val out = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outDeg"))
     val in  = edges.groupBy(col("dst").as("id")).agg(count(lit(1)).as("inDeg"))

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * The operator owns what every kernel used to repeat by hand:
   *
-  *  - the operand, materialized once and MEASURED: its row count sizes
-  *    the kernel's shuffles at one task per ~64k rows, clamped to
-  *    [4, defaultParallelism]. The kernels run ~3 exchanges per
+  *  - the operand, materialized once and MEASURED: its row count
+  *    (`rows`) sizes the kernel's shuffles at one task per ~64k rows,
+  *    clamped to [4, defaultParallelism], and picks the path of a
+  *    two-path kernel. The kernels run ~3 exchanges per
   *    superstep × 5-10 supersteps, so per-task scheduling latency
   *    multiplies by ~30; at the session default (cores) a 2.7k-row
   *    state schedules ~1000 tasks of pure overhead — the surface a
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
   *  - the single-action chain ([[chain]]) and the one checkpoint
   *    ([[Superstep.checkpoint]]).
   */
-private[graph] final class Superstep private (val operand: DataFrame) {
+private[graph] final class Superstep private (val operand: DataFrame, val rows: Long) {
 
   /** The operand hash-partitioned on `keys` and checkpointed: the
     * per-step join reads a co-partitioned leaf, so each superstep
@@ -77,15 +78,16 @@ private[graph] final class Superstep private (val operand: DataFrame) {
 
 private[graph] object Superstep {
 
-  /** Materialize `operand`, measure it (one job over the checkpointed
-    * RDD; `Dataset.count` plans an aggregate whose exchange costs a
-    * second job under AQE), and run `kernel` over it inside the sized
-    * scope. The operand is materialized under the session's own conf:
-    * its size is not known before. */
+  /** Materialize `operand`, measure it (the row count is observed
+    * during the checkpoint's own action, so measuring costs no job),
+    * and run `kernel` over it inside the sized scope. The operand is
+    * materialized under the session's own conf: its size is not known
+    * before. */
   def apply[A](operand: DataFrame)(kernel: Superstep => A): A = {
-    val m = checkpoint(operand)
-    val rows = m.queryExecution.toRdd.count()
-    scoped(m.sparkSession, rows, 65536L)(kernel(new Superstep(m)))
+    val obs = org.apache.spark.sql.Observation()
+    val m = checkpoint(operand.observe(obs, count(lit(1)).as("rows")))
+    val rows = obs.get("rows").asInstanceOf[Long]
+    scoped(m.sparkSession, rows, 65536L)(kernel(new Superstep(m, rows)))
   }
 
   /** Run `body` in the superstep scope sized for `rows` operand rows at
@@ -144,7 +146,8 @@ private[graph] object Superstep {
       .agg(merge(col("w")).as("w"))
   }
 
-  private def bothWays(e: DataFrame): DataFrame =
+  /** Every row of an `(…, a, b)` frame in both directions. */
+  def bothWays(e: DataFrame): DataFrame =
     e.unionByName(e.select(e.columns.toIndexedSeq.map {
       case "a" => col("b").as("a")
       case "b" => col("a").as("b")

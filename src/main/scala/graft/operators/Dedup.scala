@@ -180,29 +180,12 @@ object Dedup {
     * @param pairs (d1, d2) candidate duplicate pairs
     * @param allIds one row per doc id (singleton clusters included)
     */
-  def clusterDuplicates(pairs: DataFrame, allIds: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val spark = pairs.sparkSession
-    // GraphX's iterative CC over-fragments at SQL-side partition
-    // counts on gate-sized graphs, but a CONSTANT would cap the job
-    // at scale (candidate pairs are candidate-linear in corpus size):
-    // size one task per ~100k edges, clamped to [4, parallelism] —
-    // the same edge-volume rule as GraphAnalytics.gxPartitions. The
-    // count() is cheap: callers pass memoized/persisted pair tables.
-    val edgeDf = pairs.select(col("d1").cast("long"), col("d2").cast("long"))
-    val parts = graft.graph.GraphAnalytics.gxPartitions(spark, edgeDf.count())
-    val edgeRdd = edgeDf.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-      .coalesce(parts)
-    val vertRdd = allIds.select(allIds.columns.head).rdd
-      .map(r => (r.getLong(0), 1)).coalesce(parts)
-    val cc = Graph(vertRdd, edgeRdd).connectedComponents().vertices
-    val ccDf = spark.createDataFrame(
-      cc.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("cluster_rep", "long"))
-    // GraphX CC labels components with the min vertex id = smallest doc id
-    ccDf
-  }
+  def clusterDuplicates(pairs: DataFrame, allIds: DataFrame): DataFrame =
+    // components label by the min id = the smallest doc id
+    graft.graph.GraphAnalytics.components(
+        pairs.select(col("d1").as("src"), col("d2").as("dst")),
+        allIds.select(col(allIds.columns.head).as("id")))
+      .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
 
   /** Exact Jaccard verification of candidate pairs — the 100 TB form
     * of [[jaccardPairs]]. The token join is bounded by

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** β-diversity + per-group graph analytics in the correctness gate
   * (SURVEY G17/G18/M6, §2.10). The relational β-diversity ops carry
-  * exact DuckDB oracles; kernel-based per-group metrics and GraphX
-  * jobs are rows-only (deterministic, not ANSI-SQL-expressible).
+  * exact DuckDB oracles; kernel-based per-group metrics and the fused
+  * PageRank + components loop are rows-only (deterministic, not
+  * ANSI-SQL-expressible).
   */
 object AnalyticsQueries {
 
@@ -102,25 +103,17 @@ object AnalyticsQueries {
     s"$head$mids,\ndist AS (\n  $distU)"
   }
 
-  /** Per-node triangle counts on the co-supplier projection via the
-    * REAL GraphX TriangleCount — memoized: q119 (raw counts) and q122
-    * (clustering coefficient) share one distributed run. */
+  /** Per-node triangle counts and degrees on the co-supplier
+    * projection: a node's triangles are half the summed support of its
+    * edges ([[GraphAnalytics.edgeSupport]]), its degree their count —
+    * memoized: q119 (raw counts) and q122 (clustering coefficient)
+    * share one run. */
   private def coTriangles(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.Memo.df(s, "coTriangles", d) {
-      import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
-      // edge-volume partition sizing (not a constant): coSupplier is
-      // persisted, so the count is a cache read
-      val co = coSupplier(s, d)
-      val parts = graft.graph.GraphAnalytics.gxPartitions(s, co.count())
-      val tc = Graph.fromEdges(
-          co.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-            .coalesce(parts), 1)
-        .partitionBy(PartitionStrategy.RandomVertexCut)
-        .triangleCount().vertices
-      s.createDataFrame(
-        tc.map(t => org.apache.spark.sql.Row(t._1, t._2.toLong)),
-        new org.apache.spark.sql.types.StructType()
-          .add("node", "long").add("n_tri", "long"))
+      GraphAnalytics.edgeSupport(coSupplier(s, d).select(col("a").as("src"), col("b").as("dst")))
+        .select(explode(array(col("u"), col("v"))).as("node"), col("support"))
+        .groupBy("node").agg((sum(col("support")) / 2).cast("long").as("n_tri"),
+          count(lit(1)).as("d"))
     }
 
   /** The co-supplier projection (suppliers sharing an order) —
@@ -284,15 +277,15 @@ object AnalyticsQueries {
       col("meanDistance").as("mean_distance"))
   }
 
-  /** G12/G5 — global PageRank + connected components, DataFrame-
-    * native production tier ([[GraphAnalytics.pageRankAndComponentsDF]]
-    * — one co-partitioned join + partial agg per superstep under
-    * whole-stage codegen; measured ~3× the GraphX twin, which stays
-    * the law twin per PageRankParitySpec: identical components, ranks
-    * to 1e-8). */
+  /** G12/G5 — global PageRank + connected components on the
+    * whole-graph superstep tier
+    * ([[GraphAnalytics.pageRankAndComponentsDF]] — one fused
+    * co-partitioned join + partial agg per superstep serves both
+    * kernels; PageRankParitySpec pins it against a driver-side replay:
+    * identical components, ranks to 1e-8). */
   val q57 = QuerySpec.rowsOnly(
     "q57_global_pagerank_cc",
-    "global PageRank + components, DataFrame-native (GraphX law twin) (SURVEY G5,G12)") { (s, d) =>
+    "global PageRank + components, fused DataFrame supersteps (SURVEY G5,G12)") { (s, d) =>
     val g = GraphBuild.tpchGraph(s, d)
     GraphAnalytics.pageRankAndComponentsDF(s, g)
       .join(g.nodes, "id")
@@ -328,8 +321,8 @@ object AnalyticsQueries {
     * task-local union-find labels every component by its min node id,
     * which a DuckDB recursive-CTE reachability computes exactly.
     * Integers end to end → bit-safe. (The gate keeps its GraphX name
-    * for continuity; a whole graph too large for one task belongs on
-    * the global tier — q57.) */
+    * for continuity; a whole graph runs through
+    * [[GraphAnalytics.components]].) */
   val q75 = QuerySpec.sql(
     "q75_graphx_components",
     """WITH RECURSIVE e AS (
@@ -484,7 +477,7 @@ object AnalyticsQueries {
   /** G12 — static PageRank, hash-oracled: the exact-scaled DataFrame
     * iteration (per-edge contributions round to scaled BIGINTs before
     * the sum, so the result is order-independent and bit-reproducible
-    * in any engine). q57 stays the production GraphX form; this
+    * in any engine). q57 stays the production float form; this
     * verifies the rank arithmetic end-to-end against DuckDB. The edge
     * set reuses the memoized groupEdges table (customer joins already
     * paid), projected to the global (src, dst) graph. */
@@ -532,7 +525,7 @@ object AnalyticsQueries {
 
   /** G12 (weighted form) — the reference's `page_rank(directed=F)`
     * weighted-symmetrized semantic, hash-oracled the same way as q90.
-    * q57 remains the GraphX production run; between q90 (unweighted,
+    * q57 remains the production float run; between q90 (unweighted,
     * directed) and this (weighted, symmetrized) the full rank
     * arithmetic the engine ships is driver-verified. */
   val q98 = QuerySpec.sql(
@@ -932,9 +925,11 @@ object AnalyticsQueries {
       k = 2, iters = 4)
   }
 
-  /** G16 (per-vertex form) — the REAL GraphX TriangleCount job,
-    * hash-oracled. The supplier→customer evidence graph is bipartite
-    * (zero triangles by construction), so this runs on the
+  /** G16 (per-vertex form) — per-node triangle counts from the
+    * task-local [[GraphAnalytics.edgeSupport]] kernel, hash-oracled
+    * (the gate keeps its GraphX name for continuity). The
+    * supplier→customer evidence graph is bipartite (zero triangles by
+    * construction), so this runs on the
     * CO-SUPPLIER projection: suppliers connected when they ship the
     * same order — the standard bipartite→unipartite projection
     * ecology tooling applies to co-occurrence data. The oracle
@@ -964,7 +959,7 @@ object AnalyticsQueries {
       |SELECT CAST(n.node AS BIGINT) AS node,
       |       CAST(COALESCE(c.n, 0) AS BIGINT) AS n_triangles
       |FROM nodes n LEFT JOIN cnt c ON c.node = n.node""",
-    "distributed GraphX triangle counting on the co-supplier projection (SURVEY G16)") { (s, d) =>
+    "triangle counting by sorted out-list intersection on the co-supplier projection (SURVEY G16)") { (s, d) =>
     coTriangles(s, d).select(col("node"), col("n_tri").as("n_triangles"))
   }
 
@@ -1037,8 +1032,8 @@ object AnalyticsQueries {
 
   /** Local clustering coefficient (igraph `transitivity(type="local")`
     * semantics) on the co-supplier projection: c(v) = 2·T(v)/(d·(d−1))
-    * with T from the REAL GraphX TriangleCount and d from the
-    * canonical degree — both exact integers, one identical float
+    * with T and d from the [[GraphAnalytics.edgeSupport]] pass over
+    * the canonical edges — both exact integers, one identical float
     * expression per node. Degree-<2 nodes emit NULL on both sides
     * (igraph's NaN analog). */
   val q122 = QuerySpec.sql(
@@ -1068,17 +1063,11 @@ object AnalyticsQueries {
       |            ELSE CAST(2 AS DOUBLE) * COALESCE(cnt.n, 0)
       |                 / (CAST(deg.d AS DOUBLE) * (deg.d - 1)) END AS clustering
       |FROM deg LEFT JOIN cnt ON cnt.node = deg.node""",
-    "local clustering coefficient via GraphX triangles (beyond-reference)") { (s, d) =>
-    val co = coSupplier(s, d)
-    val deg = co.select(col("a").as("node"))
-      .unionByName(co.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    deg.join(coTriangles(s, d), Seq("node"), "left_outer")
-      .select(col("node"),
-        when(col("d") < 2, lit(null).cast("double"))
-          .otherwise(lit(2.0) * coalesce(col("n_tri"), lit(0L)) /
-            (col("d").cast("double") * (col("d") - 1)))
-          .as("clustering"))
+    "local clustering coefficient via edge-support triangles (beyond-reference)") { (s, d) =>
+    coTriangles(s, d).select(col("node"),
+      when(col("d") < 2, lit(null).cast("double"))
+        .otherwise(lit(2.0) * col("n_tri") / (col("d").cast("double") * (col("d") - 1)))
+        .as("clustering"))
   }
 
   /** G14/G15 — the community kernels, output-pinned: walktrap
@@ -1410,9 +1399,9 @@ object AnalyticsQueries {
     * RECURSIVE, a bare UNION in a NON-recursive CTE body skips its
     * dedup (140 vs 83 vertices here), so v0 spells the dedup as
     * SELECT DISTINCT over UNION ALL. Component sizes are
-    * algorithm-independent, so the Spark side runs the REAL GraphX CC
-    * job per step; everything is integers until the final size/n
-    * division. q82 keeps the per-group driver-local curve; THIS gates
+    * algorithm-independent, so the Spark side labels every step with
+    * one [[GraphAnalytics.components]] call; everything is integers
+    * until the final size/n division. q82 keeps the per-group driver-local curve; THIS gates
     * the removal rule and component arithmetic distributively. */
   val q136 = QuerySpec.sql(
     "q136_robustness_exact",
@@ -1441,7 +1430,7 @@ object AnalyticsQueries {
         s"SELECT CAST($t AS BIGINT) AS n_removed, CAST(m AS BIGINT) AS largest, " +
           s"CAST(m AS DOUBLE) / (SELECT n FROM n0) AS largest_frac FROM m$t")
         .mkString("\nUNION ALL\n"),
-    "adaptive targeted-removal robustness via per-step GraphX CC (SURVEY G19)") { (s, d) =>
+    "adaptive targeted-removal robustness via per-step components (SURVEY G19)") { (s, d) =>
     GraphAnalytics.robustnessExact(
       groupEdges(s, d).where(col("group") === "NATION_5")
         .select(col("src"), col("dst")), steps = 4)

@@ -70,7 +70,7 @@ object Corpus {
   /** The 0.8-edge dedup cluster map — memoized: q103 gates the
     * clustering stage itself, q144 derives the leakage-safe split
     * from the same table ([[warmShared]] materializes it so neither
-    * query is billed the other's GraphX CC build). */
+    * query is billed the other's components run). */
   private def clusters08(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.Memo.df(s, "clusters.0.8", d) {
       Dedup.clusterDuplicates(
@@ -1752,7 +1752,7 @@ object Corpus {
     * Candidate edges come from the EXACT Jaccard form (q35's join at a
     * tighter threshold) so the oracle derives the identical edge set
     * in SQL, then labels components with a recursive-CTE reachability
-    * closure; the Spark side runs the production GraphX CC path
+    * closure; the Spark side runs the production components kernel
     * ([[Dedup.clusterDuplicates]]). q42 stays the production
     * composition (LSH candidates), whose edge set is xxhash64-derived
     * and thus rows-only — this query proves the clustering stage
@@ -1779,7 +1779,7 @@ object Corpus {
       |  UNION
       |  SELECT r.node, s.b AS reach FROM r JOIN sym s ON s.a = r.reach)
       |SELECT node AS doc_id, min(reach) AS cluster_rep FROM r GROUP BY node""",
-    "exact-edge dedup clustering, GraphX CC vs recursive-CTE oracle (M14)") { (s, d) =>
+    "exact-edge dedup clustering, components kernel vs recursive-CTE oracle (M14)") { (s, d) =>
     // the 0.8 edge set is a filter of the memoized 0.5 pair table —
     // the quadratic-in-block token join is paid once, shared with q35
     clusters08(s, d)

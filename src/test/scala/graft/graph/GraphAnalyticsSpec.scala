@@ -12,19 +12,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     ("g2", 10L, 11L, 1.0), ("g2", 11L, 12L, 1.0)
   ).toDF("group", "src", "dst", "weight")
 
-  test("gxPartitions scales with edge volume, clamped to [4, parallelism]") {
-    // gate-sized graphs → floor of 4 tasks (no over-fragmentation)
-    assert(GraphAnalytics.gxPartitions(spark, 0L) == 4)
-    assert(GraphAnalytics.gxPartitions(spark, 100000L) == 4)
-    // large candidate sets → one task per ~100k edges up to parallelism:
-    // the dedup-clustering CC path must NOT cap at a constant (round-5
-    // advice: a hardcoded 8 caps a 100 TB candidate graph at 8 tasks)
-    val par = spark.sparkContext.defaultParallelism
-    assert(GraphAnalytics.gxPartitions(spark, 100000L * (par + 10)) == par)
-    val mid = math.max(5, math.min(par, 6))
-    assert(GraphAnalytics.gxPartitions(spark, 100000L * mid) == math.min(mid, par))
-  }
-
   test("perGroupCommunities emits canonical min-id labels per vertex") {
     val out = GraphAnalytics.perGroupCommunities(groupedEdges).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -91,13 +78,12 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(got(0)._2 == 6L)
     // step 1: hub removed → largest = triangle (3)
     assert(got(1)._2 == 3L)
-    // tier law: forcing the GraphX layered-CC path (cap 0) yields the
-    // identical curve — the union-find small tier and the distributed
-    // tier must agree bit-for-bit
-    val viaGraphX = GraphAnalytics
-      .robustnessExact(df, steps = 3, maxLayeredLocalEdges = 0L)
+    // tier law: forcing the components kernel's distributed path
+    // (bound 0) yields the identical curve — the one-task union-find
+    // and the min-label supersteps must agree bit-for-bit
+    val distributed = GraphAnalytics.robustnessExact(df, steps = 3, 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    assert(viaGraphX.toSeq == got.toSeq)
+    assert(distributed.toSeq == got.toSeq)
   }
 
   test("vertexSimpsonDiversity: D = (sum w)^2 / sum w^2 per vertex") {
@@ -141,17 +127,15 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(math.abs(d.head.getDouble(2) - 3.0 / 11.0) < 1e-12)
   }
 
-  test("GraphX connectedComponents runs on the evidence graph shape") {
+  test("components labels the evidence graph shape by min id") {
     val nodes = Seq((1L, "p1", "Phage"), (2L, "b1", "Bacterial_Host"),
       (3L, "p2", "Phage"), (4L, "b2", "Bacterial_Host"))
       .toDF("id", "name", "kind")
     val edges = Seq((1L, 2L, "Infects", 2.0), (3L, 2L, "Infects", 1.0))
       .toDF("src", "dst", "relType", "w")
-    val g = PropertyGraph(nodes, edges)
-    val cc = GraphAnalytics.connectedComponents(spark, g)
+    val cc = GraphAnalytics.components(edges, nodes)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc(1L) == cc(2L) && cc(2L) == cc(3L))
-    assert(cc(4L) != cc(1L)) // isolated node its own component
+    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L)) // 4 isolated
   }
 
   test("quadratic kernels are gated by node count: megagroup completes fast with NaN") {
