@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Attribution rules (round-2 verdict items 2-3):
@@ -21,49 +19,24 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC everywhere: Verify and the test session pin it, and
-      // Tables.normalizeEventTs's NTZ→TIMESTAMP cast is only
-      // instant-preserving under UTC — without this, a non-UTC host
-      // would bench different window boundaries than were verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a 184-query session retains every dead localCheckpoint/cache
-      // block until a GC lets the ContextCleaner reap it; with a
-      // ~100 GB heap full GCs are rare, so the default 30min periodic
-      // GC never fires inside a bench and late queries pay 3-4× in
-      // block-manager pressure (measured: q170/q176/q177 12s-vs-3s
-      // full-run-vs-isolated). The same knob matters on any
-      // long-lived production driver/executor.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // suppress the whitelisted-sketch-window warning spam — see the
-    // identical block in Verify (PlanAuditSpec owns the enforcement)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     // Fixed-work single-thread calibration (Mops): load_avg only sees
     // THIS guest's runnable threads — co-tenant/host noise shows up
     // instead as a drop in attainable single-core throughput. A >20%
     // pre/post spread marks the run contaminated regardless of load.
-    def calib(): Double = {
-      var best = 0.0
-      (1 to 2).foreach { _ => // second pass is JIT-warm
-        val t0 = System.nanoTime()
-        var x = 1.0; var i = 0
-        while (i < 100000000) { x = x * 1.0000001 + 1e-9; i += 1 }
-        if (x == 42.0) print("") // defeat DCE
-        best = math.max(best, 100.0 / ((System.nanoTime() - t0) / 1e9))
-      }
-      best
+    def calibOnce(): Double = {
+      val t0 = System.nanoTime()
+      var x = 1.0; var i = 0
+      while (i < 100000000) { x = x * 1.0000001 + 1e-9; i += 1 }
+      if (x == 42.0) print("") // defeat DCE
+      100.0 / ((System.nanoTime() - t0) / 1e9)
     }
+    // the second pass is JIT-warm; in-run checkpoints call calibOnce
+    // alone (JIT warm by then, ~0.25 s, outside any timed region)
+    def calib(): Double = math.max(calibOnce(), calibOnce())
     // Hypervisor STEAL — the contention channel neither load_avg nor
     // the single-thread calib can see: a co-tenant VM steals cycles
     // from ALL cores while the calib thread, measured between its own
@@ -137,15 +110,6 @@ object Bench {
     if (contended)
       System.err.println(f"WARNING: still contended after retry (load $load0%.2f) — " +
         "timings below are inflated; the JSON record carries contended:true")
-    // single-pass calibration for in-run checkpoints (JIT is warm
-    // after calib(); ~0.25 s, taken OUTSIDE any timed region)
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      var x = 1.0; var i = 0
-      while (i < 100000000) { x = x * 1.0000001 + 1e-9; i += 1 }
-      if (x == 42.0) print("")
-      100.0 / ((System.nanoTime() - t0) / 1e9)
-    }
     def usedHeapGb: Double =
       (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / 1e9
     // cumulative stop-the-world GC time across all collectors — the

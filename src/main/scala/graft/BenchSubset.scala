@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer micro-bench: time a subset of gate queries WARM (after
   * the same warmCaches pass the official Bench pays in its warm-up),
   * so per-query numbers are attributable exactly like the official
@@ -10,16 +8,8 @@ import org.apache.spark.sql.SparkSession
 object BenchSubset {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.cleaner.periodicGC.interval", "30s") // see Bench
-      .getOrCreate()
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // job/stage/task attribution per gate — the "is it driver-action-
     // bound?" evidence the optimization rounds read (dev tool only)

@@ -1,31 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.cleaner.periodicGC.interval", "30s") // see Bench
-      .getOrCreate()
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // The "No Partition Defined for Window" warning is redundant here
-    // and had become a useless signal (652 lines per drive, all from
-    // WHITELISTED sketch-sized windows — q-digest post-order picks,
-    // ≤2k·levels rows by the θ rule): PlanAuditSpec walks EVERY gate
-    // and fails on any data-sized unpartitioned window, which is the
-    // enforcement this log line pretended to be. Suppressed so a real
-    // new warning class is visible again (round-9 verdict item).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=q101,q102 dumps a subset
     // (unset for the driver's full run); prefix match, so both bare

@@ -96,11 +96,8 @@ private[graph] object Superstep {
   def scoped[A](spark: SparkSession, rows: Long, grain: Long)(body: => A): A = {
     val parts = math.max(4,
       math.min(spark.sparkContext.defaultParallelism, (rows / grain).toInt))
-    val scope = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> parts.toString)
-    val saved = scope.map { case (k, _) => k -> spark.conf.get(k) }
-    scope.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> parts.toString)(body)
   }
 
   /** Eagerly checkpoint `df`: cuts lineage and executes now, so the

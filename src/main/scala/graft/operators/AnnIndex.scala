@@ -415,9 +415,9 @@ object AnnIndex {
     // Fused arg-top-N kernel (graft.functions.TopNCentroidsL2) — the
     // composed slice(array_sort(transform(...))) twin it replaced
     // ([[topNByL2Composed]]) is pinned bit-identical in AnnCodecSpec
-    val probes = broadcast(q.select(col("query_id"), col("qv"),
+    val probes = q.select(col("query_id"), col("qv"),
       explode(graft.functions.AnnCodec.topNCentroidsL2(
-        col("qv"), cents, nProbe)).as("cid")))
+        col("qv"), cents, nProbe)).as("cid"))
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).sorted
     val pruned = spark.read.parquet(codesPath(dir))
@@ -433,7 +433,7 @@ object AnnIndex {
       if (residual) {
         val cdf = broadcast(centroidsDf(spark, cents))
         // query offset differs per probed list: rq = qv − centroid
-        val rq = probes.join(cdf, "cid")
+        val rq = broadcast(probes).join(cdf, "cid")
           .select(col("query_id"), col("cid"),
             zip_with(col("qv"), col("cvec_full"), (x, c) => x - c).as("rq"))
         rq.select(col("query_id"), col("cid"),
@@ -450,7 +450,7 @@ object AnnIndex {
     }
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id"))
-    val joined = codes.join(probes.select("query_id", "cid"), Seq("cid"))
+    val joined = codes.join(broadcast(probes.select("query_id", "cid")), Seq("cid"))
       .where(col("query_id") =!= col("vid"))
       .select(col("query_id"), col("cid"), col("vid").as("neighbor_id"),
         posexplode(col("codes")).as(Seq("m", "code")))

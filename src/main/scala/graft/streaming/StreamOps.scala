@@ -26,25 +26,15 @@ object StreamOps {
     * a 100 TB/day feed raises it back. Restores the session conf
     * after the query (shuffle partitions are locked in at stream
     * start, so the scope covers exactly one streaming query). */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", old)
-  }
+  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A =
+    graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** The bounded gate inputs carry nanos timestamps that the parquet
     * reader must widen to long; the flag is session-global, so it is
-    * saved and RESTORED around each driven query rather than leaking
-    * into whatever the session runs next. */
-  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * scoped to each driven query rather than leaking into whatever the
+    * session runs next. */
+  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A =
+    graft.Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
 
   /** Memory-sink query names are session-global temp views; a
     * monotonic suffix guarantees two invocations in one session never

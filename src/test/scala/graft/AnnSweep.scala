@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** ANN tier-selection sweep — the reproducible measurement behind
@@ -10,19 +10,13 @@ import org.apache.spark.sql.functions._
   * against the exact answer UNDER THAT TIER'S OWN METRIC (cosine for
   * LSH/IVF, L2 for the PQ family — conflating metric mismatch with
   * tier error would misstate recall). Run:
-  *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.AnnSweep"
+  *   SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.AnnSweep"
   * Prints one markdown row per configuration.
   */
 object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Similarity
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.graph.GraphBuild
 import graft.ml.InteractionModel
-import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,11 +12,7 @@ import org.apache.spark.sql.types._
   */
 object MlBisect {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("ml-bisect")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Session.build(32)
     spark.sparkContext.setLogLevel("WARN")
 
     val bset = "/root/reference/data/BenchmarkingSet"

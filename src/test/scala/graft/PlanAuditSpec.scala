@@ -293,20 +293,16 @@ class PlanAuditSpec extends SparkSpec {
     // data the window rewrites away entirely; at this spec's tiny sf
     // the size threshold deliberately keeps the stock plan, so the
     // law here is "forcing the threshold down removes the window"
-    locally {
-      val key = "spark.graft.globalrank.minbytes"
-      spark.conf.set(key, "1")
-      try {
-        val forced = SparkEntry.queries("q265_global_rank_sql")(spark, sf)
-          .queryExecution.optimizedPlan
-          .collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-        // the rewrite's own offset window over the per-pid Aggregate
-        // (≤ shuffle-partitions rows) is the only one allowed to stay
-        forced.foreach { w =>
-          assert(w.child.collectFirst { case a: Aggregate => a }.isDefined,
-            "GlobalRankWindowRule did not rewrite q265's data-sized window")
-        }
-      } finally spark.conf.unset(key)
+    Session.withConf(spark, "spark.graft.globalrank.minbytes" -> "1") {
+      val forced = SparkEntry.queries("q265_global_rank_sql")(spark, sf)
+        .queryExecution.optimizedPlan
+        .collect { case w: LWindow if w.partitionSpec.isEmpty => w }
+      // the rewrite's own offset window over the per-pid Aggregate
+      // (≤ shuffle-partitions rows) is the only one allowed to stay
+      forced.foreach { w =>
+        assert(w.child.collectFirst { case a: Aggregate => a }.isDefined,
+          "GlobalRankWindowRule did not rewrite q265's data-sized window")
+      }
     }
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     for (name <- SparkEntry.queries.keys.toSeq.sorted

@@ -1,27 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer tool: dump `.explain("formatted")` for selected gate
   * queries to files — the optimization-round evidence trail
   * (`plans/rNN/<query>_{before,after}.txt`). Selection via
   * SPARK_GRAFT_ONLY (comma-separated prefixes, like Verify); the
   * output directory and filename suffix come from args:
-  * `runMain graft.PlanDump plans/r13 before`. */
+  * `Test/runMain graft.PlanDump plans/r13 before`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "plans/r13"
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.specs

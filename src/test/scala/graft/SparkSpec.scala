@@ -49,16 +49,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // 8 threads whatever the host: every suite's partitioning assumes it
+    val s = Session.build(8, "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -24,13 +24,11 @@ class TablesSpec extends SparkSpec {
   }
 
   test("the footer schema of events equals Spark's under both nanosAsLong settings") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val saved = spark.conf.getOption(key)
-    try for (v <- Seq("true", "false")) {
-      spark.conf.set(key, v)
-      val p = s"$sf/events.parquet"
-      assert(operators.MetaIO.footerSchema(spark, p) == spark.read.parquet(p).schema,
-        s"nanosAsLong=$v")
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    for (v <- Seq("true", "false"))
+      Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> v) {
+        val p = s"$sf/events.parquet"
+        assert(operators.MetaIO.footerSchema(spark, p) == spark.read.parquet(p).schema,
+          s"nanosAsLong=$v")
+      }
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,20 +48,14 @@ class SuperstepSpec extends SparkSpec {
       "alphaExactScaled" -> (i => GraphAnalytics.alphaExactScaled(unw, 0.1, i)),
       "pprExactScaled" -> (i => GraphAnalytics.pprExactScaled(unw, 0.85, i)),
       "powerExactScaled" -> (i => GraphAnalytics.powerExactScaled(unw, 0.1, i)))
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val savedThreshold = spark.conf.get(threshold)
-    spark.conf.set(threshold, "-1")
-    try {
+    try Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val counts = kernels.map { case (name, run) =>
         (name, jobsOf(run(2).collect())._2.size, jobsOf(run(6).collect())._2.size)
       }
       val grown = counts.filter { case (_, two, six) => two == 0 || two != six }
       assert(grown.isEmpty, grown.map { case (n, two, six) =>
         s"$n: iters=2 → $two jobs, iters=6 → $six" }.mkString("; "))
-    } finally {
-      spark.conf.set(threshold, savedThreshold)
-      g.unpersist(); dir.unpersist()
-    }
+    } finally { g.unpersist(); dir.unpersist() }
   }
 
   /** Rounds of [[GraphAnalytics.pageRankAndComponentsDF]]'s component

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Round-14 scale-conditional redistribution laws (r13 verdict item 2
@@ -9,16 +9,6 @@ import org.apache.spark.sql.functions._
   * NOT fire for inputs whose statistics already show full scan
   * parallelism, and must decide WITHOUT executing the plan. */
 class SpreadSpec extends SparkSpec {
-
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("Spread fires on a small input and no-ops on a statistically wide one") {
     import spark.implicits._
@@ -29,7 +19,7 @@ class SpreadSpec extends SparkSpec {
       "Spread must redistribute a tiny input")
     // wide: shrink maxPartitionBytes so the same table's statistics
     // clear np × maxPartitionBytes — the 100 TB case in miniature
-    withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+    Session.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "1") {
       val noop = Spread(small)
       assert(!noop.queryExecution.optimizedPlan.toString.contains("Repartition"),
         "Spread must not add a Repartition when the input already scans wide")
@@ -56,14 +46,14 @@ class SpreadSpec extends SparkSpec {
     val smallPlan = spark.sql(sql).queryExecution.optimizedPlan.toString
     assert(smallPlan.contains("Repartition"),
       "gate-scale inputs must keep the round-13 pre-explode redistribution")
-    withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+    Session.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "1") {
       val widePlan = spark.sql(sql).queryExecution.optimizedPlan.toString
       assert(!widePlan.contains("Repartition"),
         "an already-wide input must not be down-partitioned by the rewrite")
       // result identical either way — the Repartition is placement only
     }
     val a = spark.sql(sql).collect().map(_.toString).sorted
-    val b = withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+    val b = Session.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "1") {
       spark.sql(sql).collect().map(_.toString).sorted
     }
     assert(a.sameElements(b), "Repartition gating changed the join result")

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 
 /** FuzzyLevJoinRule: rewrite behavior (fires on no-equi levenshtein
   * joins, preserves exact multiset semantics including duplicate
@@ -33,13 +33,12 @@ class FuzzyJoinSpec extends SparkSpec {
       assert(!phys.contains("BroadcastNestedLoopJoin") &&
         !phys.contains("CartesianProduct"), s"k=$k not rewritten:\n$phys")
       assert(phys.contains("deletion_variants"), phys)
-      val expect = try {
-        spark.conf.set("spark.graft.fuzzyjoin.enabled", "false")
+      val expect = Session.withConf(spark, "spark.graft.fuzzyjoin.enabled" -> "false") {
         val off = spark.sql(q)
         assert(!off.queryExecution.executedPlan.toString
           .contains("deletion_variants"))
         off.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      } finally spark.conf.set("spark.graft.fuzzyjoin.enabled", "true")
+      }
       val got = on.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(got == expect, s"k=$k")
       // duplicate left rows produce duplicate pairs, exactly once each
@@ -118,11 +117,10 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(shuffled.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
       Set(("kitten", 10L), ("abc", 11L)))
     // the old decline behavior stays available behind the conf
-    try {
-      spark.conf.set("spark.graft.fuzzyjoin.shuffledchildren", "false")
+    Session.withConf(spark, "spark.graft.fuzzyjoin.shuffledchildren" -> "false") {
       assert(!spark.sql(shuffledSql).queryExecution.optimizedPlan.toString
         .contains("deletion_variants"))
-    } finally spark.conf.set("spark.graft.fuzzyjoin.shuffledchildren", "true")
+    }
   }
 
   /** The shuffled-child multiset law (round-9 verdict ask #8): with
@@ -146,10 +144,9 @@ class FuzzyJoinSpec extends SparkSpec {
       rows.map(r => (r.getString(0), r.getString(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
     val got = multiset(on.collect())
-    val want = try {
-      spark.conf.set("spark.graft.fuzzyjoin.enabled", "false")
+    val want = Session.withConf(spark, "spark.graft.fuzzyjoin.enabled" -> "false") {
       multiset(spark.sql(q).collect())
-    } finally spark.conf.set("spark.graft.fuzzyjoin.enabled", "true")
+    }
     assert(got == want, s"multiset diverged: $got vs $want")
     assert(got(("kitten", "mitten")) == 6)
   }
@@ -178,10 +175,9 @@ class FuzzyJoinSpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
     val got = multiset(on.collect())
-    val want = try {
-      spark.conf.set("spark.graft.fuzzyjoin.enabled", "false")
+    val want = Session.withConf(spark, "spark.graft.fuzzyjoin.enabled" -> "false") {
       multiset(spark.sql(q).collect())
-    } finally spark.conf.set("spark.graft.fuzzyjoin.enabled", "true")
+    }
     assert(got == want, s"k=2 multiset diverged: $got vs $want")
     // kitten→bitter is 2 substitutions: found ONLY via the aligned
     // (2,2) channel, exactly once per duplicate left row
@@ -200,10 +196,9 @@ class FuzzyJoinSpec extends SparkSpec {
       rows.map(r => (r.getString(0), r.getString(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
     val got2 = multisetS(on2.collect())
-    val want2 = try {
-      spark.conf.set("spark.graft.fuzzyjoin.enabled", "false")
+    val want2 = Session.withConf(spark, "spark.graft.fuzzyjoin.enabled" -> "false") {
       multisetS(spark.sql(q2).collect())
-    } finally spark.conf.set("spark.graft.fuzzyjoin.enabled", "true")
+    }
     assert(got2 == want2, s"k=2 shuffled multiset diverged: $got2 vs $want2")
     assert(got2(("kitten", "bitten")) == 6)
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** GlobalRankWindowRule: plain-SQL unpartitioned rank windows over
@@ -9,15 +9,8 @@ import org.apache.spark.sql.functions._
   * sub-threshold inputs and non-rank windows keep the stock plan. */
 class GlobalRankWindowSpec extends SparkSpec {
 
-  private def withMinBytes[A](n: Long)(body: => A): A = {
-    val key = "spark.graft.globalrank.minbytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private val anySize = "spark.graft.globalrank.minbytes" -> "1"
+  private val ruleOff = "spark.graft.globalrank.enabled" -> "false"
 
   private def fixture = {
     import spark.implicits._
@@ -33,7 +26,7 @@ class GlobalRankWindowSpec extends SparkSpec {
               |  percent_rank() OVER (ORDER BY a, b) AS pr,
               |  ntile(7) OVER (ORDER BY a, b) AS nt
               |FROM grw_t""".stripMargin
-    val (got, gotPlan) = withMinBytes(1L) {
+    val (got, gotPlan) = Session.withConf(spark, anySize) {
       val df = spark.sql(q)
       (df.collect(), df.queryExecution.executedPlan.toString)
     }
@@ -58,12 +51,11 @@ class GlobalRankWindowSpec extends SparkSpec {
     assert(reused >= 1,
       "stats branch did not reuse the rank branch's range shuffle:\n" +
         finalPlan.take(3000))
-    val want = try {
-      spark.conf.set("spark.graft.globalrank.enabled", "false")
+    val want = Session.withConf(spark, ruleOff) {
       val off = spark.sql(q)
       assert(!off.queryExecution.executedPlan.toString.contains("__gr_pid"))
       off.collect()
-    } finally spark.conf.set("spark.graft.globalrank.enabled", "true")
+    }
     // ties make positional columns (rn, nt) per-row arbitrary; the
     // full-row MULTISETS must match (what the oracle compare hashes),
     // and the tie-aware columns (rk, pr) must match per (a, b) key
@@ -83,15 +75,14 @@ class GlobalRankWindowSpec extends SparkSpec {
       val df = (1 to n).toDF("v")
       df.createOrReplaceTempView("grw_s")
       val q = s"SELECT v, ntile($k) OVER (ORDER BY v) AS t FROM grw_s"
-      val got = withMinBytes(1L) {
+      val got = Session.withConf(spark, anySize) {
         val d = spark.sql(q)
         assert(d.queryExecution.executedPlan.toString.contains("__gr_pid"))
         d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
       }
-      val want = try {
-        spark.conf.set("spark.graft.globalrank.enabled", "false")
+      val want = Session.withConf(spark, ruleOff) {
         spark.sql(q).collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-      } finally spark.conf.set("spark.graft.globalrank.enabled", "true")
+      }
       assert(got == want, s"n=$n k=$k")
     }
   }
@@ -103,11 +94,11 @@ class GlobalRankWindowSpec extends SparkSpec {
       "SELECT a, row_number() OVER (ORDER BY a, b) AS rn FROM grw_t")
     assert(!small.queryExecution.executedPlan.toString.contains("__gr_pid"))
     // an aggregate window function is not rank-family → no rewrite
-    val agg = withMinBytes(1L) { spark.sql(
+    val agg = Session.withConf(spark, anySize) { spark.sql(
       "SELECT a, sum(b) OVER (ORDER BY a, b) AS s FROM grw_t") }
     assert(!agg.queryExecution.executedPlan.toString.contains("__gr_pid"))
     // PARTITION BY present → already parallel, no rewrite
-    val part = withMinBytes(1L) { spark.sql(
+    val part = Session.withConf(spark, anySize) { spark.sql(
       "SELECT a, row_number() OVER (PARTITION BY a ORDER BY b, id) AS rn FROM grw_t") }
     assert(!part.queryExecution.executedPlan.toString.contains("__gr_pid"))
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 
 /** Binned range join: operator semantics vs the naive theta-join, and
   * the optimizer rule's rewrite behavior (fires on no-equi BETWEEN
@@ -46,12 +46,11 @@ class RangeJoinSpec extends SparkSpec {
     assert(!phys.contains("BroadcastNestedLoopJoin") &&
       !phys.contains("CartesianProduct"), phys)
     assert(phys.contains("Generate"), phys)
-    val expect = try {
-      spark.conf.set("spark.graft.rangejoin.enabled", "false")
+    val expect = Session.withConf(spark, "spark.graft.rangejoin.enabled" -> "false") {
       val off = spark.sql(q)
       assert(!off.queryExecution.executedPlan.toString.contains("Generate"))
       off.collect().toSet
-    } finally spark.conf.set("spark.graft.rangejoin.enabled", "true")
+    }
     assert(on.collect().toSet === expect)
   }
 
@@ -76,11 +75,10 @@ class RangeJoinSpec extends SparkSpec {
       exRule.getMessage)
     // a cap raise (here: binwidth raise) lets the same query run:
     // span/binWidth falls under maxbins when binwidth covers the span
-    val naive = try {
-      spark.conf.set("spark.graft.rangejoin.enabled", "false")
+    val naive = Session.withConf(spark, "spark.graft.rangejoin.enabled" -> "false") {
       spark.sql("SELECT count(*) FROM rj_probe2 JOIN rj_ranges2 " +
         "ON x >= lo AND x <= hi").head().getLong(0)
-    } finally spark.conf.set("spark.graft.rangejoin.enabled", "true")
+    }
     assert(naive === 100L)
   }
 

@@ -10,10 +10,7 @@ package graft.tools
 object ProbeWin {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder
-      .master(s"local[$cpus]").appName("probe")
-      .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
+    val spark = graft.Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     for (n <- names) {
