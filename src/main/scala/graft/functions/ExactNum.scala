@@ -28,14 +28,6 @@ object ExactNum {
     sum(scaled(c, s)) / s.toDouble
   }
 
-  /** Order-independent exact mean, same contract as [[exactSum]].
-    * SQL twin: `sum(CAST(round(x*S,0) AS BIGINT)) / (S.0 * count(x))`
-    */
-  def exactAvg(c: Column, dp: Int): Column = {
-    val s = math.pow(10, dp).toLong
-    sum(scaled(c, s)) / (lit(s.toDouble) * count(c))
-  }
-
   /** Exact sum for integral-valued doubles (e.g. l_quantity). */
   def intSum(c: Column): Column = sum(c.cast("long"))
 }

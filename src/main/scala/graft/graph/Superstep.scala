@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *    under the broadcast threshold is broadcast every superstep,
   *    which at sf0.1 beats shuffling it (q96 3.2 s broadcast vs 5.1 s
   *    with broadcasts off, on 4 cores). The scope still flips the
-  *    shared session conf (ROADMAP F2); only jobs executed inside it
+  *    shared session conf (ROADMAP D6); only jobs executed inside it
   *    see the values, which is why everything a kernel materializes
   *    runs eagerly inside it.
   *  - the single-action chain ([[chain]]) and the one checkpoint

@@ -259,14 +259,6 @@ object AnnIndex {
     fs.delete(prev, true)
   }
 
-  /** [[rebuild]] for a [[buildCosine]] index: the retrain corpus goes
-    * through the same exact-integer normalization. */
-  def rebuildCosine(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCentroids: Int, m: Int, k: Int,
-      refineIters: Int = 1, residual: Boolean = true): Unit =
-    rebuild(normalized(corpus, idCol, vecCol), idCol, vecCol, dir,
-      nCentroids, m, k, refineIters, residual)
-
   /** Drift statistic for FROZEN-MODEL appends (round-10 verdict ask
     * #4): both indexes deliberately never retrain on append — correct
     * and law-pinned, but nothing measured when appended data had

@@ -194,20 +194,12 @@ object Dedup {
     * cannot blow it up, because candidates come from LSH banding
     * ([[lshCandidatePairs]] / [[simhashNearDups]]), not from the block.
     *
-    * @param candidates (d1, d2) pairs to verify exactly
-    * @param shingleK   shingle width — use the same k the signatures
-    *                   were built with so the verified measure matches
-    *                   the estimated one */
-  def jaccardVerifyCandidates(docs: DataFrame, idCol: String, textCol: String,
-      candidates: DataFrame, shingleK: Int = 1,
-      minJaccard: Double = 0.0): DataFrame =
-    jaccardVerifyCandidatesTokens(
-      shingleTokens(docs, idCol, textCol, shingleK), candidates, minJaccard)
-
-  /** [[jaccardVerifyCandidates]] over a pre-built (doc_id, tok) table
-    * — pass a cached one: this plan reads it three times (sizes, d1
-    * fan-out, d2 intersect), so an uncached token table is exploded
-    * three times. */
+    * `tok` is the (doc_id, tok) table of [[shingleTokens]], built with
+    * the same shingle width as the signatures so the verified measure
+    * matches the estimated one — pass a cached one: this plan reads it
+    * three times (sizes, d1 fan-out, d2 intersect), so an uncached
+    * token table is exploded three times. `candidates` holds the
+    * (d1, d2) pairs to verify exactly. */
   def jaccardVerifyCandidatesTokens(tok: DataFrame, candidates: DataFrame,
       minJaccard: Double = 0.0): DataFrame = {
     val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -489,20 +481,6 @@ object Dedup {
         (col("n_inter") * lit(1.0) / col("n1")).as("containment"))
       .where(col("containment") >= minContainment)
   }
-
-  /** Regime dispatcher for the cross-set containment join — the
-    * [[jaccardPairsAcross]] crossover applied to containment, with the
-    * same exact-probe fallback (over-cap vocabularies take the sparse
-    * path instead of aborting). */
-  def containmentPairsAcross(tokProbe: DataFrame, tokCorpus: DataFrame,
-      minContainment: Double, bitmapMaxVocab: Int = 4096): DataFrame =
-    tokenVocab(tokProbe.select("tok").unionByName(tokCorpus.select("tok")),
-        bitmapMaxVocab) match {
-      case Some(vocab) =>
-        containmentPairsFromMasks(tokenMasks(tokProbe, vocab),
-          tokenMasks(tokCorpus, vocab), minContainment)
-      case None => containmentPairsAcrossTokens(tokProbe, tokCorpus, minContainment)
-    }
 
   /** Cross-set CONTAINMENT join: every (probe doc, corpus doc) pair
     * with |T_probe ∩ T_corpus| / |T_probe| ≥ t — the asymmetric

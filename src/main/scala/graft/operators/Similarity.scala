@@ -168,13 +168,6 @@ object Similarity {
   private[graft] def nearestCentroid(v: Column, cents: Array[(Int, Array[Double])]): Column =
     graft.functions.AnnCodec.nearestCentroidCosine(v, cents)
 
-  /** The composed form [[nearestCentroid]] replaced — law twin. */
-  private[graft] def nearestCentroidComposed(v: Column,
-      cents: Array[(Int, Array[Double])]): Column =
-    array_max(transform(centroidsLit(cents),
-      c => struct(cosine(v, c.getField("vec")).as("score"),
-        c.getField("cid").as("cid")))).getField("cid")
-
   /** The composed query-side top-nProbe expansion
     * [[graft.functions.AnnCodec.topNCentroidsCosine]] replaced — law
     * twin (AnnCodecSpec pins bit-equality including tie order). Each

@@ -458,20 +458,32 @@ object Sketches {
       levels: Int, k: Int, percents: Seq[Int]): DataFrame = {
     require(levels >= 1 && levels <= 40 && k >= 1 && percents.nonEmpty &&
       percents.forall(p => p >= 0 && p <= 100), "percents in 0..100")
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
+    val nDf = df.select(valueCol.cast("long").as("v")).where(col("v").isNotNull)
+      .agg(count(lit(1)).as("n"))
+    qdigestFromCounts(qdigestCounts(df, Nil, valueCol, loVal, levels), nDf,
+      loVal, levels, k, percents)
+  }
+
+  /** The all-level q-digest node-count table (keys…, lvl, id, cnt):
+    * each non-null value's leaf (its offset from `loVal`, clamped into
+    * [0, 2^levels)) and every ancestor of it, counted in ONE
+    * explode(levels+1) + groupBy pass; lvl `levels` is the root.
+    * `keys` must be named columns. The batch sketches build their
+    * counts here and so does the stream-maintained form
+    * ([[graft.streaming.StreamOps.runQdigestStream]], whose
+    * Complete-mode state IS this table), so batch and stream counts
+    * agree by construction. */
+  def qdigestCounts(df: DataFrame, keys: Seq[Column], valueCol: Column,
+      loVal: Long, levels: Int): DataFrame = {
     val U = 1L << levels
-    val v = df.select(valueCol.cast("long").as("v")).where(col("v").isNotNull)
-      .select(least(lit(U - 1), greatest(lit(0L), col("v") - loVal)).as("leaf"))
-    val nDf = v.agg(count(lit(1)).as("n"))
-    // node counts at all levels in one pass; lvl `levels` is the root
-    val counts = v
-      .select(explode(expr(s"transform(sequence(0, $levels), " +
-        "l -> named_struct('lvl', l, 'id', shiftright(leaf, l)))")).as("nd"))
-      .groupBy(col("nd.lvl").as("lvl"), col("nd.id").as("id"))
+    val v = df.select(keys :+ valueCol.cast("long").as("v"): _*)
+      .where(col("v").isNotNull)
+    val ks = v.columns.toSeq.init.map(col)
+    v.select(ks :+ least(lit(U - 1), greatest(lit(0L), col("v") - loVal)).as("leaf"): _*)
+      .select(ks :+ explode(expr(s"transform(sequence(0, $levels), " +
+        "l -> named_struct('lvl', l, 'id', shiftright(leaf, l)))")).as("nd"): _*)
+      .groupBy(ks ++ Seq(col("nd.lvl").as("lvl"), col("nd.id").as("id")): _*)
       .agg(count(lit(1)).as("cnt"))
-    qdigestFromCounts(counts, nDf, loVal, levels, k, percents)
   }
 
   /** Compression + quantile read over an all-level node-count table —
@@ -528,21 +540,11 @@ object Sketches {
       loVal: Long, levels: Int, k: Int, percents: Seq[Int]): DataFrame = {
     require(levels >= 1 && levels <= 40 && k >= 1 && percents.nonEmpty &&
       percents.forall(p => p >= 0 && p <= 100), "percents in 0..100")
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val U = 1L << levels
-    val v = df.select(col(keyCol).as("grp"), valueCol.cast("long").as("v"))
-      .where(col("v").isNotNull)
-      .select(col("grp"),
-        least(lit(U - 1), greatest(lit(0L), col("v") - loVal)).as("leaf"))
-    val nDf = v.groupBy("grp").agg(count(lit(1)).as("n"))
-    val counts = v
-      .select(col("grp"), explode(expr(s"transform(sequence(0, $levels), " +
-        "l -> named_struct('lvl', l, 'id', shiftright(leaf, l)))")).as("nd"))
-      .groupBy(col("grp"), col("nd.lvl").as("lvl"), col("nd.id").as("id"))
-      .agg(count(lit(1)).as("cnt"))
-    qdigestFromCountsByKey(counts, nDf, loVal, levels, k, percents)
+    val nDf = df.select(col(keyCol).as("grp"), valueCol.cast("long").as("v"))
+      .where(col("v").isNotNull).groupBy("grp").agg(count(lit(1)).as("n"))
+    qdigestFromCountsByKey(
+      qdigestCounts(df, Seq(col(keyCol).as("grp")), valueCol, loVal, levels),
+      nDf, loVal, levels, k, percents)
   }
 
   /** Per-key compression + quantile read over a grouped all-level

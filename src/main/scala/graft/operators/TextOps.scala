@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale corpus pipelines: token
-  * counting, quality scoring, language-ID heuristics, fingerprinting.
+  * counting, quality signals, fingerprinting, chunking.
   *
   * All pure `Column` compositions over built-in functions — fully
   * codegen'd, no UDFs, so they stay inside WholeStageCodegen spans and
@@ -42,23 +42,13 @@ object TextOps {
   /** Distinct word k-shingles of the lowercased text ("_"-joined).
     * Sub-k-token texts yield one clamped short shingle (the slice
     * stops at the array end) — mirrorable in SQL via clamped list
-    * slicing. Shared by the dedup family and the repetition signal. */
+    * slicing. Shared by the dedup family and the corpus profile gates. */
   def wordShingles(text: Column, k: Int): Column =
     // native one-pass expression — the built-in chain
     // (array_distinct ∘ transform ∘ slice ∘ filter) is three
     // interpreted higher-order functions and dominated every shingle
     // consumer; value-identical (WordShingles scaladoc + DedupSpec)
     graft.functions.WordShingles(text, k)
-
-  /** Gopher-style repetition signal: the fraction of k-gram positions
-    * occupied by repeats, 1 − distinct/total. Total positions =
-    * max(n−k+1, 1 if n>0) to match the clamped shingle. */
-  def repetitionRatio(text: Column, k: Int): Column = {
-    val n = tokenCount(text)
-    val total = greatest(n - (k - 1), least(n, lit(1L)))
-    val distinctK = size(wordShingles(text, k)).cast("long")
-    lit(1.0) - distinctK.cast("double") / total
-  }
 
   /** Count of ASCII punctuation characters. */
   def punctCount(text: Column): Column =
@@ -72,31 +62,11 @@ object TextOps {
   val EnglishStopwords: Seq[String] =
     Seq("the", "and", "of", "to", "in", "is", "a", "that", "it", "for")
 
-  /** Length/punctuation/stopword quality score in [0,1]-ish range:
-    * mean of three bounded signals (doc long enough, not
-    * punctuation-heavy, has stopwords). Mirrors the heuristic-filter
-    * stage of public LLM-data pipelines (C4-style). */
-  def qualityScore(text: Column, nChars: Column): Column = {
-    val toks = tokenCount(text)
-    val lenSignal   = least(nChars.cast("double") / 200.0, lit(1.0))
-    val punctSignal = lit(1.0) - least(punctCount(text).cast("double") /
-      greatest(toks, lit(1L)).cast("double"), lit(1.0))
-    val stopSignal  = least(stopwordCount(text, EnglishStopwords).cast("double") * 5.0 /
-      greatest(toks, lit(1L)).cast("double"), lit(1.0))
-    (lenSignal + punctSignal + stopSignal) / 3.0
-  }
-
   /** Order-insensitive content fingerprint: md5 over the sorted
     * distinct token set. Two docs with identical vocabulary collide —
     * the cheap "bag-of-words duplicate" key. */
   def vocabFingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
-
-  /** Simple n-gram language scorer: fraction of tokens that are
-    * markers of `lang`. Callers pick argmax across languages. */
-  def stopwordRatio(text: Column, markers: Seq[String]): Column =
-    stopwordCount(text, markers).cast("double") /
-      greatest(tokenCount(text), lit(1L)).cast("double")
 
   /** PII redaction (beyond-reference, training-data pipelines): mask
     * email addresses and long digit runs (phone/account/SSN shapes)

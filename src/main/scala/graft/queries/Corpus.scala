@@ -52,7 +52,7 @@ object Corpus {
     }
 
   /** LSH banded candidate pairs off [[sig16k2]] — memoized; also fixes
-    * the double-traversal of `cand` inside jaccardVerifyCandidates. */
+    * the double-traversal of `cand` inside jaccardVerifyCandidatesTokens. */
   private def cand44(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.Memo.df(s, "lshCand.4.4", d) {
       Dedup.lshCandidatePairs(sig16k2(s, d), bands = 4, rowsPerBand = 4)

@@ -208,13 +208,6 @@ object ZoneMap {
     spark.createDataFrame(rows, schema)
   }
 
-  /** Write a sidecar for an explicit file list at an explicit
-    * location (for subdirectory layouts). */
-  private[graft] def writeFilesAt(spark: SparkSession, sidecarPath: String,
-      files: Seq[(String, String)], cols: Seq[String]): Unit =
-    harvestFiles(spark, files, cols).coalesce(1)
-      .write.mode("overwrite").parquet(sidecarPath)
-
   /** Harvest and persist the sidecar at `path/_zonemap` (the `_`
     * prefix hides it from every scan of `path`). Call once after the
     * layout write; re-call after rewriting files. */

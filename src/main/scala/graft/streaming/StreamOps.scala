@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.MetaIO
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY
   * §2.12), so this layer is green-field Spark design: the same event
@@ -17,32 +18,73 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  /** Stateful streaming ops open one state store per shuffle
-    * partition per stateful operator, and store open/commit overhead
-    * dominates small micro-batches: measured at sf0.1, the
-    * stream-stream join is 8.5 s at 32 partitions vs 2.6 s at 4.
-    * Size the partition count to state VOLUME (throughput × horizon),
-    * not core count — for the gate's bounded inputs that is small;
-    * a 100 TB/day feed raises it back. Restores the session conf
-    * after the query (shuffle partitions are locked in at stream
-    * start, so the scope covers exactly one streaming query). */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A =
-    graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** The bounded gate inputs carry nanos timestamps that the parquet
-    * reader must widen to long; the flag is session-global, so it is
-    * scoped to each driven query rather than leaking into whatever the
-    * session runs next. */
-  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A =
-    graft.Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
+  /** The one file of a gate table dir that the event streams read. */
+  private val Events = Some("events.parquet")
+
+  /** Streaming parquet source over `dir`, under its footer schema.
+    * With `file`, only that file of the table dir streams (the events
+    * table, one micro-batch); without, every file under `dir` is its
+    * own micro-batch, in arrival order (the ingest streams' splits).
+    * The gate inputs carry nanos timestamps that the reader widens to
+    * long, so build it inside a [[drain]] or [[availableNow]] body:
+    * both scope `nanosAsLong`, which the footer schema reads too. */
+  private def source(spark: SparkSession, dir: String,
+      file: Option[String] = None): DataFrame = {
+    val r = spark.readStream
+      .schema(MetaIO.footerSchema(spark, file.fold(dir)(f => s"$dir/$f")))
+    file.fold(r.option("maxFilesPerTrigger", 1))(r.option("pathGlobFilter", _))
+      .parquet(dir)
+  }
 
   /** Memory-sink query names are session-global temp views; a
     * monotonic suffix guarantees two invocations in one session never
     * collide with each other's still-registered table (an identity
     * hash of the schema — the previous scheme — can). */
   private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def sinkName(prefix: String): String =
-    s"${prefix}_${sinkSeq.incrementAndGet()}"
+
+  /** Drives the stream `df` over its bounded input to completion into
+    * a memory sink and returns the sink's table. `df` is built inside
+    * the conf scope, and the scope covers start, run and stop, also
+    * when the stream fails (shuffle partitions are locked in at stream
+    * start, so the scope covers exactly one streaming query).
+    *
+    * Stateful streaming ops open one state store per shuffle
+    * partition per stateful operator, and store open/commit overhead
+    * dominates small micro-batches: measured at sf0.1, the
+    * stream-stream join is 8.5 s at 32 partitions vs 2.6 s at 4.
+    * Size the partition count to state VOLUME (throughput × horizon),
+    * not core count — for the gate's bounded inputs that is small;
+    * a 100 TB/day feed raises it back. */
+  private[graft] def drain(spark: SparkSession, mode: OutputMode,
+      prefix: String)(df: => DataFrame): DataFrame = {
+    val name = s"${prefix}_${sinkSeq.incrementAndGet()}"
+    graft.Session.withConf(spark, NanosAsLong,
+        "spark.sql.shuffle.partitions" -> "8") {
+      val q = df.writeStream.outputMode(mode)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    spark.table(name)
+  }
+
+  /** Runs the stream `df` with the AvailableNow trigger: it drains the
+    * backlog in micro-batches, commits source offsets to the
+    * `checkpointDir` WAL, then stops. The same job is a backfill when
+    * pointed at history and an incremental run on a schedule; offsets
+    * carry over either way. `sink` picks where the batches go (a
+    * `foreachBatch` body, or a file sink). Only `nanosAsLong` is
+    * scoped: a `foreachBatch` body runs in the stream's cloned
+    * session, which copies the conf at start, so a partition scope
+    * here would set the shuffle width of every merge the body runs. */
+  private def availableNow(spark: SparkSession, checkpointDir: String,
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])(
+      df: => DataFrame): Unit =
+    graft.Session.withConf(spark, NanosAsLong) {
+      sink(df.writeStream.option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())).start().awaitTermination()
+    }
 
   /** Tumbling-window per-type aggregate; works on batch AND streaming
     * DataFrames (same plan, different sink semantics). */
@@ -57,22 +99,13 @@ object StreamOps {
   /** Streaming variant with watermarking, driven to completion against
     * bounded input via a memory sink; returns the result table. */
   def runWindowedStream(spark: SparkSession, dir: String,
-      windowLen: String = "1 hour"): DataFrame = withNanosAsLong(spark) {
-    // nanos-as-long + micros conversion, matching Tables.events
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    // file-stream source wants a directory; glob-filter to the events file
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
-    val agg = windowedCounts(stream.withWatermark("ts", "1 hour"), windowLen)
-    val name = sinkName("windowed")
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      windowLen: String = "1 hour"): DataFrame =
+    drain(spark, OutputMode.Complete(), "windowed") {
+      // micros conversion, matching Tables.events
+      windowedCounts(source(spark, dir, Events)
+        .transform(graft.Tables.normalizeEventTs)
+        .withWatermark("ts", "1 hour"), windowLen)
     }
-    spark.table(name)
-  }
 
   /** Event-time attribution join, batch twin: `to`-type events that
     * happen within `horizonMinutes` AFTER a `from`-type event by the
@@ -101,30 +134,22 @@ object StreamOps {
     * via a memory sink; parity with [[attributionJoinBatch]] is the
     * gate's oracle. */
   def attributionJoinStream(spark: SparkSession, dir: String,
-      fromType: String, toType: String, horizonMinutes: Int): DataFrame = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    def source = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
-    val a = source.filter(col("event_type") === fromType)
-      .select(col("event_id").as("from_id"), col("user_id"), col("ts").as("from_ts"))
-      .withWatermark("from_ts", "1 hour")
-    val b = source.filter(col("event_type") === toType)
-      .select(col("event_id").as("to_id"), col("user_id").as("to_user"),
-        col("ts").as("to_ts"))
-      .withWatermark("to_ts", "1 hour")
-    val joined = a.join(b, col("user_id") === col("to_user") &&
-        col("to_ts") >= col("from_ts") &&
-        col("to_ts") <= col("from_ts") + expr(s"INTERVAL $horizonMinutes MINUTES"))
-      .select(col("from_id"), col("user_id"), col("from_ts"), col("to_id"), col("to_ts"))
-    val name = sinkName("attrib")
-    withStatePartitions(spark, 8) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      fromType: String, toType: String, horizonMinutes: Int): DataFrame =
+    drain(spark, OutputMode.Append(), "attrib") {
+      def events = source(spark, dir, Events)
+        .transform(graft.Tables.normalizeEventTs)
+      val a = events.filter(col("event_type") === fromType)
+        .select(col("event_id").as("from_id"), col("user_id"), col("ts").as("from_ts"))
+        .withWatermark("from_ts", "1 hour")
+      val b = events.filter(col("event_type") === toType)
+        .select(col("event_id").as("to_id"), col("user_id").as("to_user"),
+          col("ts").as("to_ts"))
+        .withWatermark("to_ts", "1 hour")
+      a.join(b, col("user_id") === col("to_user") &&
+          col("to_ts") >= col("from_ts") &&
+          col("to_ts") <= col("from_ts") + expr(s"INTERVAL $horizonMinutes MINUTES"))
+        .select(col("from_id"), col("user_id"), col("from_ts"), col("to_id"), col("to_ts"))
     }
-    spark.table(name)
-  }
 
   /** Checkpointed continuous ingestion to a parquet FILE sink — the
     * production landing path (the memory sinks elsewhere in this file
@@ -132,26 +157,22 @@ object StreamOps {
     * offsets commit to the checkpoint WAL and the file sink records
     * committed files in its own `_spark_metadata` log, so a crashed
     * or restarted job re-emits nothing and readers never see partial
-    * batches. `Trigger.AvailableNow` drains the backlog then stops —
-    * the same job is a backfill when pointed at history and an
-    * incremental ingester when run on a schedule; state/offsets carry
-    * over either way. Returns the number of NEW rows this run landed
-    * (0 on an idempotent re-run over unchanged input). */
+    * batches. Driven by [[availableNow]]. Returns the number of NEW
+    * rows this run landed (0 on an idempotent re-run over unchanged
+    * input). */
   def runIngestToParquet(spark: SparkSession, dir: String, outDir: String,
-      checkpointDir: String): Long = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
+      checkpointDir: String): Long = {
+    // a first run finds no output dir: probe it through the file
+    // system instead of failing a read
+    val out = new org.apache.hadoop.fs.Path(outDir)
     def landed(): Long =
-      try spark.read.parquet(outDir).count() catch { case _: Exception => 0L }
+      if (!out.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(out)) 0L
+      else spark.read.parquet(outDir).count()
     val before = landed()
-    val q = stream.writeStream
-      .format("parquet").option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    availableNow(spark, checkpointDir,
+        _.format("parquet").option("path", outDir)) {
+      source(spark, dir, Events).transform(graft.Tables.normalizeEventTs)
+    }
     landed() - before
   }
 
@@ -165,20 +186,12 @@ object StreamOps {
     * the batch build ([[graft.operators.Sketches.countMinCells]]) and
     * replay exactly in an external engine via the md5-slice twin. */
   def runSketchStream(spark: SparkSession, dir: String, d: Int, w: Int,
-      seed: Long): DataFrame = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val cells = graft.operators.Sketches.countMinCells(
-      stream.select(col("user_id")), col("user_id"), d, w, seed)
-    val name = sinkName("sketch")
-    withStatePartitions(spark, 8) {
-      val q = cells.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      seed: Long): DataFrame =
+    drain(spark, OutputMode.Complete(), "sketch") {
+      graft.operators.Sketches.countMinCells(
+        source(spark, dir, Events).select(col("user_id")), col("user_id"),
+        d, w, seed)
     }
-    spark.table(name)
-  }
 
   /** Streaming-maintained fixed-domain histogram ([[graft.operators
     * .Sketches.histogramCells]] over the event stream's cent-scaled
@@ -188,20 +201,11 @@ object StreamOps {
     * cells against the relational rebuild (stream == batch == oracle,
     * cell-for-cell). */
   def runHistogramStream(spark: SparkSession, dir: String, lo: Long,
-      hi: Long, nBuckets: Int): DataFrame = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val cells = graft.operators.Sketches.histogramCells(
-      stream, round(col("value") * 100, 0).cast("long"), lo, hi, nBuckets)
-    val name = sinkName("hist")
-    withStatePartitions(spark, 8) {
-      val q = cells.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      hi: Long, nBuckets: Int): DataFrame =
+    drain(spark, OutputMode.Complete(), "hist") {
+      graft.operators.Sketches.histogramCells(source(spark, dir, Events),
+        round(col("value") * 100, 0).cast("long"), lo, hi, nBuckets)
     }
-    spark.table(name)
-  }
 
   /** Streaming-maintained q-DIGEST node counts ([[graft.operators
     * .Sketches.qdigestQuantiles]]'s state as a Complete-mode
@@ -216,26 +220,11 @@ object StreamOps {
     * stream == batch == oracle, the q251 parity idiom at the q259
     * guarantee. */
   def runQdigestStream(spark: SparkSession, dir: String, loVal: Long,
-      levels: Int, k: Int, percents: Seq[Int]): DataFrame = withNanosAsLong(spark) {
-    val U = 1L << levels
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val cells = stream
-      .select(round(col("value") * 100, 0).cast("long").as("v"))
-      .where(col("v").isNotNull)
-      .select(least(lit(U - 1), greatest(lit(0L), col("v") - loVal)).as("leaf"))
-      .select(explode(expr(s"transform(sequence(0, $levels), " +
-        "l -> named_struct('lvl', l, 'id', shiftright(leaf, l)))")).as("nd"))
-      .groupBy(col("nd.lvl").as("lvl"), col("nd.id").as("id"))
-      .agg(count(lit(1)).as("cnt"))
-    val name = sinkName("qdigest")
-    withStatePartitions(spark, 8) {
-      val q = cells.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      levels: Int, k: Int, percents: Seq[Int]): DataFrame = {
+    val counts = drain(spark, OutputMode.Complete(), "qdigest") {
+      graft.operators.Sketches.qdigestCounts(source(spark, dir, Events), Nil,
+        round(col("value") * 100, 0), loVal, levels)
     }
-    val counts = spark.table(name)
     val nDf = counts.where(col("lvl") === levels)
       .agg(sum(col("cnt")).as("n"))
     graft.operators.Sketches.qdigestFromCounts(
@@ -256,7 +245,7 @@ object StreamOps {
     * cutoffs of bin/CompareSkin.R:55,59. */
   def runQdigestStreamByKey(spark: SparkSession, dir: String,
       keyCol: String, loVal: Long, levels: Int, k: Int,
-      percents: Seq[Int]): DataFrame = withNanosAsLong(spark) {
+      percents: Seq[Int]): DataFrame = {
     val counts = qdigestStreamCountsByKey(spark, dir, keyCol, loVal, levels)
     // per-key n = each key's root count — read from the maintained
     // table itself, no second pass over the stream. Rebuilt as a
@@ -276,35 +265,16 @@ object StreamOps {
     * so the spec can pin stream state == batch count table. */
   private[graft] def qdigestStreamCountsByKey(spark: SparkSession,
       dir: String, keyCol: String, loVal: Long,
-      levels: Int): DataFrame = withNanosAsLong(spark) {
-    val U = 1L << levels
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val cells = stream
-      .select(col(keyCol).as("grp"),
-        round(col("value") * 100, 0).cast("long").as("v"))
-      .where(col("v").isNotNull)
-      .select(col("grp"),
-        least(lit(U - 1), greatest(lit(0L), col("v") - loVal)).as("leaf"))
-      .select(col("grp"),
-        explode(expr(s"transform(sequence(0, $levels), " +
-          "l -> named_struct('lvl', l, 'id', shiftright(leaf, l)))")).as("nd"))
-      .groupBy(col("grp"), col("nd.lvl").as("lvl"), col("nd.id").as("id"))
-      .agg(count(lit(1)).as("cnt"))
-    val name = sinkName("qdigest_bykey")
-    withStatePartitions(spark, 8) {
-      val q = cells.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+      levels: Int): DataFrame =
     // localCheckpoint (sketch-sized table): the per-key read SELF-JOINS
     // the state table on grp (kept ⟕ childMass), and the memory-sink
     // View is not a multi-instance relation — Spark cannot dedup the
     // conflicting grp reference and analysis dies with INTERNAL_ERROR.
     // A LogicalRDD self-join deduplicates fine.
-    spark.table(name).localCheckpoint()
-  }
+    drain(spark, OutputMode.Complete(), "qdigest_bykey") {
+      graft.operators.Sketches.qdigestCounts(source(spark, dir, Events),
+        Seq(col(keyCol).as("grp")), round(col("value") * 100, 0), loVal, levels)
+    }.localCheckpoint()
 
 
   /** STREAM-STATIC enrichment join: the unbounded event stream joined
@@ -315,20 +285,13 @@ object StreamOps {
     * per micro-batch, so at 100 TB/day the stream side never
     * shuffles; cost per batch = batch rows × broadcast probe. Driven
     * to completion over bounded input via a memory sink. */
-  def enrichStream(spark: SparkSession, dir: String): DataFrame = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment")))
-    val joined = stream.join(dim, col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"), col("value"))
-    val name = sinkName("enrich")
-    val q = joined.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+  def enrichStream(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, OutputMode.Append(), "enrich") {
+      val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment")))
+      source(spark, dir, Events).join(dim, col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"), col("value"))
+    }
 
   /** Continuous NEAR-DUP ingest against the persisted signature index
     * — [[graft.operators.DedupIndex]] composed with the streaming
@@ -370,34 +333,18 @@ object StreamOps {
     * joins against the clustered index files, never all-pairs. */
   def runDedupIngestStream(spark: SparkSession, srcDir: String,
       indexDir: String, checkpointDir: String,
-      minJaccard: Double): DataFrame = withNanosAsLong(spark) {
-    import org.apache.spark.sql.DataFrame
-    val schema = MetaIO.footerSchema(spark, srcDir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      minJaccard: Double): DataFrame = {
     val qdir = s"$indexDir/quarantine"
-    val mdir = s"$indexDir/ingested"
-    // index existence + done-batch markers are metadata-sized by
-    // construction — consulted driver-side (MetaIO / FS probe, no
-    // Spark job per micro-batch; round-14, guide §5 — same idiom as
-    // the lakehouse manifests)
-    def indexBuilt(sp: SparkSession): Boolean =
-      graft.operators.DedupIndex.exists(sp, indexDir)
-    def doneBatches(sp: SparkSession): Set[Long] = readMarkers(sp, mdir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    availableNow(spark, checkpointDir, _.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         import sp.implicits._
-        if (!doneBatches(sp).contains(batchId)) {
-          // undo log first: roll back any crashed attempt of THIS
-          // batch, then record the pre-effect inventory the next
-          // replay would restore to
-          beginIngestBatch(sp, indexDir, batchId)
+        exactlyOnce(sp, indexDir, batchId) {
           val tok = batch.select(col("doc_id"), col("tok"))
-          val pairs: DataFrame =
-            if (!indexBuilt(sp)) {
+          // index existence is metadata-sized: an FS probe, no Spark
+          // job per micro-batch (the lakehouse-manifest idiom)
+          val pairs =
+            if (!graft.operators.DedupIndex.exists(sp, indexDir)) {
               graft.operators.DedupIndex.build(tok, indexDir, minJaccard)
               Seq.empty[(Long, Long, Double)].toDF("d1", "d2", "jaccard")
             } else {
@@ -405,19 +352,8 @@ object StreamOps {
             }
           pairs.select(col("d1"), col("d2"), col("jaccard"))
             .write.mode("append").parquet(qdir)
-          // marker: its presence certifies every effect above
-          writeMarker(sp, mdir, batchId)
-          // retire the undo log only once the marker is durable
-          finishIngestBatch(sp, indexDir, batchId)
-        } else {
-          // marked done but the undo log survived a crash between
-          // marker write and retirement — the marker wins
-          finishIngestBatch(sp, indexDir, batchId)
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    })(source(spark, srcDir))
     spark.read.parquet(qdir)
   }
 
@@ -448,46 +384,26 @@ object StreamOps {
     * batch). */
   def runAnnIngestStream(spark: SparkSession, srcDir: String,
       indexDir: String, checkpointDir: String, idCol: String,
-      vecCol: String, nCentroids: Int, m: Int, k: Int): DataFrame =
-    withNanosAsLong(spark) {
-      import org.apache.spark.sql.DataFrame
-      val schema = MetaIO.footerSchema(spark, srcDir)
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val mdir = s"$indexDir/ingested"
-      // _SUCCESS-file existence, not read-and-catch: a crashed build
-      // attempt is rolled back by beginIngestBatch BEFORE this check
-      // (its files — including _SUCCESS — are deleted, though empty
-      // dirs may remain), so the committed-build marker file is the
-      // reliable signal and a missing table never logs a WARN
-      def indexBuilt(sp: SparkSession): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/centroids/_SUCCESS")
-        p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p)
-      }
-      def doneBatches(sp: SparkSession): Set[Long] = readMarkers(sp, mdir)
-      val q = stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val sp = batch.sparkSession
-          if (!doneBatches(sp).contains(batchId)) {
-            beginIngestBatch(sp, indexDir, batchId)
-            if (!indexBuilt(sp))
-              graft.operators.AnnIndex.build(batch, idCol, vecCol,
-                indexDir, nCentroids, m, k)
-            else
-              graft.operators.AnnIndex.append(batch, idCol, vecCol, indexDir)
-            writeMarker(sp, mdir, batchId)
-            finishIngestBatch(sp, indexDir, batchId)
-          } else {
-            finishIngestBatch(sp, indexDir, batchId)
-          }
-          ()
+      vecCol: String, nCentroids: Int, m: Int, k: Int): DataFrame = {
+    // _SUCCESS-file existence, not read-and-catch: a crashed build
+    // attempt is rolled back by the undo log BEFORE this check (its
+    // files — including _SUCCESS — are deleted, though empty dirs may
+    // remain), so the committed-build marker file is the reliable
+    // signal and a missing table never logs a WARN
+    val built = new org.apache.hadoop.fs.Path(s"$indexDir/centroids/_SUCCESS")
+    availableNow(spark, checkpointDir, _.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        val sp = batch.sparkSession
+        exactlyOnce(sp, indexDir, batchId) {
+          if (!built.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(built))
+            graft.operators.AnnIndex.build(batch, idCol, vecCol,
+              indexDir, nCentroids, m, k)
+          else
+            graft.operators.AnnIndex.append(batch, idCol, vecCol, indexDir)
         }
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(mdir)
-    }
+    })(source(spark, srcDir))
+    spark.read.parquet(s"$indexDir/ingested")
+  }
 
   /** Streaming SERVING on the persisted cosine ANN index — the query
     * side of [[runAnnIngestStream]]'s corpus side, completing the
@@ -508,24 +424,16 @@ object StreamOps {
   def runAnnProbeStream(spark: SparkSession, querySrcDir: String,
       corpus: DataFrame, indexDir: String, checkpointDir: String,
       outDir: String, idCol: String, vecCol: String, nProbe: Int, k: Int,
-      shortlist: Int): DataFrame = withNanosAsLong(spark) {
-    import org.apache.spark.sql.DataFrame
-    val schema = MetaIO.footerSchema(spark, querySrcDir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(querySrcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      shortlist: Int): DataFrame = {
+    availableNow(spark, checkpointDir, _.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         graft.operators.AnnIndex.probeCosineReranked(
           batch, corpus, idCol, vecCol, indexDir, nProbe, k, shortlist)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.option("basePath", outDir).parquet(s"$outDir/batch=*")
-      .drop("batch")
+    })(source(spark, querySrcDir))
+    // the parent dir, not a `batch=*` glob: the file-sink metadata
+    // probe stats a glob as a literal path and logs its miss
+    spark.read.parquet(outDir).drop("batch")
   }
 
   /** Streaming CDC apply onto a [[graft.operators.MergeTable]]: each
@@ -560,16 +468,9 @@ object StreamOps {
     * no-op. */
   def runMergeStream(spark: SparkSession, srcDir: String, tableDir: String,
       checkpointDir: String, keyCol: String,
-      opCol: String = "op", mergeOnRead: Boolean = false): DataFrame =
-    withNanosAsLong(spark) {
-    import org.apache.spark.sql.DataFrame
-    val schema = MetaIO.footerSchema(spark, srcDir)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      opCol: String = "op", mergeOnRead: Boolean = false): DataFrame = {
+    availableNow(spark, checkpointDir, _.foreachBatch {
+      (batch: DataFrame, _: Long) =>
         val ups = batch.where(col(opCol) === "u").drop(opCol)
         val del = batch.where(col(opCol) === "d").select(col(keyCol))
         if (mergeOnRead)
@@ -578,17 +479,10 @@ object StreamOps {
         else
           graft.operators.MergeTable.merge(batch.sparkSession, tableDir,
             ups, del)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    })(source(spark, srcDir))
     graft.operators.MergeTable.read(spark, tableDir)
   }
 
-  /** Recursive file inventory of the index dir as root-relative paths;
-    * the `pending/` undo log itself is excluded (it is recovery
-    * metadata, not index state). Hadoop FS API, so the same recovery
-    * works on HDFS/object stores, not just local disk. */
   /** Per-batch done markers, read/written DRIVER-SIDE (MetaIO —
     * guide §5): the old Spark-job form paid a full job to read a
     * handful of marker rows and another (`coalesce(1)` + commit
@@ -601,19 +495,23 @@ object StreamOps {
   private val markerSchema = MetaIO.schemaOf("marker",
     Seq(("batch_id", "long", true)))
 
-  private[graft] def readMarkers(sp: SparkSession, mdir: String): Set[Long] =
+  private def readMarkers(sp: SparkSession, mdir: String): Set[Long] =
     try MetaIO.read(
         sp.sparkContext.hadoopConfiguration,
         new org.apache.hadoop.fs.Path(mdir))
       .map(_("batch_id").asInstanceOf[Long]).toSet
     catch { case _: Exception => Set.empty[Long] }
 
-  private[graft] def writeMarker(sp: SparkSession, mdir: String,
+  private def writeMarker(sp: SparkSession, mdir: String,
       batchId: Long): Unit =
     MetaIO.write(sp.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(s"$mdir/part-batch-$batchId.parquet"),
       markerSchema, Seq(Seq(batchId)))
 
+  /** Recursive file inventory of the index dir as root-relative paths;
+    * the `pending/` undo log itself is excluded (it is recovery
+    * metadata, not index state). Hadoop FS API, so the same recovery
+    * works on HDFS/object stores, not just local disk. */
   private def indexInventory(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Set[String] = {
     if (!fs.exists(root)) return Set.empty
@@ -661,14 +559,24 @@ object StreamOps {
     require(fs.rename(tmp, pend), s"could not publish undo log $pend")
   }
 
-  /** Post-marker half: retire the undo log. Crash before this leaves
-    * a stale log next to a durable marker; the replay's marked-done
-    * branch just deletes it (the marker is authoritative). */
-  private[graft] def finishIngestBatch(sp: SparkSession, indexDir: String,
-      batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root, s"pending/batch-$batchId"), false)
+  /** The exactly-once bracket around one micro-batch's `effects` on
+    * the index at `indexDir`. A batch whose done marker exists is
+    * skipped whole. Otherwise [[beginIngestBatch]] rolls back any
+    * crashed attempt of THIS batch and records the pre-effect
+    * inventory, the effects run, and the marker certifies them. The
+    * undo log is retired last, only once the marker is durable; a
+    * crash before that leaves a stale log next to the marker, which
+    * the replay's skip just deletes (the marker is authoritative). */
+  private def exactlyOnce(sp: SparkSession, indexDir: String,
+      batchId: Long)(effects: => Unit): Unit = {
+    val mdir = s"$indexDir/ingested"
+    if (!readMarkers(sp, mdir).contains(batchId)) {
+      beginIngestBatch(sp, indexDir, batchId)
+      effects
+      writeMarker(sp, mdir, batchId)
+    }
+    val pend = new org.apache.hadoop.fs.Path(indexDir, s"pending/batch-$batchId")
+    pend.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(pend, false)
   }
 
   /** Streaming exact dedup: emit the first arrival per key, dropping
@@ -689,21 +597,12 @@ object StreamOps {
     * projection: WHICH physical row is retained depends on arrival
     * order; the retained key set does not. */
   def runDedupStream(spark: SparkSession, dir: String,
-      keyCols: Seq[String], horizon: String = "3650 days"): DataFrame = withNanosAsLong(spark) {
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
-    val dd = dedupStream(stream, keyCols, "ts", horizon)
-      .select(keyCols.map(col): _*)
-    val name = sinkName("dedup")
-    withStatePartitions(spark, 8) {
-      val q = dd.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      keyCols: Seq[String], horizon: String = "3650 days"): DataFrame =
+    drain(spark, OutputMode.Append(), "dedup") {
+      dedupStream(source(spark, dir, Events)
+          .transform(graft.Tables.normalizeEventTs), keyCols, "ts", horizon)
+        .select(keyCols.map(col): _*)
     }
-    spark.table(name)
-  }
 
   final case class Event(user_id: Long, ts: java.time.Instant, value: Double)
   final case class SessionState(start: Long, end: Long, n: Int, sum: Double) // micros
@@ -760,24 +659,15 @@ object StreamOps {
     * boundaries and counts are integer/timestamp arithmetic and gate
     * the state machine itself. */
   def runSessionizeStream(spark: SparkSession, dir: String,
-      gapMinutes: Int): DataFrame = withNanosAsLong(spark) {
+      gapMinutes: Int): DataFrame = {
     import spark.implicits._
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
-    val sessions = sessionizeStream(
-      stream.select(col("user_id"), col("ts"), col("value")).as[Event],
-      gapMinutes)
-    val name = sinkName("sessions")
-    withStatePartitions(spark, 8) {
-      val q = sessions.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"))
+    drain(spark, OutputMode.Append(), "sessions") {
+      sessionizeStream(source(spark, dir, Events)
+        .transform(graft.Tables.normalizeEventTs)
+        .select(col("user_id"), col("ts"), col("value")).as[Event],
+        gapMinutes).toDF()
+    }.select(col("user_id"), col("session_start"), col("session_end"),
+      col("n_events"))
   }
 
   /** Batch sessionization: lag + cumulative session counter — the
@@ -837,21 +727,13 @@ object StreamOps {
   /** Drives [[cdcMergeStream]] over the bounded events table on the
     * real streaming engine; the result must equal the batch merge
     * (oracle: q201's SQL). */
-  def runCdcMergeStream(spark: SparkSession, dir: String): DataFrame = withNanosAsLong(spark) {
+  def runCdcMergeStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = MetaIO.footerSchema(spark, s"$dir/events.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Tables.normalizeEventTs)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        col("value")).as[CdcEvent]
-    val merged = cdcMergeStream(stream)
-    val name = sinkName("cdc")
-    withStatePartitions(spark, 8) {
-      val q = merged.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    drain(spark, OutputMode.Update(), "cdc") {
+      cdcMergeStream(source(spark, dir, Events)
+        .transform(graft.Tables.normalizeEventTs)
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
+          col("value")).as[CdcEvent])
     }
-    spark.table(name)
   }
 }

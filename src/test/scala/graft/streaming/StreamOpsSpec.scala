@@ -98,6 +98,28 @@ class StreamOpsSpec extends SparkSpec {
     assert(got == want)
   }
 
+  /** The drain owns its stream and its conf scope: a stream that
+    * fails mid-run must not stay active, and the partition and
+    * nanos-as-long values it scoped must read as they did before. */
+  test("drain: a stream that throws mid-run is stopped and the session conf restored") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.legacy.parquet.nanosAsLong")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-drain").toString
+    spark.range(4).write.mode("overwrite").parquet(tmp)
+    // a partition value the drain's own scope (8) cannot mask
+    graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> "3") {
+      val before = keys.map(spark.conf.getOption)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamOps.drain(spark, org.apache.spark.sql.streaming.OutputMode.Append(),
+            "boom") {
+          spark.readStream.schema("id LONG").parquet(tmp)
+            .select(col("id"), raise_error(lit("boom")).as("e"))
+        }
+      }
+      assert(spark.streams.active.isEmpty, "the failed stream is still active")
+      assert(keys.map(spark.conf.getOption) == before)
+    }
+  }
+
   test("session boundaries: events exactly at the gap stay in one session") {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
