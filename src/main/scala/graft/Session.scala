@@ -25,6 +25,11 @@ object Session {
       // full-run-vs-isolated). The same knob matters on any
       // long-lived production driver/executor.
       .config("spark.cleaner.periodicGC.interval", "30s")
+      // gate inputs whose timestamps are TIMESTAMP(NANOS), which Spark's
+      // reader otherwise rejects, read as long nanos; Tables
+      // .normalizeEventTs turns them back into timestamps. Other
+      // timestamp units are unaffected.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new graft.functions.GraftExtensions)
     val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()

@@ -40,10 +40,8 @@ object Tables {
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventTs(load(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

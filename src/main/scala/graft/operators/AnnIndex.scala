@@ -187,33 +187,13 @@ object AnnIndex {
       .where(col("cid").isin(affected.map(Integer.valueOf): _*))
       .join(broadcast(vids), Seq("vid"), "left_anti")
       .write.partitionBy("cid").mode("overwrite").parquet(tmp)
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(codesPath(dir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // swap via a RENAME-ASIDE, never a delete-then-rename: the r10
-    // advice's failure window (crash or failed rename between deleting
-    // the live list and installing the rewrite) would silently drop a
-    // whole inverted list. Here nothing is destroyed until every swap
-    // committed — a crash mid-loop leaves the displaced originals
-    // under codes_trash/ (recovery: rename them back), and every
-    // rename's result is require()d so a failed swap aborts loudly
-    // instead of half-applying.
-    val trash = new org.apache.hadoop.fs.Path(s"$dir/codes_trash")
-    fs.delete(trash, true)
-    fs.mkdirs(trash)
-    affected.foreach { cid =>
-      val live = new org.apache.hadoop.fs.Path(root, s"cid=$cid")
-      val fresh = new org.apache.hadoop.fs.Path(tmp, s"cid=$cid")
-      require(fs.rename(live, new org.apache.hadoop.fs.Path(trash, s"cid=$cid")),
-        s"could not move inverted list cid=$cid aside — delete aborted " +
-          "with the index intact")
-      // a fully-deleted list has no rewritten dir — dropping it whole
-      if (fs.exists(fresh))
-        require(fs.rename(fresh, live),
-          s"could not install rewritten list cid=$cid — its original is " +
-            s"preserved at $trash/cid=$cid; rename it back to recover")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.delete(trash, true)
+    // a fully-deleted list has no rewritten dir, so the swap drops it
+    MetaIO.swapIn(conf, new org.apache.hadoop.fs.Path(s"$dir/codes_trash"),
+      affected.toSeq.map(cid => new org.apache.hadoop.fs.Path(root, s"cid=$cid") ->
+        new org.apache.hadoop.fs.Path(tmp, s"cid=$cid")))
+    root.getFileSystem(conf).delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
   /** Drift RESPONSE — the action [[driftStats]]'s threshold gates
@@ -224,10 +204,8 @@ object AnnIndex {
     * the same contract as [[probeReranked]]'s rerank corpus) into a
     * next-generation directory, then swap all three tables in.
     * Crash-safety mirrors [[delete]]: nothing live is destroyed until
-    * the new generation is fully written, the displaced tables sit
-    * under `prev_gen/` until every swap committed (recovery: rename
-    * them back), and every rename's result is require()d so a failed
-    * swap aborts loudly instead of half-applying. Probing the rebuilt
+    * the new generation is fully written, and the swap is
+    * [[MetaIO.swapIn]]'s rename-aside under `prev_gen/`. Probing the rebuilt
     * index is bit-identical to probing a FRESH build over the same
     * corpus (the training is content-seeded, not path- or
     * history-seeded — AnnIndexSpec pins the law), and a previously
@@ -241,22 +219,12 @@ object AnnIndex {
     val next = s"$dir/gen_next"
     build(corpus, idCol, vecCol, next, nCentroids, m, k, refineIters,
       residual)
+    val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = new org.apache.hadoop.fs.Path(s"$dir/prev_gen")
-    fs.delete(prev, true)
-    fs.mkdirs(prev)
-    Seq("centroids", "codebook", "codes").foreach { t =>
-      val live = new org.apache.hadoop.fs.Path(base, t)
-      require(fs.rename(live, new org.apache.hadoop.fs.Path(prev, t)),
-        s"could not move live table $t aside — rebuild aborted with " +
-          "the index intact")
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$next/$t"), live),
-        s"could not install rebuilt table $t — its original is " +
-          s"preserved at $prev/$t; rename it back to recover")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(next), true)
-    fs.delete(prev, true)
+    MetaIO.swapIn(conf, new org.apache.hadoop.fs.Path(s"$dir/prev_gen"),
+      Seq("centroids", "codebook", "codes").map(t =>
+        new org.apache.hadoop.fs.Path(base, t) -> new org.apache.hadoop.fs.Path(s"$next/$t")))
+    base.getFileSystem(conf).delete(new org.apache.hadoop.fs.Path(next), true)
   }
 
   /** Drift statistic for FROZEN-MODEL appends (round-10 verdict ask

@@ -376,8 +376,8 @@ object DedupIndex {
   }
 
   /** Physical reclamation: rewrite the signature tables WITHOUT the
-    * tombstoned docs (tmp + directory swap — never an in-place
-    * overwrite of a table being read), preserving each table's
+    * tombstoned docs (tmp + [[MetaIO.swapIn]]'s rename-aside — never an
+    * in-place overwrite of a table being read), preserving each table's
     * layout (postings keep the tok_h clustering), then clear the
     * tombstone table. Amortized maintenance — run when the tombstone
     * fraction justifies a rewrite, as the single maintenance writer.
@@ -387,32 +387,28 @@ object DedupIndex {
     val t = tombstones(spark, dir)
     if (t.isEmpty) return
     val meta = readMeta(spark, dir)
-    def rewrite(path: String, cluster: Option[Seq[String]] = None): Unit = {
+    def rewrite(path: String, cluster: Option[Seq[String]] = None)
+        : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
       // the tmp write fully consumes the read of the live table
-      // BEFORE the swap deletes it — no in-place overwrite hazard,
+      // BEFORE the swap moves it — no in-place overwrite hazard,
       // no data-sized checkpoint
       val keep = spark.read.parquet(path)
         .join(broadcast(t), Seq("doc_id"), "left_anti")
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_rewrite")
+      val tmp = path + "_rewrite"
       cluster match {
-        case Some(keys) => graft.sources.Tabular.writeClusteredParquet(
-          keep, tmp.toString, keys)
-        case None => keep.write.mode("overwrite").parquet(tmp.toString)
+        case Some(keys) => graft.sources.Tabular.writeClusteredParquet(keep, tmp, keys)
+        case None => keep.write.mode("overwrite").parquet(tmp)
       }
-      fs.delete(p, true)
-      require(fs.rename(tmp, p), s"could not swap compacted table $path")
+      new org.apache.hadoop.fs.Path(path) -> new org.apache.hadoop.fs.Path(tmp)
     }
-    meta.kind match {
-      case "dense" => rewrite(masksPath(dir))
-      case "sparse" =>
-        rewrite(postingsPath(dir), Some(Seq("tok_h")))
-        rewrite(docsPath(dir))
-    }
-    val fs = new org.apache.hadoop.fs.Path(tombstonesPath(dir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(dir)), true)
+    MetaIO.swapIn(hconf(spark), new org.apache.hadoop.fs.Path(s"$dir/compact_prev"),
+      meta.kind match {
+        case "dense" => Seq(rewrite(masksPath(dir)))
+        case "sparse" =>
+          Seq(rewrite(postingsPath(dir), Some(Seq("tok_h"))), rewrite(docsPath(dir)))
+      })
+    val ts = new org.apache.hadoop.fs.Path(tombstonesPath(dir))
+    ts.getFileSystem(hconf(spark)).delete(ts, true)
   }
 
   /** Drift statistic for the sparse regime's FROZEN df order (the
@@ -482,11 +478,9 @@ object DedupIndex {
     * open-vocabulary regime a rebuilt 100 TB corpus needs — with the
     * df order refreshed to current truth ([[driftStats]] reads
     * frozen == optimal afterwards, the IndexRebuildSpec law). Swap is
-    * the rename-aside idiom: every live table moves to prev_gen/
-    * before anything installs, every rename is require()d, nothing is
-    * destroyed until all commits (crash recovery: rename the tables
-    * under prev_gen back). Single maintenance writer, like
-    * append/delete/compact. */
+    * [[MetaIO.swapIn]]'s rename-aside under prev_gen/; the dense
+    * tables and the tombstones have no staged twin, so it drops them.
+    * Single maintenance writer, like append/delete/compact. */
   def rebuild(spark: SparkSession, dir: String): String = {
     val meta = readMeta(spark, dir)
     val ts = broadcast(tombstones(spark, dir))
@@ -519,25 +513,11 @@ object DedupIndex {
     fs.delete(new org.apache.hadoop.fs.Path(next), true)
     buildSparse(tok, next, meta.tBuild)
     writeMeta(spark, next, "sparse", meta.tBuild)
-    val prev = new org.apache.hadoop.fs.Path(s"$dir/prev_gen")
-    fs.delete(prev, true)
-    fs.mkdirs(prev)
-    Seq("meta", "dict", "masks", "dfreq", "postings", "docs",
-        "tombstones").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(base, t)
-      if (fs.exists(p))
-        require(fs.rename(p, new org.apache.hadoop.fs.Path(prev, t)),
-          s"could not move live table $t aside — rebuild aborted with " +
-            "the index intact")
-    }
-    Seq("meta", "dfreq", "postings", "docs").foreach { t =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$next/$t"),
-          new org.apache.hadoop.fs.Path(base, t)),
-        s"could not install rebuilt table $t — the displaced index is " +
-          s"preserved under $prev; rename its tables back to recover")
-    }
+    MetaIO.swapIn(hconf(spark), new org.apache.hadoop.fs.Path(s"$dir/prev_gen"),
+      Seq("meta", "dict", "masks", "dfreq", "postings", "docs", "tombstones")
+        .map(t => new org.apache.hadoop.fs.Path(base, t) ->
+          new org.apache.hadoop.fs.Path(s"$next/$t")))
     fs.delete(new org.apache.hadoop.fs.Path(next), true)
-    fs.delete(prev, true)
     "sparse"
   }
 }

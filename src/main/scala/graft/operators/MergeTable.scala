@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.{ZoneMap, ZonePrune}
 
 /** Keyed MERGE over a bucket-clustered parquet table — the lakehouse
   * upsert/delete primitive (Delta/Hudi's shape) as a minimal
@@ -116,20 +117,16 @@ object MergeTable {
     * parquet footers at write time and copied forward verbatim for
     * carried buckets — the manifest is the single metadata read. */
   private[graft] case class FileStat(bucket: Int, gen: Int, file: String,
-      col: String, ty: String, ok: Boolean,
-      minL: Option[Long], maxL: Option[Long],
-      minS: Option[String], maxS: Option[String], nRows: Long)
+      col: String, zone: ZonePrune.Zone, nRows: Long)
 
   /** One committed version: live bucket states, the DATA schema, and
     * (clustered tables) the per-file zone stats. The schema and
     * stats travel IN the manifest file, so schema evolution and
     * stats updates commit atomically with the bucket map they
     * describe, time travel reads each version under its OWN schema,
-    * and stats-pruned reads open zero sidecar files. `legacy` marks
-    * a pre-delta-format manifest (stats still live in per-generation
-    * `_zonemap` sidecars, read via the fallback path). */
+    * and stats-pruned reads open zero sidecar files. */
   private[graft] case class Snapshot(buckets: Map[Int, BucketState],
-      schema: StructType, stats: Seq[FileStat], legacy: Boolean)
+      schema: StructType, stats: Seq[FileStat])
 
   /** The snapshot of the highest manifest version. */
   private def manifest(spark: SparkSession, dir: String): Snapshot = {
@@ -155,9 +152,9 @@ object MergeTable {
     }
 
   /** The snapshot of a specific committed version. Reads the current
-    * 13-column format and the previous 3-column (no-delta) format;
-    * anything older (2 columns, no schema sentinel) is refused with
-    * an explicit incompatibility error, not an index crash. */
+    * 13-column format; anything older (the 3-column pre-delta format,
+    * the 2-column pre-sentinel one) is refused with an explicit
+    * incompatibility error, not an index crash. */
   private def manifestAt(spark: SparkSession, dir: String, v: Int): Snapshot = {
     val p = new org.apache.hadoop.fs.Path(f"${manifestDir(dir)}/v$v%06d")
     val f0 = fs(spark, dir)
@@ -184,10 +181,10 @@ object MergeTable {
       p: org.apache.hadoop.fs.Path): Snapshot = {
     val (cols0, rows) = MetaIO.readWithSchema(
       spark.sparkContext.hadoopConfiguration, p)
-    val cols = cols0.toSet
-    require(cols.contains("bucket") && cols.contains("schema_json"),
+    require((0 until manifestSchema.getFieldCount).map(manifestSchema.getFieldName)
+        .forall(cols0.contains),
       s"manifest $p was written by an older MergeTable layout " +
-        s"(columns: ${cols0.mkString(", ")}; no schema sentinel) — " +
+        s"(columns: ${cols0.mkString(", ")}) — " +
         "rebuild the table with the current format")
     def bucketOf(r: Map[String, Any]): Int = r("bucket").asInstanceOf[Int]
     val sentinel = rows.find(r => bucketOf(r) == -1).getOrElse(throw
@@ -196,35 +193,21 @@ object MergeTable {
           "written by an older MergeTable layout; rebuild the table"))
     val schema = DataType.fromJson(sentinel("schema_json").asInstanceOf[String])
       .asInstanceOf[StructType]
-    if (!cols.contains("deltas")) // previous (r11) format: COW only
-      return Snapshot(
-        rows.filter(bucketOf(_) >= 0)
-          .map(r => bucketOf(r) ->
-            BucketState(Some(r("gen").asInstanceOf[Int]), Nil)).toMap,
-        schema, Nil, legacy = true)
-    def optL(r: Map[String, Any], f: String): Option[Long] =
-      r.get(f).map(_.asInstanceOf[Long])
-    def optS(r: Map[String, Any], f: String): Option[String] =
-      r.get(f).map(_.asInstanceOf[String])
     val (statRows, bucketRows) = rows.filter(bucketOf(_) >= 0)
       .partition(r => r.contains("file"))
     val buckets = bucketRows.map { r =>
       val base = r.get("gen").map(_.asInstanceOf[Int])
-      val chain = optS(r, "deltas")
+      val chain = r.get("deltas").map(_.asInstanceOf[String])
         .filter(_.nonEmpty).map(_.split(",").map(_.toInt).toList)
         .getOrElse(Nil)
       bucketOf(r) -> BucketState(base, chain)
     }.toMap
     val stats = statRows.map { r =>
       FileStat(bucketOf(r), r("gen").asInstanceOf[Int],
-        r("file").asInstanceOf[String],
-        r("scol").asInstanceOf[String], r("sty").asInstanceOf[String],
-        r("sok").asInstanceOf[Boolean],
-        optL(r, "smin_l"), optL(r, "smax_l"),
-        optS(r, "smin_s"), optS(r, "smax_s"),
-        r("n_rows").asInstanceOf[Long])
+        r("file").asInstanceOf[String], r("scol").asInstanceOf[String],
+        ZonePrune.Zone.from(r, zoneCols), r("n_rows").asInstanceOf[Long])
     }.toSeq
-    Snapshot(buckets, schema, stats, legacy = false)
+    Snapshot(buckets, schema, stats)
   }
 
   /** All committed manifest versions, ascending (time-travel points).
@@ -252,6 +235,9 @@ object MergeTable {
     ("smin_s", "string", false),
     ("smax_s", "string", false),
     ("n_rows", "long", false)))
+
+  /** The stat rows' zone columns, in [[ZonePrune.Zone.cells]] order. */
+  private val zoneCols = Seq("sty", "sok", "smin_l", "smax_l", "smin_s", "smax_s")
 
   /** Write bucket rows + schema sentinel + stat rows as version `v` —
     * unique-tmp write, then publish the SINGLE manifest FILE at the
@@ -286,9 +272,7 @@ object MergeTable {
         null) ++ nulls9
     }
     val statRows = stats.sortBy(s => (s.bucket, s.gen, s.file, s.col)).map { s =>
-      Seq[Any](s.bucket, s.gen, null, null, s.file, s.col, s.ty, s.ok,
-        s.minL.map(Long.box).orNull, s.maxL.map(Long.box).orNull,
-        s.minS.orNull, s.maxS.orNull, s.nRows)
+      Seq[Any](s.bucket, s.gen, null, null, s.file, s.col) ++ s.zone.cells :+ s.nRows
     }
     // the tmp write is a single driver-side parquet file ([[MetaIO]] —
     // the manifest is metadata-sized by construction, and the former
@@ -421,7 +405,8 @@ object MergeTable {
 
   /** Footer-harvest per-file zone stats for one just-written BASE
     * generation (delta generations are small and always read whole —
-    * no stats). Driver-side result is bounded by files × columns. */
+    * no stats) through [[ZoneMap.harvest]]. Driver-side result is
+    * bounded by files × columns. */
   private def harvestStats(spark: SparkSession, dir: String, gen: Int,
       statsCols: Seq[String]): Seq[FileStat] = {
     if (statsCols.isEmpty) return Nil
@@ -432,59 +417,9 @@ object MergeTable {
         f0.listStatus(b.getPath).filter(_.getPath.getName.endsWith(".parquet"))
           .map(s => s"${b.getPath.getName}/${s.getPath.getName}" ->
             s.getPath.toString)).toSeq.sortBy(_._1)
-    if (files.isEmpty) return Nil
-    // metadata-sized file lists read their footers ON THE DRIVER (no
-    // Spark job per commit — round 14, guide §5, the MetaIO idiom);
-    // the distributed path remains for generations with more files
-    // than cores, where fan-out pays for itself
-    if (files.size <= spark.sparkContext.defaultParallelism) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      return files.flatMap { case (rel, p) =>
-        val (nRows, st) = graft.sources.ZoneMap.footerStats(conf, p, statsCols)
-        val bucket = rel.split("/")(0).stripPrefix("bucket=").toInt
-        statsCols.zip(st).map { case (c, (ty, ok, mnL, mxL, mnS, mxS)) =>
-          FileStat(bucket, gen, rel, c, ty, ok, mnL, mxL, mnS, mxS, nRows)
-        }
-      }
-    }
-    val zm = graft.sources.ZoneMap.harvestFiles(spark, files, statsCols)
-    zm.collect().toSeq.flatMap { r =>
-      val file = r.getString(r.fieldIndex("file"))
+    ZoneMap.harvest(spark, files, statsCols).flatMap { case (file, nRows, zones) =>
       val bucket = file.split("/")(0).stripPrefix("bucket=").toInt
-      val nRows = r.getLong(r.fieldIndex("n_rows"))
-      def optL(f: String): Option[Long] = {
-        val i = r.fieldIndex(f); if (r.isNullAt(i)) None else Some(r.getLong(i))
-      }
-      def optS(f: String): Option[String] = {
-        val i = r.fieldIndex(f); if (r.isNullAt(i)) None else Some(r.getString(i))
-      }
-      statsCols.map { c =>
-        FileStat(bucket, gen, file, c,
-          r.getString(r.fieldIndex(s"${c}_ty")),
-          r.getBoolean(r.fieldIndex(s"${c}_ok")),
-          optL(s"${c}_min"), optL(s"${c}_max"),
-          optS(s"${c}_smin"), optS(s"${c}_smax"), nRows)
-      }
-    }
-  }
-
-  /** A LEGACY (pre-delta-format) snapshot's stats, lifted from its
-    * per-generation `_zonemap` sidecars — the one-time migration
-    * read; the next commit folds them into the manifest. */
-  private def legacyStats(spark: SparkSession, dir: String,
-      snap: Snapshot, statsCols: Seq[String]): Seq[FileStat] = {
-    if (statsCols.isEmpty || !snap.legacy) return snap.stats
-    snap.buckets.values.flatMap(_.gens).toSet.toSeq.sorted.flatMap { g: Int =>
-      val side = s"${dataPath(dir)}/gen=$g/_zonemap"
-      if (!fs(spark, dir).exists(new org.apache.hadoop.fs.Path(side))) Nil
-      else graft.sources.ZonePrune.zonesOf(spark.read.parquet(side)).toSeq
-        .flatMap { case (file, zones) =>
-          val bucket = file.split("/")(0).stripPrefix("bucket=").toInt
-          zones.map { case (c, z) =>
-            FileStat(bucket, g, file, c, z.ty, z.ok, z.minL, z.maxL,
-              z.minS, z.maxS, 0L)
-          }
-        }
+      statsCols.map(c => FileStat(bucket, gen, file, c, zones(c), nRows))
     }
   }
 
@@ -900,8 +835,7 @@ object MergeTable {
       // stats: carried buckets keep their (gen-keyed) entries; affected
       // buckets are re-keyed to the fresh generation (COW) or keep the
       // base's entries (MOR — deltas carry no stats)
-      val headStats = legacyStats(spark, dir, headSnap, m0.statsCols)
-      val statsByGen = (headStats ++ newStats).groupBy(s => (s.bucket, s.gen))
+      val statsByGen = (headSnap.stats ++ newStats).groupBy(s => (s.bucket, s.gen))
       val nextStats = next.toSeq.flatMap { case (b, st) =>
         st.base.toSeq.flatMap(g => statsByGen.getOrElse((b, g), Nil))
       }
@@ -942,8 +876,7 @@ object MergeTable {
         val next = (snap.buckets -- chained.keySet) ++
           chained.keySet.iterator.filter(written.contains)
             .map(b => b -> BucketState(Some(gen), Nil)).toMap
-        val headStats = legacyStats(spark, dir, snap, m0.statsCols)
-        val statsByGen = (headStats ++ newStats).groupBy(s => (s.bucket, s.gen))
+        val statsByGen = (snap.stats ++ newStats).groupBy(s => (s.bucket, s.gen))
         val nextStats = next.toSeq.flatMap { case (b, st) =>
           st.base.toSeq.flatMap(g => statsByGen.getOrElse((b, g), Nil))
         }
@@ -952,28 +885,11 @@ object MergeTable {
     }
   }
 
-  /** Per-file zones of a snapshot, keyed gen → file → column — from
-    * the manifest's stat rows (current format) or the per-generation
-    * `_zonemap` sidecars (legacy tables). */
-  private def zonesOf(spark: SparkSession, dir: String, snap: Snapshot,
-      statsCols: Seq[String])
-      : Map[Int, Map[String, Map[String, graft.sources.ZonePrune.Zone]]] = {
-    import graft.sources.ZonePrune
-    if (!snap.legacy)
-      snap.stats.groupBy(_.gen).view.mapValues(_.groupBy(_.file).view
-        .mapValues(_.map(s => s.col -> ZonePrune.Zone(s.ty, s.ok, s.minL,
-          s.maxL, s.minS, s.maxS)).toMap).toMap).toMap
-    else if (statsCols.isEmpty) Map.empty
-    else snap.buckets.values.flatMap(_.gens).toSet.iterator.map { g: Int =>
-      // a legacy generation missing its sidecar keeps ALL its files
-      // (empty zone map = conservative keep-all), mirroring
-      // legacyStats — not an AnalysisException on the read path
-      val side = s"${dataPath(dir)}/gen=$g/_zonemap"
-      if (!fs(spark, dir).exists(new org.apache.hadoop.fs.Path(side)))
-        g -> Map.empty[String, Map[String, ZonePrune.Zone]]
-      else g -> ZonePrune.zonesOf(spark.read.parquet(side))
-    }.toMap
-  }
+  /** Per-file zones of a snapshot, keyed gen → file → column. */
+  private def zonesOf(snap: Snapshot)
+      : Map[Int, Map[String, Map[String, ZonePrune.Zone]]] =
+    snap.stats.groupBy(_.gen).view.mapValues(_.groupBy(_.file).view
+      .mapValues(_.map(s => s.col -> s.zone).toMap).toMap).toMap
 
   /** Range read over the cluster column (or any stats column): for
     * every live bucket, open ONLY base files whose manifest zone
@@ -1002,37 +918,24 @@ object MergeTable {
   }
 
   /** Zone-kept base-file paths per (bucket, gen) for `[lo, hi]` on
-    * `c`. Files with unusable stats keep conservatively; all-null
-    * files prove empty (a range predicate excludes NULL). */
+    * `c`: [[ZonePrune.keep]] under the bare range. Every base
+    * generation of a clustered table carries its stats in the
+    * manifest, so a bucket without any is refused, not read whole. */
   private def rangeBasePaths(spark: SparkSession, dir: String,
       snap: Snapshot, m0: Meta, c: String, lo: Long, hi: Long)
       : Map[(Int, Int), Seq[String]] = {
     require(m0.statsCols.contains(c),
       s"$c is not a stats column of the merge table at $dir")
-    val zones = zonesOf(spark, dir, snap, m0.statsCols)
+    val zones = zonesOf(snap)
+    val d = ZonePrune.range(c, lo, hi)
     snap.buckets.toSeq.flatMap { case (b, st) =>
       st.base.map { g =>
-        val genPath = s"${dataPath(dir)}/gen=$g"
         val genZones = zones.getOrElse(g, Map.empty)
-        val bucketZones = genZones.keys.toSeq.sorted
-          .filter(_.startsWith(s"bucket=$b/"))
-        val keptFiles =
-          if (bucketZones.isEmpty)
-            // no zones for this generation (legacy table with a
-            // missing _zonemap sidecar): conservative keep-all from
-            // the filesystem, never a silent empty read
-            fs(spark, dir).listStatus(
-                new org.apache.hadoop.fs.Path(bucketDir(dir, g, b)))
-              .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-              .map(f => s"$genPath/bucket=$b/$f").toSeq
-          else bucketZones
-            .filter { f =>
-              genZones(f).get(c).forall(z =>
-                !z.ok || z.ty != "long" ||
-                  (z.minL.nonEmpty && z.minL.get <= hi && z.maxL.get >= lo))
-            }
-            .map(f => s"$genPath/$f")
-        (b, g) -> keptFiles
+        val files = genZones.keys.toSeq.sorted.filter(_.startsWith(s"bucket=$b/"))
+        require(files.nonEmpty, s"the manifest of $dir carries no zone " +
+          s"stats for bucket $b of generation $g")
+        (b, g) -> files.filter(f => ZonePrune.keep(genZones(f), d))
+          .map(f => s"${dataPath(dir)}/gen=$g/$f")
       }
     }.toMap
   }
@@ -1214,7 +1117,6 @@ object MergeTable {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.datasources.PartitionDirectory
-    import graft.sources.ZonePrune
 
     private val m0 = meta(spark, dir)
     private val snap = manifest(spark, dir)
@@ -1235,7 +1137,7 @@ object MergeTable {
     /** (bucket, FileStatus, zone-by-column) for every live file. */
     private val files: Seq[(Int, org.apache.hadoop.fs.FileStatus,
         Map[String, ZonePrune.Zone])] = {
-      val zonesByGen = zonesOf(spark, dir, snap, m0.statsCols)
+      val zonesByGen = zonesOf(snap)
       man.toSeq.sortBy(_._1).flatMap { case (b, g) =>
         val bp = new org.apache.hadoop.fs.Path(bucketDir(dir, g, b))
         f0.listStatus(bp).filter(_.getPath.getName.endsWith(".parquet"))

@@ -93,6 +93,31 @@ private[graft] object MetaIO {
     } finally w.close()
   }
 
+  /** Swap staged tables in for live ones, each (live → staged) in
+    * turn, by the RENAME-ASIDE idiom, never delete-then-rename (a crash
+    * between those two calls would lose the live table): the live
+    * table moves under `aside`, then the staged one, if it exists, is
+    * renamed onto the live path (no staged table drops the live one).
+    * Every rename is require()d, so a failed step aborts loudly, and
+    * nothing is destroyed until every swap committed: a crash part-way
+    * leaves the displaced tables under `aside` (recovery: rename them
+    * back). Live names must be distinct. */
+  def swapIn(conf: Configuration, aside: Path, swaps: Seq[(Path, Path)]): Unit = {
+    val fs = aside.getFileSystem(conf)
+    fs.delete(aside, true)
+    fs.mkdirs(aside)
+    swaps.foreach { case (live, staged) =>
+      val moved = new Path(aside, live.getName)
+      if (fs.exists(live))
+        require(fs.rename(live, moved),
+          s"could not move live table $live aside — swap aborted before it")
+      if (fs.exists(staged))
+        require(fs.rename(staged, live), s"could not install $staged — the " +
+          s"displaced table is preserved at $moved; rename it back to recover")
+    }
+    fs.delete(aside, true)
+  }
+
   def read(conf: Configuration, path: Path): Seq[Map[String, Any]] =
     readWithSchema(conf, path)._2
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.MetaIO
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * filters, but it must still LIST and OPEN every file to do so —
   * at 100 TB the file-open round trips dominate a selective scan.
   * [[harvest]] reads each file's FOOTER ONLY (no data pages) into a
-  * one-row-per-file min/max sidecar, distributed over the executors;
+  * one-row-per-file min/max sidecar, read back on the driver;
   * [[scanRange]] then selects surviving file PATHS at planning time,
   * so pruned files are never opened — and the surviving files still
   * get Spark's row-group skipping on top, because the exact filter
@@ -37,8 +37,9 @@ import scala.jdk.CollectionConverters._
   * skip because a range predicate excludes NULL.
   */
 object ZoneMap {
+  import ZonePrune.Zone
 
-  private def sidecar(path: String) = s"$path/_zonemap"
+  private def sidecar(path: String) = new org.apache.hadoop.fs.Path(path, "_zonemap")
 
   private def fs(spark: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
@@ -73,15 +74,14 @@ object ZoneMap {
     if (utf8Cmp(a, b) >= 0) a else b
 
   /** Per-file zone for one column, merged across row groups from the
-    * footer: (ty, ok, minL, maxL, minS, maxS). `ty` is "long" for
-    * INT32/INT64, "string" for UTF8-annotated BINARY, "other"
-    * otherwise; exactly one min/max pair is populated. ok=false →
-    * stats unusable, never prune. ok=true with null min/max → every
-    * value is NULL → a range predicate may prune the file. */
-  private def colStats(
+    * footer. `ty` is "long" for INT32/INT64, "string" for
+    * UTF8-annotated BINARY, "other" otherwise; exactly one min/max
+    * pair is populated. ok=false → stats unusable, never prune.
+    * ok=true with null min/max → every value is NULL → a range
+    * predicate may prune the file. */
+  private def zoneOf(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
-      c: String): (String, Boolean, Option[Long], Option[Long],
-        Option[String], Option[String]) = {
+      c: String): Zone = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     def asLong(v: Any): Option[Long] = v match {
       case n: java.lang.Integer => Some(n.longValue)
@@ -129,109 +129,100 @@ object ZoneMap {
       }
     }
     if (ty == null) ty = "other"
-    if (ok) (ty, true, mnL, mxL, mnS, mxS)
-    else (ty, false, None, None, None, None)
+    if (ok) Zone(ty, ok = true, mnL, mxL, mnS, mxS)
+    else Zone(ty, ok = false, None, None, None, None)
   }
 
-  /** Driver-side footer stats for ONE file — the metadata-sized twin
-    * of the distributed [[harvestFiles]] path (round 14, guide §5): a
-    * just-committed generation holds a handful of files, and
-    * scheduling a cluster job to read their footers costs more than
-    * the reads. Same [[colStats]] merge, so the harvested zones are
-    * identical to the distributed path's. Returns
-    * (n_rows, per-col (ty, ok, minL, maxL, minS, maxS)). */
-  private[graft] def footerStats(conf: org.apache.hadoop.conf.Configuration,
-      path: String, cols: Seq[String])
-      : (Long, Seq[(String, Boolean, Option[Long], Option[Long],
-        Option[String], Option[String])]) = {
+  /** One file's (relative name, n_rows, zone per column), from its
+    * FOOTER only — no data pages are touched. */
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      rel: String, path: String, cols: Seq[String]): (String, Long, Map[String, Zone]) = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(path), conf))
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq
-      (blocks.map(_.getRowCount).sum, cols.map(c => colStats(blocks, c)))
+      (rel, blocks.map(_.getRowCount).sum, cols.map(c => c -> zoneOf(blocks, c)).toMap)
     } finally r.close()
   }
 
-  /** Harvest per-file zone maps for `cols` from parquet FOOTERS only
-    * — one footer read per file, parallelized over the executors
-    * (each task reconstructs the filesystem from the executor's own
-    * Hadoop configuration; no data pages are touched). Returns one
-    * row per file: `file, n_rows, <c>_ok, <c>_min, <c>_max, …`. */
-  def harvest(spark: SparkSession, path: String,
-      cols: Seq[String]): DataFrame = {
-    val files = dataFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    harvestFiles(spark,
-      files.map(p => new org.apache.hadoop.fs.Path(p).getName -> p), cols)
+  /** The footer harvest behind every zone stat — the `_zonemap`
+    * sidecar ([[write]]) and [[graft.operators.MergeTable]]'s
+    * manifest-carried stats alike: (relative name, n_rows, zone per
+    * column) for each (relative name → absolute path) of `files`. A
+    * list no longer than the default parallelism `p` reads its footers
+    * on the driver, since scheduling a job costs more than a handful of
+    * footer reads; a longer one fans out over the executors in
+    * ceil(files / p) tasks, at most `p`, so a task reads about as many
+    * footers as the driver reads inline. The tasks read with the
+    * SESSION's Hadoop configuration — a bare `new Configuration()` would drop configured
+    * credentials / endpoints (S3A, custom HDFS) that every other FS
+    * access honors. Same zones either way. */
+  private[graft] def harvest(spark: SparkSession, files: Seq[(String, String)],
+      cols: Seq[String]): Seq[(String, Long, Map[String, Zone])] = {
+    val sc = spark.sparkContext
+    val p = sc.defaultParallelism
+    if (files.size <= p)
+      files.map { case (rel, f) => footer(sc.hadoopConfiguration, rel, f, cols) }
+    else {
+      val confB = org.apache.spark.graftbridge.ConfBridge.broadcast(
+        sc, sc.hadoopConfiguration)
+      sc.parallelize(files, math.min(p, (files.size + p - 1) / p)).map { case (rel, f) =>
+        footer(org.apache.spark.graftbridge.ConfBridge.value(confB), rel, f, cols)
+      }.collect().toSeq
+    }
   }
 
-  /** [[harvest]] over an explicit (relative name → absolute path)
-    * file list — the entry point for layouts whose files live in
-    * subdirectories (e.g. [[graft.operators.MergeTable]]'s
-    * `bucket=B/part-….parquet` under each generation). */
-  private[graft] def harvestFiles(spark: SparkSession,
-      files: Seq[(String, String)], cols: Seq[String]): DataFrame = {
-    val schema = StructType(
-      StructField("file", StringType, nullable = false) ::
-        StructField("n_rows", LongType, nullable = false) ::
-        cols.toList.flatMap(c => Seq(
-          StructField(s"${c}_ty", StringType, nullable = false),
-          StructField(s"${c}_ok", BooleanType, nullable = false),
-          StructField(s"${c}_min", LongType, nullable = true),
-          StructField(s"${c}_max", LongType, nullable = true),
-          StructField(s"${c}_smin", StringType, nullable = true),
-          StructField(s"${c}_smax", StringType, nullable = true))))
-    val colsB = cols.toIndexedSeq
-    val n = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism))
-    // the SESSION's Hadoop configuration rides to the executors — a
-    // bare `new Configuration()` would drop configured credentials /
-    // endpoints (S3A, custom HDFS) that every other FS access honors
-    val confB = org.apache.spark.graftbridge.ConfBridge.broadcast(
-      spark.sparkContext, spark.sparkContext.hadoopConfiguration)
-    val rows = spark.sparkContext.parallelize(files, n).map { case (rel, p) =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val conf = org.apache.spark.graftbridge.ConfBridge.value(confB)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf))
-      try {
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val per = colsB.flatMap { c =>
-          val (ty, ok, mnL, mxL, mnS, mxS) = colStats(blocks, c)
-          Seq[Any](ty, ok, mnL.map(Long.box).orNull, mxL.map(Long.box).orNull,
-            mnS.orNull, mxS.orNull)
-        }
-        Row.fromSeq(rel +: blocks.map(_.getRowCount).sum +: per)
-      } finally r.close()
-    }
-    spark.createDataFrame(rows, schema)
-  }
+  /** The sidecar's six fields per harvested column `c` (suffix,
+    * MetaIO type, required), in [[ZonePrune.Zone.cells]] order. */
+  private val zoneFields = Seq(("ty", "string", true), ("ok", "boolean", true),
+    ("min", "long", false), ("max", "long", false),
+    ("smin", "string", false), ("smax", "string", false))
+  private def zoneCols(c: String): Seq[String] = zoneFields.map(f => s"${c}_${f._1}")
 
   /** Harvest and persist the sidecar at `path/_zonemap` (the `_`
-    * prefix hides it from every scan of `path`). Call once after the
-    * layout write; re-call after rewriting files. */
-  def write(spark: SparkSession, path: String, cols: Seq[String]): Unit =
-    harvest(spark, path, cols).coalesce(1)
-      .write.mode("overwrite").parquet(sidecar(path))
+    * prefix hides it from every scan of `path`): one row per file,
+    * `file, n_rows` and [[zoneCols]] per column, written on the driver
+    * through [[MetaIO]]. Call once after the layout write; re-call
+    * after rewriting files — the new sidecar replaces the old one. */
+  def write(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
+    val files = dataFiles(spark, path)
+    require(files.nonEmpty, s"no parquet files under $path")
+    val schema = MetaIO.schemaOf("zonemap",
+      Seq(("file", "string", true), ("n_rows", "long", true)) ++ cols.flatMap(c =>
+        zoneFields.map { case (f, t, req) => (s"${c}_$f", t, req) }))
+    val rows = harvest(spark,
+      files.map(p => new org.apache.hadoop.fs.Path(p).getName -> p), cols)
+      .map { case (f, n, z) => Seq[Any](f, n) ++ cols.flatMap(z(_).cells) }
+    val conf = spark.sparkContext.hadoopConfiguration
+    sidecar(path).getFileSystem(conf).delete(sidecar(path), true)
+    MetaIO.write(conf, sidecar(path), schema, rows)
+  }
+
+  /** The sidecar read on the driver through [[MetaIO]], no Spark job:
+    * the harvested columns and each file's zones. A sidecar directory
+    * written by Spark reads too. */
+  private[sources] def readSidecar(spark: SparkSession, path: String)
+      : (Seq[String], Map[String, Map[String, Zone]]) = {
+    val (names, rows) = MetaIO.readWithSchema(
+      spark.sparkContext.hadoopConfiguration, sidecar(path))
+    val cols = names.filter(_.endsWith("_ok")).map(_.dropRight(3))
+    (cols, rows.map(r => r("file").asInstanceOf[String] ->
+      cols.map(c => c -> Zone.from(r, zoneCols(c))).toMap).toMap)
+  }
 
   /** The file paths a `lo <= c <= hi` scan must open, and the number of
-    * files the zone map covers: files whose zone proves emptiness are
-    * dropped; files with unusable stats or non-long zones are kept
-    * conservatively; all-null files prove empty. One collect of the
-    * sidecar (one row per file, read under its footer schema, so no
-    * inference job) gives both. */
+    * files the zone map covers: [[ZonePrune.keep]] under the bare
+    * range drops files whose zone proves emptiness (all-null files
+    * included) and keeps files with unusable stats or non-long zones. */
   private[graft] def keptFiles(spark: SparkSession, path: String,
       c: String, lo: Long, hi: Long): (Seq[String], Int) = {
-    val zm = MetaIO.parquet(spark, sidecar(path))
-    require(zm.columns.contains(s"${c}_ok"),
-      s"no zone map for column $c — harvested: " +
-        zm.columns.filter(_.endsWith("_ok")).map(_.dropRight(3)).mkString(", "))
-    val keep = !col(s"${c}_ok") || col(s"${c}_ty") =!= "long" ||
-      (col(s"${c}_min").isNotNull && col(s"${c}_min") <= hi && col(s"${c}_max") >= lo)
-    val rows = zm.select(col("file"), keep).collect()
-    (rows.filter(_.getBoolean(1)).map(r => s"$path/${r.getString(0)}").toSeq.sorted,
-      rows.length)
+    val (cols, zones) = readSidecar(spark, path)
+    require(cols.contains(c),
+      s"no zone map for column $c — harvested: " + cols.mkString(", "))
+    val d = ZonePrune.range(c, lo, hi)
+    (zones.collect { case (f, z) if ZonePrune.keep(z, d) => s"$path/$f" }.toSeq.sorted,
+      zones.size)
   }
 
   /** Range scan through the zone map: open ONLY files whose zone
@@ -297,7 +288,7 @@ class ZoneMapFileIndex(spark: SparkSession, path: String)
 
   /** One zone per harvested column, per file name. */
   private val zones: Map[String, Map[String, ZonePrune.Zone]] =
-    ZonePrune.zonesOf(spark.read.parquet(s"$path/_zonemap"))
+    ZoneMap.readSidecar(spark, path)._2
 
   private val statuses: Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -323,9 +314,10 @@ class ZoneMapFileIndex(spark: SparkSession, path: String)
   }
 }
 
-/** The zone-pruning core shared by [[ZoneMapFileIndex]] and [[graft
-  * .operators.MergeTable]]'s declarative table: pushed data filters →
-  * per-column conjunctive demands → a sound keep/drop decision per
+/** The one zone-pruning rule, shared by [[ZoneMap.keptFiles]],
+  * [[ZoneMapFileIndex]] and [[graft.operators.MergeTable]]'s range
+  * reads and declarative table: pushed data filters (or a bare range)
+  * → per-column conjunctive demands → a sound keep/drop decision per
   * file. Only provably-sound prunings fire — conjuncts it can't
   * interpret are ignored and the file kept. Supported shapes per
   * stats column (bare attribute vs int/long/string literal, both
@@ -339,33 +331,30 @@ class ZoneMapFileIndex(spark: SparkSession, path: String)
 private[graft] object ZonePrune {
   import org.apache.spark.sql.catalyst.expressions._
 
+  /** One file's zone for one column: `ty` ("long" | "string" |
+    * "other"), whether the stats are usable, and the long or string
+    * min/max (both empty on a usable zone = every value is NULL). */
   case class Zone(ty: String, ok: Boolean,
       minL: Option[Long], maxL: Option[Long],
       minS: Option[String], maxS: Option[String]) {
     def allNull: Boolean =
       ok && (if (ty == "long") minL.isEmpty else minS.isEmpty)
+    /** The six fields as [[graft.operators.MetaIO]] cells (null =
+      * absent) — the column order of both the `_zonemap` sidecar and
+      * the merge-table manifest's stat rows. */
+    def cells: Seq[Any] = Seq(ty, ok, minL.map(Long.box).orNull,
+      maxL.map(Long.box).orNull, minS.orNull, maxS.orNull)
   }
 
-  /** Decode a `_zonemap` sidecar into per-file, per-column zones. */
-  def zonesOf(zm: org.apache.spark.sql.DataFrame)
-      : Map[String, Map[String, Zone]] = {
-    val cols = zm.columns.filter(_.endsWith("_ok")).map(_.dropRight(3)).toSeq
-    zm.collect().map { r =>
-      r.getString(r.fieldIndex("file")) -> cols.map { c =>
-        def optLong(f: String): Option[Long] = {
-          val i = r.fieldIndex(f)
-          if (r.isNullAt(i)) None else Some(r.getLong(i))
-        }
-        def optStr(f: String): Option[String] = {
-          val i = r.fieldIndex(f)
-          if (r.isNullAt(i)) None else Some(r.getString(i))
-        }
-        c -> Zone(r.getString(r.fieldIndex(s"${c}_ty")),
-          r.getBoolean(r.fieldIndex(s"${c}_ok")),
-          optLong(s"${c}_min"), optLong(s"${c}_max"),
-          optStr(s"${c}_smin"), optStr(s"${c}_smax"))
-      }.toMap
-    }.toMap
+  object Zone {
+    /** The zone stored in the MetaIO row `r` under the six column
+      * `names`, in [[Zone.cells]] order. */
+    def from(r: Map[String, Any], names: Seq[String]): Zone = {
+      val Seq(ty, ok, mn, mx, smn, smx) = names
+      Zone(r(ty).asInstanceOf[String], r(ok).asInstanceOf[Boolean],
+        r.get(mn).map(_.asInstanceOf[Long]), r.get(mx).map(_.asInstanceOf[Long]),
+        r.get(smn).map(_.asInstanceOf[String]), r.get(smx).map(_.asInstanceOf[String]))
+    }
   }
 
   case class Demands(lo: Map[String, Long], hi: Map[String, Long],
@@ -388,6 +377,11 @@ private[graft] object ZonePrune {
       case _ => None
     }
   }
+
+  /** The demands of the bare range `lo <= c <= hi`. */
+  def range(c: String, lo: Long, hi: Long): Demands =
+    Demands(Map(c -> lo), Map(c -> hi), Map.empty, Map.empty, Set.empty,
+      Map.empty, Map.empty)
 
   def demands(dataFilters: Seq[Expression]): Demands = {
     var lo = Map.empty[String, Long]

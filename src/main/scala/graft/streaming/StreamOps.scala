@@ -18,18 +18,13 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   */
 object StreamOps {
 
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
-
   /** The one file of a gate table dir that the event streams read. */
   private val Events = Some("events.parquet")
 
   /** Streaming parquet source over `dir`, under its footer schema.
     * With `file`, only that file of the table dir streams (the events
     * table, one micro-batch); without, every file under `dir` is its
-    * own micro-batch, in arrival order (the ingest streams' splits).
-    * The gate inputs carry nanos timestamps that the reader widens to
-    * long, so build it inside a [[drain]] or [[availableNow]] body:
-    * both scope `nanosAsLong`, which the footer schema reads too. */
+    * own micro-batch, in arrival order (the ingest streams' splits). */
   private def source(spark: SparkSession, dir: String,
       file: Option[String] = None): DataFrame = {
     val r = spark.readStream
@@ -60,8 +55,7 @@ object StreamOps {
   private[graft] def drain(spark: SparkSession, mode: OutputMode,
       prefix: String)(df: => DataFrame): DataFrame = {
     val name = s"${prefix}_${sinkSeq.incrementAndGet()}"
-    graft.Session.withConf(spark, NanosAsLong,
-        "spark.sql.shuffle.partitions" -> "8") {
+    graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
       val q = df.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
@@ -74,17 +68,14 @@ object StreamOps {
     * `checkpointDir` WAL, then stops. The same job is a backfill when
     * pointed at history and an incremental run on a schedule; offsets
     * carry over either way. `sink` picks where the batches go (a
-    * `foreachBatch` body, or a file sink). Only `nanosAsLong` is
-    * scoped: a `foreachBatch` body runs in the stream's cloned
-    * session, which copies the conf at start, so a partition scope
-    * here would set the shuffle width of every merge the body runs. */
-  private def availableNow(spark: SparkSession, checkpointDir: String,
-      sink: DataStreamWriter[Row] => DataStreamWriter[Row])(
-      df: => DataFrame): Unit =
-    graft.Session.withConf(spark, NanosAsLong) {
-      sink(df.writeStream.option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())).start().awaitTermination()
-    }
+    * `foreachBatch` body, or a file sink). No conf is scoped: a
+    * `foreachBatch` body runs in the stream's cloned session, which
+    * copies the conf at start, so a partition scope here would set the
+    * shuffle width of every merge the body runs. */
+  private def availableNow(checkpointDir: String,
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])(df: DataFrame): Unit =
+    sink(df.writeStream.option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())).start().awaitTermination()
 
   /** Tumbling-window per-type aggregate; works on batch AND streaming
     * DataFrames (same plan, different sink semantics). */
@@ -169,7 +160,7 @@ object StreamOps {
       if (!out.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(out)) 0L
       else spark.read.parquet(outDir).count()
     val before = landed()
-    availableNow(spark, checkpointDir,
+    availableNow(checkpointDir,
         _.format("parquet").option("path", outDir)) {
       source(spark, dir, Events).transform(graft.Tables.normalizeEventTs)
     }
@@ -335,7 +326,7 @@ object StreamOps {
       indexDir: String, checkpointDir: String,
       minJaccard: Double): DataFrame = {
     val qdir = s"$indexDir/quarantine"
-    availableNow(spark, checkpointDir, _.foreachBatch {
+    availableNow(checkpointDir, _.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         import sp.implicits._
@@ -391,7 +382,7 @@ object StreamOps {
     // remain), so the committed-build marker file is the reliable
     // signal and a missing table never logs a WARN
     val built = new org.apache.hadoop.fs.Path(s"$indexDir/centroids/_SUCCESS")
-    availableNow(spark, checkpointDir, _.foreachBatch {
+    availableNow(checkpointDir, _.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         exactlyOnce(sp, indexDir, batchId) {
@@ -425,7 +416,7 @@ object StreamOps {
       corpus: DataFrame, indexDir: String, checkpointDir: String,
       outDir: String, idCol: String, vecCol: String, nProbe: Int, k: Int,
       shortlist: Int): DataFrame = {
-    availableNow(spark, checkpointDir, _.foreachBatch {
+    availableNow(checkpointDir, _.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         graft.operators.AnnIndex.probeCosineReranked(
           batch, corpus, idCol, vecCol, indexDir, nProbe, k, shortlist)
@@ -469,7 +460,7 @@ object StreamOps {
   def runMergeStream(spark: SparkSession, srcDir: String, tableDir: String,
       checkpointDir: String, keyCol: String,
       opCol: String = "op", mergeOnRead: Boolean = false): DataFrame = {
-    availableNow(spark, checkpointDir, _.foreachBatch {
+    availableNow(checkpointDir, _.foreachBatch {
       (batch: DataFrame, _: Long) =>
         val ups = batch.where(col(opCol) === "u").drop(opCol)
         val del = batch.where(col(opCol) === "d").select(col(keyCol))

@@ -10,6 +10,7 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(sc.getConf.get("spark.ui.enabled") == "false" && sc.uiWebUrl.isEmpty)
     assert(sc.getConf.get("spark.cleaner.periodicGC.interval") == "30s")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))")
       .head().getDouble(0) == 1.0)
   }

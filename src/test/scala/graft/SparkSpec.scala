@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,6 +48,31 @@ trait SparkSpec extends AnyFunSuite {
       sc.setLocalProperty(key, prev)
       sc.removeSparkListener(l)
     }
+  }
+
+  /** The WARN-and-above events logged while `body` runs. */
+  def logged(body: => Unit): Seq[LogEvent] = {
+    // build the shared session first: building it sets the log level
+    spark.sparkContext
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val prev = root.getLevel
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
+    val app = new AbstractAppender("graft-log-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.toImmutable)
+    }
+    app.start()
+    root.addAppender(app, Level.WARN, null)
+    root.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try body finally {
+      root.removeAppender(app.getName)
+      root.setLevel(prev)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    seen.asScala.toSeq
   }
 }
 

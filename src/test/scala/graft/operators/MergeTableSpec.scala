@@ -710,41 +710,25 @@ class MergeTableSpec extends SparkSpec {
       == content(state.where(col("cents").between(100000L, 500000L))))
   }
 
-  test("manifest format: previous 3-column manifests read; older layouts refuse loudly") {
-    val dir = tmpDir()
-    MergeTable.create(base, dir, "k", nBuckets = 4)
-    // rewrite v1 in the r11 three-column form (bucket, gen,
-    // schema_json; sentinel row carries the schema) — a table
-    // committed by the previous format must keep reading
-    val v1 = spark.read.parquet(s"$dir/manifest/v000001")
-    val legacy = v1.where(col("file").isNull)
-      .select(col("bucket"), coalesce(col("gen"), lit(-1)).as("gen"),
-        lit(base.schema.json).as("schema_json"))
-    val tmp = s"$dir/manifest-legacy-tmp"
-    legacy.coalesce(1).write.parquet(tmp)
-    val mdir = new java.io.File(s"$dir/manifest")
-    mdir.listFiles().filter(_.getName == "v000001")
-      .foreach(f => assert(f.delete() || { deleteRec(f); true }))
-    deleteRec(new java.io.File(s"$dir/manifest/v000001"))
-    new java.io.File(tmp).renameTo(new java.io.File(s"$dir/manifest/v000001"))
-    assert(content(MergeTable.read(spark, dir)) == content(base))
-    // a merge over the legacy snapshot upgrades the format in place
-    val noDel = spark.range(0).select(col("id").as("k"))
-    val ups = base.orderBy("k").limit(1).withColumn("cents", col("cents") + 1L)
-    MergeTable.merge(spark, dir, ups, noDel)
-    assert(content(MergeTable.read(spark, dir)) ==
-      content(MergeTable.mergeBrute(base, "k", ups, noDel)))
-    // a 2-column pre-sentinel manifest is refused with a clear error
-    val dir2 = tmpDir()
-    MergeTable.create(base, dir2, "k", nBuckets = 4)
+  test("manifest format: 3- and 2-column manifests refuse loudly") {
+    // each older layout replaces v1 of a fresh table: the r11
+    // three-column form (bucket, gen, schema_json; a sentinel row
+    // carries the schema) and the pre-sentinel two-column one
     import spark.implicits._
-    Seq((0, 0), (1, 0)).toDF("bucket", "gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir2/manifest-2col")
-    deleteRec(new java.io.File(s"$dir2/manifest/v000001"))
-    new java.io.File(s"$dir2/manifest-2col")
-      .renameTo(new java.io.File(s"$dir2/manifest/v000001"))
-    val e = intercept[IllegalArgumentException] { MergeTable.read(spark, dir2) }
-    assert(e.getMessage.contains("older MergeTable layout"))
+    val older = Seq(
+      Seq((-1, -1, base.schema.json), (0, 0, null), (1, 0, null))
+        .toDF("bucket", "gen", "schema_json"),
+      Seq((0, 0), (1, 0)).toDF("bucket", "gen"))
+    older.foreach { manifest =>
+      val dir = tmpDir()
+      MergeTable.create(base, dir, "k", nBuckets = 4)
+      manifest.coalesce(1).write.parquet(s"$dir/manifest-older")
+      deleteRec(new java.io.File(s"$dir/manifest/v000001"))
+      assert(new java.io.File(s"$dir/manifest-older")
+        .renameTo(new java.io.File(s"$dir/manifest/v000001")))
+      val e = intercept[IllegalArgumentException] { MergeTable.read(spark, dir) }
+      assert(e.getMessage.contains("older MergeTable layout"), e.getMessage)
+    }
   }
 
   private def deleteRec(f: java.io.File): Unit = {

@@ -158,4 +158,37 @@ class ZoneMapSpec extends SparkSpec {
     // the all-null-v file also prunes under IS NOT NULL alone
     assert(numFiles(t.where(c("v").isNotNull)) == 1)
   }
+
+  test("the sidecar reads on the driver: no job, no ignored-path WARN; re-harvests and Spark-written sidecars read") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-zm-meta").toString
+    val out = s"$tmp/li"
+    val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey", "l_suppkey")
+    Tabular.writeClusteredParquet(li, out, Seq("l_partkey", "l_suppkey"),
+      nFiles = 4, maxRecordsPerFile = 125)
+    ZoneMap.write(spark, out, Seq("l_partkey"))
+    // a re-harvest replaces the sidecar: the second column appears
+    ZoneMap.write(spark, out, Seq("l_partkey", "l_suppkey"))
+    val (kept, keptJobs) = jobsOf(ZoneMap.keptFiles(spark, out, "l_suppkey", 0L, 3L))
+    assert(keptJobs.isEmpty, s"keptFiles ran ${keptJobs.size} Spark jobs")
+    assert(kept._1.nonEmpty && kept._1.size < kept._2, s"no pruning: $kept")
+    val (_, tableJobs) = jobsOf(ZoneMap.table(spark, out))
+    assert(tableJobs.isEmpty, s"building the table ran ${tableJobs.size} Spark jobs")
+    // a sidecar DIRECTORY of Spark part files (how earlier versions
+    // wrote it) reads the same
+    val plain = s"$tmp/zonemap.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$out/_zonemap"),
+      java.nio.file.Paths.get(plain))
+    Seq("_zonemap", "._zonemap.crc").foreach(f => new java.io.File(s"$out/$f").delete())
+    spark.read.parquet(plain).coalesce(1).write.parquet(s"$out/_zonemap")
+    assert(new java.io.File(s"$out/_zonemap").isDirectory)
+    assert(ZoneMap.keptFiles(spark, out, "l_suppkey", 0L, 3L) == kept)
+    // the zone-map gates read no hidden root through a Spark reader
+    val events = logged {
+      Seq("q285_zonemap_scan", "q287_zonemap_table_sql")
+        .foreach(q => graft.SparkEntry.queries(q)(spark, sf).collect())
+    }
+    val ignored = events.map(_.getMessage.getFormattedMessage)
+      .filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
 }

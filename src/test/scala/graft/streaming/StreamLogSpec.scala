@@ -1,13 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.LogEvent
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
 
 /** The file-sink ingest (q143) and the streaming ANN probe (q281) on
   * fresh directories log no ERROR and no `FileNotFoundException`: an
@@ -15,31 +11,6 @@ import scala.jdk.CollectionConverters._
   * and the probe answers are read through their parent dir, not a
   * glob the file-sink metadata probe would stat as a literal path. */
 class StreamLogSpec extends SparkSpec {
-
-  /** The WARN-and-above events logged while `body` runs. */
-  private def logged(body: => Unit): Seq[LogEvent] = {
-    // build the shared session first: building it sets the log level
-    spark.sparkContext
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    val prev = root.getLevel
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
-    val app = new AbstractAppender("graft-log-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.toImmutable)
-    }
-    app.start()
-    root.addAppender(app, Level.WARN, null)
-    root.setLevel(Level.WARN)
-    ctx.updateLoggers()
-    try body finally {
-      root.removeAppender(app.getName)
-      root.setLevel(prev)
-      ctx.updateLoggers()
-      app.stop()
-    }
-    seen.asScala.toSeq
-  }
 
   private def causes(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(20).toSeq

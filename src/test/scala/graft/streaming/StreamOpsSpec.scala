@@ -99,8 +99,8 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   /** The drain owns its stream and its conf scope: a stream that
-    * fails mid-run must not stay active, and the partition and
-    * nanos-as-long values it scoped must read as they did before. */
+    * fails mid-run must not stay active, and the partition value it
+    * scoped (and the session's nanos-as-long) must read as before. */
   test("drain: a stream that throws mid-run is stopped and the session conf restored") {
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.legacy.parquet.nanosAsLong")
     val tmp = java.nio.file.Files.createTempDirectory("graft-drain").toString

@@ -5,9 +5,11 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 Reads each <out>/<name> parquet (Spark result) and runs the matching
 oracle SQL from <out>/oracle_sql.json in DuckDB over <sfDir>'s tables;
-sorts columns by name, sorts rows, compares values exactly.
+sorts columns by name, sorts rows, compares values exactly. Each oracle's
+line ends with the seconds DuckDB took to run it, and the five slowest
+oracles are listed at the end.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -32,6 +34,7 @@ def main(sf_dir: str, out_dir: str) -> int:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{f}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_bad = 0
+    secs = {}
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
         if not os.path.isdir(path):
@@ -53,10 +56,13 @@ def main(sf_dir: str, out_dir: str) -> int:
                 n_bad += 1
             print(f"{name:28s} {status}")
             continue
+        t0 = time.perf_counter()
         want = con.execute(oracle[name]).fetchdf()
+        secs[name] = time.perf_counter() - t0
+        took = f"duckdb={secs[name]:.2f}s"
         g, w = canon(got), canon(want)
         if list(g.columns) != list(w.columns):
-            print(f"{name:28s} COLS-MISMATCH got={list(g.columns)} want={list(w.columns)}")
+            print(f"{name:28s} COLS-MISMATCH got={list(g.columns)} want={list(w.columns)} {took}")
             n_bad += 1
             continue
         # the driver hashes exact typed representations: a value-equal
@@ -66,11 +72,11 @@ def main(sf_dir: str, out_dir: str) -> int:
         gt, wt = [str(t) for t in g.dtypes], [str(t) for t in w.dtypes]
         if gt != wt:
             bad = [(c, a, b) for c, a, b in zip(g.columns, gt, wt) if a != b]
-            print(f"{name:28s} DTYPE-MISMATCH {bad}")
+            print(f"{name:28s} DTYPE-MISMATCH {bad} {took}")
             n_bad += 1
             continue
         if len(g) != len(w):
-            print(f"{name:28s} ROWCOUNT got={len(g)} want={len(w)}")
+            print(f"{name:28s} ROWCOUNT got={len(g)} want={len(w)} {took}")
             n_bad += 1
             continue
         diff_cols = []
@@ -83,14 +89,17 @@ def main(sf_dir: str, out_dir: str) -> int:
             except Exception as e:
                 diff_cols.append((c, f"cmp-error {e}"))
         if diff_cols:
-            print(f"{name:28s} VALUE-DIFF {diff_cols}")
+            print(f"{name:28s} VALUE-DIFF {diff_cols} {took}")
             for c, _ in diff_cols[:1]:
                 mask = ~((g[c].values == w[c].values))
                 print("   got :", g[mask].head(3).to_dict("records"))
                 print("   want:", w[mask].head(3).to_dict("records"))
             n_bad += 1
         else:
-            print(f"{name:28s} OK rows={len(g)}")
+            print(f"{name:28s} OK rows={len(g)} {took}")
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    print("\nslowest DuckDB oracles: " +
+          ", ".join(f"{n} {t:.2f}s" for n, t in slowest))
     print(f"\n{'ALL OK' if n_bad == 0 else f'{n_bad} FAILURES'}")
     return n_bad
 
