@@ -38,6 +38,7 @@ object BenchSubset {
     val w0 = System.nanoTime()
     SparkEntry.warmCaches(spark, sfDir)
     println(f"[subset] warmup ${(System.nanoTime() - w0) / 1e9}%.2f s")
+    org.apache.spark.graftbridge.BusBridge.drain(spark.sparkContext)
     var total = 0.0
     SparkEntry.specs
       .filter(q => only.forall(_.exists(q.name.startsWith)))
@@ -46,6 +47,8 @@ object BenchSubset {
         val t0 = System.nanoTime()
         val n = try q.run(spark, sfDir).count() catch { case _: Throwable => -1L }
         val sec = (System.nanoTime() - t0) / 1e9
+        // a stage event still on the bus would land in the next row
+        org.apache.spark.graftbridge.BusBridge.drain(spark.sparkContext)
         total += sec
         println(f"[subset] ${q.name}%-34s $sec%8.2f s  rows=$n%-8d " +
           f"jobs=${jobs.get - j0}%-4d stages=${stages.get - s0}%-4d " +

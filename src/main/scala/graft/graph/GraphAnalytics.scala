@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics (SURVEY §2.10).
@@ -536,15 +537,10 @@ object GraphAnalytics {
     }
 
   /** Exact-scaled Brandes betweenness per group — the
-    * driver-oracle-able form of the "no SQL form" kernel (G7).
-    *
-    * Standard Brandes accumulates δ(v) = Σ_w σ(v)/σ(w)·(1+δ(w)) in
-    * floating point, whose summation order makes it engine-specific.
-    * Here δ lives in scaled-BIGINT units (1e6 = 1.0) and every
-    * per-successor contribution rounds to an integer FIRST —
-    * `⌊σ(v)·(1e6+δ(w))/σ(w) + 0.5⌋` — so both sweeps are integer
-    * arithmetic with one IEEE multiply/divide chain per edge, and any
-    * engine reproduces the result bit-for-bit. The DuckDB mirror
+    * driver-oracle-able form of the "no SQL form" kernel (G7):
+    * [[LocalGraph.betweennessScaled2]] on each group's simple graph,
+    * every per-edge dependency rounded to a scaled BIGINT before it is
+    * summed, so any engine reproduces it bit-for-bit. The DuckDB mirror
     * unrolls the BFS-layered forward (σ) and backward (δ) sweeps as
     * generated per-depth CTEs.
     *
@@ -553,227 +549,126 @@ object GraphAnalytics {
     * textbook undirected value). BFS is depth-capped at `maxDepth`
     * (mirrored by the oracle's recursion bound); σ must stay within
     * Long — true for sparse per-sample graphs, the tier this kernel
-    * serves (a megagraph belongs on the superstep tier). One shuffle on the
-    * group key, then groups run independently — same scale shape as
-    * [[perGroupVertexMetrics]]. */
+    * serves (a megagraph belongs on the superstep tier). */
   def betweennessExactScaled(edges: DataFrame, maxDepth: Int = 32): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val Scale = 1000000L
-    keyedGroupsUnweighted(edges)
-      .flatMapGroups { (grp, it) =>
-        // symmetrized distinct adjacency, index-compressed to 0..n-1
-        // (per-root state lives in flat arrays: the kernel runs
-        // n × O(V+E) sweeps, and HashMap probes dominated the profile)
-        val pairs = it.flatMap { case (_, a, b) => Seq((a, b), (b, a)) }.toSet
-        val nodes = pairs.map(_._1).toArray.sorted
-        val idx = nodes.zipWithIndex.toMap
-        val n = nodes.length
-        val adj = Array.fill(n)(Array.empty[Int])
-        pairs.groupBy(_._1).foreach { case (a, ps) =>
-          adj(idx(a)) = ps.map(p => idx(p._2)).toArray.sorted
-        }
-        val btw = new Array[Long](n)
-        val dist = new Array[Int](n)
-        val sigma = new Array[Long](n)
-        val delta = new Array[Long](n)
-        val order = new Array[Int](n) // BFS visit order (root first)
-        var root = 0
-        while (root < n) {
-          java.util.Arrays.fill(dist, -1)
-          java.util.Arrays.fill(sigma, 0L)
-          java.util.Arrays.fill(delta, 0L)
-          dist(root) = 0; sigma(root) = 1L; order(0) = root
-          var head = 0
-          var tail = 1
-          while (head < tail) {
-            val v = order(head); head += 1
-            val dv = dist(v)
-            if (dv < maxDepth) {
-              adj(v).foreach { w =>
-                if (dist(w) < 0) { dist(w) = dv + 1; order(tail) = w; tail += 1 }
-                if (dist(w) == dv + 1) sigma(w) += sigma(v)
-              }
-            }
-          }
-          // reverse BFS order = non-increasing depth: delta of deeper
-          // nodes is final before shallower nodes consume it
-          var i = tail - 1
-          while (i >= 1) {
-            val v = order(i)
-            val dv = dist(v)
-            var acc = 0L
-            adj(v).foreach { w =>
-              if (dist(w) == dv + 1)
-                acc += math.floor(
-                  sigma(v).toDouble * (Scale + delta(w)) / sigma(w) + 0.5).toLong
-            }
-            delta(v) = acc
-            btw(v) += acc
-            i -= 1
-          }
-          // root itself (order(0)) is excluded from accumulation
-          root += 1
-        }
-        nodes.iterator.zipWithIndex.map { case (node, i2) => (grp, node, btw(i2)) }
-      }
-      .toDF("grp", "node", "btw_scaled2")
+    import edges.sparkSession.implicits._
+    groupGraphs(edges.withColumn("weight", lit(1.0)), directed = false) { (grp, g) =>
+      val b = g.betweennessScaled2(maxDepth)
+      g.vertexIds.indices.map(i => (grp, g.vertexIds(i), b(i)))
+    }.toDF("grp", "node", "btw_scaled2")
   }
 
   /** Per-vertex eccentricity + harmonic centrality per group, both in
-    * exact arithmetic: ecc is an integer BFS depth, harmonic is
-    * Σ_u ⌊1e6/d(v,u) + 0.5⌋ over reachable u ≠ v — per-distance terms
-    * round to scaled BIGINTs before the (order-independent) sum, so
-    * the oracle reproduces both bit-for-bit from the recursive-CTE
-    * distance table. Harmonic centrality is the disconnected-robust
-    * closeness variant (a beyond-the-reference G-family extension);
-    * one flatMapGroups pass, same tier as the battery. */
+    * exact arithmetic ([[LocalGraph.eccHarmonicExact]]): ecc is an
+    * integer BFS depth, harmonic is Σ_u ⌊1e6/d(v,u) + 0.5⌋ over
+    * reachable u ≠ v, so the oracle reproduces both bit-for-bit from
+    * the recursive-CTE distance table. Harmonic centrality is the
+    * disconnected-robust closeness variant (a beyond-the-reference
+    * G-family extension). */
   def harmonicEccExact(edges: DataFrame, maxDepth: Int = 64): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroupsUnweighted(edges)
-      .flatMapGroups { (grp, it) =>
-        val pairs = it.flatMap { case (_, a, b) => Seq((a, b), (b, a)) }.toSet
-        val nodes = pairs.map(_._1).toArray.sorted
-        val idx = nodes.zipWithIndex.toMap
-        val n = nodes.length
-        val adj = Array.fill(n)(Array.empty[Int])
-        pairs.groupBy(_._1).foreach { case (a, ps) =>
-          adj(idx(a)) = ps.map(p => idx(p._2)).toArray.sorted
-        }
-        val dist = new Array[Int](n)
-        val order = new Array[Int](n)
-        (0 until n).iterator.map { root =>
-          java.util.Arrays.fill(dist, -1)
-          dist(root) = 0; order(0) = root
-          var head = 0; var tail = 1
-          var ecc = 0L
-          var harmonic = 0L
-          while (head < tail) {
-            val v = order(head); head += 1
-            val dv = dist(v)
-            if (dv > 0) {
-              if (dv > ecc) ecc = dv
-              harmonic += math.floor(1000000.0 / dv + 0.5).toLong
-            }
-            if (dv < maxDepth) {
-              adj(v).foreach { w =>
-                if (dist(w) < 0) { dist(w) = dv + 1; order(tail) = w; tail += 1 }
-              }
-            }
-          }
-          (grp, nodes(root), ecc, harmonic)
-        }
-      }
-      .toDF("grp", "node", "ecc", "harmonic_scaled")
+    import edges.sparkSession.implicits._
+    groupGraphs(edges.withColumn("weight", lit(1.0)), directed = false) { (grp, g) =>
+      val r = g.eccHarmonicExact(maxDepth)
+      g.vertexIds.indices.map(i => (grp, g.vertexIds(i), r(i).ecc.toLong, r(i).terms))
+    }.toDF("grp", "node", "ecc", "harmonic_scaled")
   }
 
   /** Materialize one group's edges into task memory, failing fast past
-    * the cap: the per-group kernels are the many-small-groups tier, and
-    * a megagroup must error with an actionable message instead of
-    * OOMing the executor. */
-  private def boundedEdges(grp: String, it: Iterator[(String, Long, Long, Double)],
-      cap: Int): Seq[(Long, Long, Double)] = {
+    * [[LocalMaxEdges]]: the per-group kernels are the many-small-groups
+    * tier, and a megagroup must error with an actionable message
+    * instead of OOMing the executor. */
+  private def boundedEdges(grp: String, it: Iterator[(String, Long, Long, Double)])
+      : Seq[(Long, Long, Double)] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     while (it.hasNext) {
-      if (buf.length >= cap)
+      if (buf.length >= LocalMaxEdges)
         throw new IllegalStateException(
-          s"group '$grp' has more than $cap edges — too large for a task-local " +
-            "graph kernel. Pre-aggregate the group, raise maxGroupEdges, or run " +
-            "the graph whole on the superstep tier (components, " +
-            "pageRankAndComponentsDF, the exact-scaled kernels).")
+          s"group '$grp' has more than $LocalMaxEdges edges — too large for a " +
+            "task-local graph kernel. Pre-aggregate the group, or run the graph " +
+            "whole on the superstep tier (components, pageRankAndComponentsDF, " +
+            "the exact-scaled kernels).")
       val t = it.next()
       buf += ((t._2, t._3, t._4))
     }
     buf.toSeq
   }
 
-  /** The per-group kernel dispatch, EXPLICITLY distributed (round-14,
-    * r13 verdict item 5 / guide §2.4-2.5): `groupByKey(_._1)` computes
-    * its key into a fresh column, so no pre-repartition can satisfy
-    * the required distribution and the planner inserts its own
-    * exchange — byte-tiny for gate-scale groups, which AQE coalesces
-    * to ONE task, serializing every group's task-local kernel (q72's
-    * eigen battery ran all groups in a single ~4 s task on a 32-core
-    * host). Grouping BY THE COLUMN (`groupBy(col).as[K, V]`) lets an
-    * explicit-count keyed repartition satisfy the distribution
-    * exactly: no second exchange, and the explicit count is exempt
-    * from coalescing, so each group's kernel lands in its own task. At
-    * scale the exchange exists either way — this only pins its
-    * partition count to the session parallelism. The iterator-based
-    * kernels (and [[boundedEdges]]'s fail-fast cap) are unchanged. */
-  private def keyedGroups(edges: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[
-        String, (String, Long, Long, Double)] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("group").cast("string"), col("src").cast("long"),
-        col("dst").cast("long"), col("weight").cast("double"))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("group"))
-      .groupBy(col("group"))
-      .as[String, (String, Long, Long, Double)]
+  /** The per-group dispatch, EXPLICITLY distributed (round-14, r13
+    * verdict item 5 / guide §2.4-2.5): `groupByKey(_._1)` computes its
+    * key into a fresh column, so no pre-repartition can satisfy the
+    * required distribution and the planner inserts its own exchange —
+    * byte-tiny for gate-scale groups, which AQE coalesces to ONE task,
+    * serializing every group's task-local kernel (q72's eigen battery
+    * ran all groups in a single ~4 s task on a 32-core host). Grouping
+    * BY THE COLUMN (`groupBy(col).as[K, V]`) lets an explicit-count
+    * keyed repartition satisfy the distribution exactly: no second
+    * exchange, and the explicit count is exempt from coalescing, so
+    * each group's kernel lands in its own task. At scale the exchange
+    * exists either way — this only pins its partition count to the
+    * session parallelism. `rows` is the value tuple, `key` among it. */
+  private def keyedGroups[K: Encoder, V: Encoder](rows: DataFrame, key: String)
+      : KeyValueGroupedDataset[K, V] =
+    rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions, col(key))
+      .groupBy(col(key)).as[K, V]
+
+  /** Every group of a (group, src, dst, weight) edge list as one
+    * task-local [[LocalGraph]] ([[keyedGroups]], capped by
+    * [[boundedEdges]]), and `kernel`'s rows for it. */
+  private def groupGraphs[R: Encoder](edges: DataFrame, directed: Boolean)(
+      kernel: (String, LocalGraph) => IterableOnce[R]): Dataset[R] = {
+    import edges.sparkSession.implicits._
+    keyedGroups[String, (String, Long, Long, Double)](
+        edges.select(col("group").cast("string"), col("src").cast("long"),
+          col("dst").cast("long"), col("weight").cast("double")), "group")
+      .flatMapGroups((grp, it) =>
+        kernel(grp, LocalGraph.fromEdges(boundedEdges(grp, it), directed)))
   }
 
-  /** [[keyedGroups]] for the unweighted (group, src, dst) kernels. */
-  private def keyedGroupsUnweighted(edges: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[
-        String, (String, Long, Long)] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("group").cast("string"), col("src").cast("long"),
-        col("dst").cast("long"))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("group"))
-      .groupBy(col("group"))
-      .as[String, (String, Long, Long)]
-  }
+  /** The all-pairs-BFS kernels (diameter, radius, mean distance,
+    * betweenness, closeness, harmonic) are O(V·E) — a single 100k-node
+    * group under the edge cap would still burn hours in one task.
+    * Groups past this node count report -1 / NaN for those metrics and
+    * keep the linear ones (degree, eigen, connectivity); the
+    * whole-graph superstep tier is the right tool for the megagroup. */
+  private val QuadraticMaxNodes = 20000
+
+  /** Alpha centrality solves a dense n×n system (O(n²) memory, O(n³)
+    * time) — NaN past this node count. */
+  private val DenseMaxNodes = 2000
+
+  /** Community detection is quadratic-plus in node count — computed
+    * only for groups at or below this size (the reference's per-sample
+    * subgraphs are tens of nodes); larger groups report
+    * nCommunities = -1 and modularity NaN, or -1 labels. */
+  private val CommunityMaxNodes = 200
 
   /** Per-group whole-graph metrics: one row per group with the
     * reference's network-stat battery (nestats shape —
-    * reference bin/GeneralNetworkProperties.R, bin/CompareSkin.R:175-181).
-    * Input: (group: String, src: Long, dst: Long, weight: Double). */
-  /** @param communityMaxNodes community detection is quadratic-plus in
-    *   node count — computed only for groups at or below this size
-    *   (the reference's per-sample subgraphs are tens of nodes);
-    *   larger groups report nCommunities = -1, modularity NaN.
-    * @param communityAlgorithm "greedy" (CNM, reference fastgreedy) or
-    *   "walktrap" (exact Pons-Latapy port, reference walktrap).
-    * @param quadraticMaxNodes the all-pairs-BFS kernels (diameter,
-    *   radius, mean distance, betweenness, closeness) are O(V·E) — a
-    *   single 100k-node group under the edge cap would still burn hours
-    *   in one task. Groups past this node count report -1 / NaN for
-    *   those metrics and keep the linear ones (degree, eigen,
-    *   connectivity); the whole-graph superstep tier is the right
-    *   tool for the megagroup. */
-  def perGroupMetrics(edges: DataFrame, directed: Boolean = false,
-      communityMaxNodes: Int = 200,
-      communityAlgorithm: String = "greedy",
-      maxGroupEdges: Int = LocalMaxEdges,
-      quadraticMaxNodes: Int = 20000): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroups(edges)
-      .mapGroups { (grp, it) =>
-        val g = LocalGraph.fromEdges(boundedEdges(grp, it, maxGroupEdges), directed)
-        val quad = g.n <= quadraticMaxNodes
-        val comm =
-          if (g.n > communityMaxNodes) Array.empty[Int]
-          else if (communityAlgorithm == "walktrap") g.walktrapCommunities()
-          else g.greedyModularityCommunities
-        GroupGraphMetrics(
-          group = grp, nNodes = g.n, nEdges = g.edges.length,
-          diameter = if (quad) g.diameter else -1,
-          radius = if (quad) g.radius else -1,
-          meanDistance = if (quad) g.meanDistance else Double.NaN,
-          connected = g.isConnected,
-          degreeCentralization = g.degreeCentralization,
-          betweennessCentralization =
-            if (quad) g.betweennessCentralization else Double.NaN,
-          closenessCentralization =
-            if (quad) g.closenessCentralization else Double.NaN,
-          eigenCentralization = g.eigenCentralization,
-          nCommunities = if (comm.isEmpty) -1 else comm.distinct.length,
-          modularity = if (comm.isEmpty) Double.NaN else g.modularity(comm))
-      }.toDF()
+    * reference bin/GeneralNetworkProperties.R, bin/CompareSkin.R:175-181),
+    * communities by greedy CNM (reference fastgreedy; walktrap is
+    * [[perGroupCommunities]]). Input: (group: String, src: Long,
+    * dst: Long, weight: Double). */
+  def perGroupMetrics(edges: DataFrame, directed: Boolean = false): DataFrame = {
+    import edges.sparkSession.implicits._
+    groupGraphs(edges, directed) { (grp, g) =>
+      val quad = g.n <= QuadraticMaxNodes
+      val comm =
+        if (g.n > CommunityMaxNodes) Array.empty[Int] else g.greedyModularityCommunities
+      Iterator.single(GroupGraphMetrics(
+        group = grp, nNodes = g.n, nEdges = g.edges.length,
+        diameter = if (quad) g.diameter else -1,
+        radius = if (quad) g.radius else -1,
+        meanDistance = if (quad) g.meanDistance else Double.NaN,
+        connected = g.isConnected,
+        degreeCentralization = g.degreeCentralization,
+        betweennessCentralization =
+          if (quad) g.betweennessCentralization else Double.NaN,
+        closenessCentralization =
+          if (quad) g.closenessCentralization else Double.NaN,
+        eigenCentralization = g.eigenCentralization,
+        nCommunities = if (comm.isEmpty) -1 else comm.distinct.length,
+        modularity = if (comm.isEmpty) Double.NaN else g.modularity(comm)))
+    }.toDF()
   }
 
   /** G14/G15 — per-group per-vertex community assignment from BOTH
@@ -783,98 +678,77 @@ object GraphAnalytics {
     * vertex id, so the output is independent of the kernels' internal
     * community numbering and pins cleanly against an external oracle.
     * Output: (group, id, walktrap_rep, cnm_rep). Groups larger than
-    * `communityMaxNodes` emit (-1, -1) labels instead of running the
-    * quadratic-plus kernels — same cap + rationale as
-    * [[perGroupMetrics]] (the reference's per-sample subgraphs are
-    * tens of nodes; a megagroup belongs on the distributed LPA
+    * [[CommunityMaxNodes]] emit (-1, -1) labels instead of running the
+    * quadratic-plus kernels (a megagroup belongs on the distributed LPA
     * tier). */
   def perGroupCommunities(edges: DataFrame, directed: Boolean = false,
-      steps: Int = 4, communityMaxNodes: Int = 200,
-      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroups(edges)
-      .flatMapGroups { (grp, it) =>
-        val g = LocalGraph.fromEdges(boundedEdges(grp, it, maxGroupEdges), directed)
-        if (g.n > communityMaxNodes) {
-          g.vertexIds.indices.map(i => (grp, g.vertexIds(i), -1L, -1L))
-        } else {
-          val wt = g.walktrapCommunities(steps)
-          val cnm = g.greedyModularityCommunities
-          def minIdRep(m: Array[Int]): Map[Int, Long] =
-            m.zipWithIndex.groupBy(_._1)
-              .map { case (c, xs) => c -> xs.map(x => g.vertexIds(x._2)).min }
-          val (rw, rc) = (minIdRep(wt), minIdRep(cnm))
-          g.vertexIds.indices.map(i => (grp, g.vertexIds(i), rw(wt(i)), rc(cnm(i))))
-        }
-      }.toDF("group", "id", "walktrap_rep", "cnm_rep")
+      steps: Int = 4): DataFrame = {
+    import edges.sparkSession.implicits._
+    groupGraphs(edges, directed) { (grp, g) =>
+      if (g.n > CommunityMaxNodes) {
+        g.vertexIds.indices.map(i => (grp, g.vertexIds(i), -1L, -1L))
+      } else {
+        val wt = g.walktrapCommunities(steps)
+        val cnm = g.greedyModularityCommunities
+        def minIdRep(m: Array[Int]): Map[Int, Long] =
+          m.zipWithIndex.groupBy(_._1)
+            .map { case (c, xs) => c -> xs.map(x => g.vertexIds(x._2)).min }
+        val (rw, rc) = (minIdRep(wt), minIdRep(cnm))
+        g.vertexIds.indices.map(i => (grp, g.vertexIds(i), rw(wt(i)), rc(cnm(i))))
+      }
+    }.toDF("group", "id", "walktrap_rep", "cnm_rep")
   }
 
   /** Per-group per-vertex eigencentrality — the node×sample matrix
     * feeding β-diversity (G18; reference bin/interpersonaldiversity.R:98-116).
     * Output: (group, id, eigen). */
-  def perGroupEigen(edges: DataFrame, directed: Boolean = false,
-      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroups(edges)
-      .flatMapGroups { (grp, it) =>
-        val g = LocalGraph.fromEdges(boundedEdges(grp, it, maxGroupEdges), directed)
-        val e = g.eigenCentrality()
-        g.vertexIds.indices.map(i => (grp, g.vertexIds(i), e(i)))
-      }.toDF("group", "id", "eigen")
+  def perGroupEigen(edges: DataFrame, directed: Boolean = false): DataFrame = {
+    import edges.sparkSession.implicits._
+    groupGraphs(edges, directed) { (grp, g) =>
+      val e = g.eigenCentrality()
+      g.vertexIds.indices.map(i => (grp, g.vertexIds(i), e(i)))
+    }.toDF("group", "id", "eigen")
   }
 
   /** Per-group per-vertex centrality battery: eigencentrality,
-    * PageRank, betweenness, closeness, weight-entropy diversity, and
-    * alpha centrality in one kernel pass per group (SURVEY G6-G13).
+    * PageRank, betweenness, closeness, weight-entropy diversity, alpha
+    * centrality and harmonic in one kernel pass per group (SURVEY
+    * G6-G13). Betweenness, closeness and harmonic are NaN (harmonic -1)
+    * past [[QuadraticMaxNodes]], alpha past [[DenseMaxNodes]].
     * Output: (group, id, eigen, pagerank, betweenness, closeness,
-    * diversity, alpha). */
-  /** @param quadraticMaxNodes betweenness/closeness are O(V·E) per
-    *   group — NaN past this node count (see [[perGroupMetrics]]).
-    * @param denseMaxNodes alpha centrality solves a dense n×n system
-    *   (O(n²) memory, O(n³) time) — NaN past this node count. */
+    * diversity, alpha, harmonic_scaled). */
   def perGroupVertexMetrics(edges: DataFrame, directed: Boolean = false,
-      alpha: Double = 0.1, maxGroupEdges: Int = LocalMaxEdges,
-      quadraticMaxNodes: Int = 20000, denseMaxNodes: Int = 2000): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroups(edges)
-      .flatMapGroups { (grp, it) =>
-        val g = LocalGraph.fromEdges(boundedEdges(grp, it, maxGroupEdges), directed)
-        val nan = Array.fill(g.n)(Double.NaN)
-        val eig = g.eigenCentrality()
-        val pr = g.pageRank()
-        val btw = if (g.n <= quadraticMaxNodes) g.betweenness else nan
-        val clo = if (g.n <= quadraticMaxNodes) g.closeness else nan
-        val har = if (g.n <= quadraticMaxNodes) g.harmonicScaled()
-          else Array.fill(g.n)(-1L)
-        val div = g.diversity
-        val alp =
-          if (g.n > denseMaxNodes) nan
-          else try g.alphaCentrality(alpha) catch {
-            case _: IllegalArgumentException => nan
-          }
-        g.vertexIds.indices.map(i =>
-          (grp, g.vertexIds(i), eig(i), pr(i), btw(i), clo(i), div(i), alp(i),
-            har(i)))
-      }.toDF("group", "id", "eigen", "pagerank", "betweenness",
-        "closeness", "diversity", "alpha", "harmonic_scaled")
+      alpha: Double = 0.1): DataFrame = {
+    import edges.sparkSession.implicits._
+    groupGraphs(edges, directed) { (grp, g) =>
+      val quad = g.n <= QuadraticMaxNodes
+      val nan = Array.fill(g.n)(Double.NaN)
+      val eig = g.eigenCentrality()
+      val pr = g.pageRank()
+      val btw = if (quad) g.betweenness else nan
+      val clo = if (quad) g.closeness else nan
+      val har = if (quad) g.harmonicScaled() else Array.fill(g.n)(-1L)
+      val div = g.diversity
+      val alp =
+        if (g.n > DenseMaxNodes) nan
+        else try g.alphaCentrality(alpha) catch {
+          case _: IllegalArgumentException => nan
+        }
+      g.vertexIds.indices.map(i =>
+        (grp, g.vertexIds(i), eig(i), pr(i), btw(i), clo(i), div(i), alp(i), har(i)))
+    }.toDF("group", "id", "eigen", "pagerank", "betweenness",
+      "closeness", "diversity", "alpha", "harmonic_scaled")
   }
 
   /** G19 — per-group targeted-removal robustness curve (NetSwan
     * shape): one row per (group, n_removed) with the largest-component
     * fraction after deleting that many highest-degree vertices.
     * Same many-small-groups tier as the other kernels. */
-  def perGroupRobustness(edges: DataFrame, steps: Int = 5,
-      maxGroupEdges: Int = LocalMaxEdges): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroups(edges)
-      .flatMapGroups { (grp, it) =>
-        val g = LocalGraph.fromEdges(boundedEdges(grp, it, maxGroupEdges), directed = false)
-        g.robustnessCurve(steps).zipWithIndex.map { case (frac, i) => (grp, i, frac) }
-      }.toDF("group", "n_removed", "largest_frac")
+  def perGroupRobustness(edges: DataFrame, steps: Int = 5): DataFrame = {
+    import edges.sparkSession.implicits._
+    groupGraphs(edges, directed = false) { (grp, g) =>
+      g.robustnessCurve(steps).zipWithIndex.map { case (frac, i) => (grp, i, frac) }
+    }.toDF("group", "n_removed", "largest_frac")
   }
 
   /** G13 exact twin — per-vertex inverse-Simpson (Hill number of
@@ -1074,14 +948,14 @@ object GraphAnalytics {
   }
 
   /** G5 per group — weak connected components of every group's
-    * subgraph on the keyed per-group tier ([[keyedGroupsUnweighted]],
-    * one task-local union-find per group). Input: (group, src, dst).
-    * Output: (group, node, component), the component labeled by its
-    * min node id. */
+    * subgraph on the keyed per-group tier ([[keyedGroups]], one
+    * task-local union-find per group, its edges streamed). Input:
+    * (group, src, dst). Output: (group, node, component), the component
+    * labeled by its min node id. */
   private[graft] def perGroupComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    keyedGroupsUnweighted(edges)
+    import edges.sparkSession.implicits._
+    keyedGroups[String, (String, Long, Long)](edges.select(col("group").cast("string"),
+        col("src").cast("long"), col("dst").cast("long")), "group")
       .flatMapGroups { (grp, it) =>
         componentsOf(it.map(e => (e._2, e._3))).map { case (n, c) => (grp, n, c) }
       }.toDF("group", "node", "component")
@@ -1228,9 +1102,7 @@ object GraphAnalytics {
       }.reduce(_ unionByName _)
       val byLayer: Map[Long, Long] =
         if ((steps + 1) * nEdges <= maxLocalEdges)
-          // explicit keyed distribution, same rationale as [[keyedGroups]]
-          layered.repartition(spark.sessionState.conf.numShufflePartitions, col("layer"))
-            .groupBy(col("layer")).as[Int, (Int, Long, Long)]
+          keyedGroups[Int, (Int, Long, Long)](layered, "layer")
             .mapGroups { (layer, it) =>
               (layer.toLong, componentsOf(it.map(e => (e._2, e._3))).toSeq
                 .groupMapReduce(_._2)(_ => 1L)(_ + _).values.max)

@@ -5,7 +5,7 @@ import scala.collection.mutable
 /** In-memory graph kernels with igraph-matching semantics, for the
   * per-sample subgraphs the reference analyzes (tens of nodes each —
   * SURVEY §2.10: "graphs are tiny; per-group subgraphs... per-sample").
-  * These run *inside* executors via `GraphAnalytics.perGroup` — one
+  * These run *inside* executors via `GraphAnalytics.groupGraphs` — one
   * group per task, thousands of groups in parallel — so "local" means
   * local to a group, not to the driver.
   *
@@ -34,43 +34,93 @@ final case class LocalGraph(
     b.map(_.toArray)
   }
 
-  // ---- BFS family (G4, G8) ----
+  /** [[adj]]'s neighbour indices: the multigraph the float kernels walk */
+  private lazy val out: Array[Array[Int]] = adj.map(_.map(_._1))
 
-  /** Unweighted shortest-path distances from source index; -1 = unreachable. */
-  def bfs(source: Int): Array[Int] = {
-    val dist = Array.fill(n)(-1)
-    dist(source) = 0
-    val q = mutable.Queue(source)
-    while (q.nonEmpty) {
-      val u = q.dequeue()
-      adj(u).foreach { case (v, _) =>
-        if (dist(v) < 0) { dist(v) = dist(u) + 1; q += v }
+  /** in-neighbours, one entry per edge: where Brandes pushes δ back */
+  private lazy val in: Array[Array[Int]] =
+    if (!directed) out
+    else {
+      val b = Array.fill(n)(mutable.ArrayBuilder.make[Int])
+      edges.foreach { case (s, d, _) => b(idx(d)) += idx(s) }
+      b.map(_.result())
+    }
+
+  /** distinct neighbours: the simple graph the exact kernels walk, so a
+    * duplicate or reversed edge changes none of their outputs */
+  private lazy val simple: Array[Array[Int]] = out.map(_.distinct)
+
+  // ---- BFS family (G4, G5, G7, G8) ----
+
+  /** Breadth-first search over `nb` from `root`, at most `maxDepth`
+    * hops: each vertex it reaches gets its hop count in `depth` (-1
+    * marks unvisited; the caller clears it) and joins `order` from
+    * `start` on, in visit order (non-decreasing depth). Returns the end
+    * of that run. The one traversal of every unweighted kernel here;
+    * all-roots callers allocate `depth` and `order` once, since they
+    * run n sweeps per group. */
+  private def bfs(nb: Array[Array[Int]], root: Int, maxDepth: Int,
+      depth: Array[Int], order: Array[Int], start: Int = 0): Int = {
+    depth(root) = 0
+    order(start) = root
+    var head = start
+    var tail = start + 1
+    while (head < tail) {
+      val v = order(head); head += 1
+      val dv = depth(v)
+      if (dv < maxDepth) {
+        val ns = nb(v)
+        var i = 0
+        while (i < ns.length) {
+          val w = ns(i)
+          if (depth(w) < 0) { depth(w) = dv + 1; order(tail) = w; tail += 1 }
+          i += 1
+        }
       }
     }
-    dist
+    tail
   }
 
-  def eccentricities: Array[Int] =
-    Array.tabulate(n)(v => bfs(v).max) // max finite distance (within component)
+  /** One BFS per root over `nb`, summarized over the vertices 1 to
+    * `maxDepth` hops away: their count, the farthest hop, Σd and
+    * Σ term(d). */
+  private def reach(nb: Array[Array[Int]], maxDepth: Int)(term: Int => Long)
+      : Array[LocalGraph.Reach] = {
+    val depth = new Array[Int](n)
+    val order = new Array[Int](n)
+    Array.tabulate(n) { root =>
+      java.util.Arrays.fill(depth, -1)
+      val end = bfs(nb, root, maxDepth, depth, order)
+      var sum = 0L
+      var terms = 0L
+      var i = 1
+      while (i < end) { val d = depth(order(i)); sum += d; terms += term(d); i += 1 }
+      LocalGraph.Reach(end - 1, depth(order(end - 1)), sum, terms)
+    }
+  }
+
+  /** The distance battery's one all-roots pass, memoized: eccentricity,
+    * diameter, radius, mean distance, closeness and harmonic all read
+    * it. The term is [[harmonicScaled]]'s K div d, K = 720720. */
+  private lazy val distances: Array[LocalGraph.Reach] =
+    reach(out, Int.MaxValue)(720720L / _)
+
+  /** max finite distance (within component) */
+  def eccentricities: Array[Int] = distances.map(_.ecc)
 
   def diameter: Int = if (n == 0) 0 else eccentricities.max
   def radius: Int = if (n == 0) 0 else eccentricities.min
 
   /** igraph mean_distance: average over ordered reachable pairs. */
   def meanDistance: Double = {
-    var sum = 0L; var cnt = 0L
-    (0 until n).foreach { v =>
-      bfs(v).foreach(d => if (d > 0) { sum += d; cnt += 1 })
-    }
-    if (cnt == 0) 0.0 else sum.toDouble / cnt
+    val cnt = distances.foldLeft(0L)(_ + _.reached)
+    if (cnt == 0) 0.0 else distances.foldLeft(0L)(_ + _.sum).toDouble / cnt
   }
 
   /** Normalized closeness over the reachable set:
     * (reachable-1)/Σd, 0 for isolated vertices. */
-  def closeness: Array[Double] = Array.tabulate(n) { v =>
-    val d = bfs(v).filter(_ > 0)
-    if (d.isEmpty) 0.0 else d.length.toDouble / d.sum
-  }
+  def closeness: Array[Double] =
+    distances.map(r => if (r.reached == 0) 0.0 else r.reached.toDouble / r.sum)
 
   /** Harmonic centrality, exact-scaled: Σ_{d(u,v)>0} (K div d) with
     * K = 720720 = lcm(1..16) — a pure BIGINT with NO floating point
@@ -79,23 +129,29 @@ final case class LocalGraph(
     * the value is engine-portable bit-for-bit. Unreachable pairs
     * contribute 0 — harmonic's defining advantage over closeness on
     * disconnected graphs. */
-  def harmonicScaled(k: Long = 720720L): Array[Long] = Array.tabulate(n) { v =>
-    bfs(v).foldLeft(0L)((acc, d) => if (d > 0) acc + k / d else acc)
-  }
+  def harmonicScaled(): Array[Long] = distances.map(_.terms)
+
+  /** Per-vertex eccentricity and harmonic centrality in exact
+    * arithmetic over the simple graph, within `maxDepth` hops: ecc is
+    * an integer BFS depth, harmonic Σ ⌊1e6/d + 0.5⌋ — each term rounds
+    * to a scaled BIGINT before the order-independent sum, so an
+    * external engine replays both bit-for-bit (q100). */
+  def eccHarmonicExact(maxDepth: Int): Array[LocalGraph.Reach] =
+    reach(simple, maxDepth)(d => math.floor(1000000.0 / d + 0.5).toLong)
 
   // ---- connectivity (G5) ----
 
   def componentIds: Array[Int] = {
-    val comp = Array.fill(n)(-1)
+    val depth = Array.fill(n)(-1)
+    val order = new Array[Int](n)
+    val comp = new Array[Int](n)
     var c = 0
+    var end = 0
     (0 until n).foreach { s =>
-      if (comp(s) < 0) {
-        comp(s) = c
-        val q = mutable.Queue(s)
-        while (q.nonEmpty) {
-          val u = q.dequeue()
-          adj(u).foreach { case (v, _) => if (comp(v) < 0) { comp(v) = c; q += v } }
-        }
+      if (depth(s) < 0) {
+        val start = end
+        end = bfs(out, s, Int.MaxValue, depth, order, start)
+        (start until end).foreach(i => comp(order(i)) = c)
         c += 1
       }
     }
@@ -106,29 +162,96 @@ final case class LocalGraph(
 
   // ---- betweenness (G7), Brandes 2001, unweighted ----
 
+  /** igraph betweenness: multigraph semantics (σ counts parallel edges)
+    * and Double σ, since the path counts of a 20k-vertex group overflow
+    * a Long. Each δ(w) is pushed to w's predecessors in reverse visit
+    * order, the summation order of the stack-and-predecessor-list
+    * textbook form, so the sums are bit-identical to it. */
   def betweenness: Array[Double] = {
-    val bc = Array.fill(n)(0.0)
+    val bc = new Array[Double](n)
+    val depth = new Array[Int](n)
+    val order = new Array[Int](n)
+    val sigma = new Array[Double](n)
+    val delta = new Array[Double](n)
     (0 until n).foreach { s =>
-      val stack = mutable.Stack[Int]()
-      val preds = Array.fill(n)(mutable.ArrayBuffer.empty[Int])
-      val sigma = Array.fill(n)(0.0); sigma(s) = 1.0
-      val dist = Array.fill(n)(-1); dist(s) = 0
-      val q = mutable.Queue(s)
-      while (q.nonEmpty) {
-        val u = q.dequeue(); stack.push(u)
-        adj(u).foreach { case (v, _) =>
-          if (dist(v) < 0) { dist(v) = dist(u) + 1; q += v }
-          if (dist(v) == dist(u) + 1) { sigma(v) += sigma(u); preds(v) += u }
-        }
+      java.util.Arrays.fill(depth, -1)
+      java.util.Arrays.fill(sigma, 0.0)
+      java.util.Arrays.fill(delta, 0.0)
+      val end = bfs(out, s, Int.MaxValue, depth, order)
+      sigma(s) = 1.0
+      var i = 0
+      while (i < end) {
+        val v = order(i)
+        val next = depth(v) + 1
+        val ns = out(v)
+        var j = 0
+        while (j < ns.length) { if (depth(ns(j)) == next) sigma(ns(j)) += sigma(v); j += 1 }
+        i += 1
       }
-      val delta = Array.fill(n)(0.0)
-      while (stack.nonEmpty) {
-        val w = stack.pop()
-        preds(w).foreach { u => delta(u) += sigma(u) / sigma(w) * (1.0 + delta(w)) }
-        if (w != s) bc(w) += delta(w)
+      i = end - 1
+      while (i > 0) {
+        val w = order(i)
+        val prev = depth(w) - 1
+        val dw = 1.0 + delta(w)
+        val ps = in(w)
+        var j = 0
+        while (j < ps.length) {
+          val u = ps(j)
+          if (depth(u) == prev) delta(u) += sigma(u) / sigma(w) * dw
+          j += 1
+        }
+        bc(w) += delta(w)
+        i -= 1
       }
     }
     if (directed) bc else bc.map(_ / 2.0)
+  }
+
+  /** Exact-scaled Brandes over the simple graph (q99): σ is an exact
+    * Long, δ lives in scaled-BIGINT units (1e6 = 1.0), and every
+    * per-edge contribution ⌊σ(u)·(1e6 + δ(w))/σ(w) + 0.5⌋ rounds to an
+    * integer before it is summed, so any engine reproduces the result
+    * bit-for-bit. Roots reach at most `maxDepth` hops. Σ over roots,
+    * each unordered pair counted from both ends. */
+  def betweennessScaled2(maxDepth: Int): Array[Long] = {
+    val bc = new Array[Long](n)
+    val depth = new Array[Int](n)
+    val order = new Array[Int](n)
+    val sigma = new Array[Long](n)
+    val delta = new Array[Long](n)
+    (0 until n).foreach { s =>
+      java.util.Arrays.fill(depth, -1)
+      java.util.Arrays.fill(sigma, 0L)
+      java.util.Arrays.fill(delta, 0L)
+      val end = bfs(simple, s, maxDepth, depth, order)
+      sigma(s) = 1L
+      var i = 0
+      while (i < end) {
+        val v = order(i)
+        val next = depth(v) + 1
+        val ns = simple(v)
+        var j = 0
+        while (j < ns.length) { if (depth(ns(j)) == next) sigma(ns(j)) += sigma(v); j += 1 }
+        i += 1
+      }
+      i = end - 1
+      while (i > 0) {
+        val w = order(i)
+        val prev = depth(w) - 1
+        val dw = 1000000L + delta(w)
+        val ps = simple(w)
+        var j = 0
+        while (j < ps.length) {
+          val u = ps(j)
+          if (depth(u) == prev)
+            delta(u) += math.floor(sigma(u).toDouble * dw / sigma(w) + 0.5).toLong
+          j += 1
+        }
+        bc(w) += delta(w)
+        i -= 1
+      }
+    }
+    bc
   }
 
   // ---- weighted shortest paths (weighted diameter, G4) ----
@@ -431,6 +554,10 @@ final case class LocalGraph(
 }
 
 object LocalGraph {
+  /** One root's BFS summary: vertices reached (root excluded), the
+    * farthest hop, Σ hops and Σ of a per-hop term. */
+  final case class Reach(reached: Int, ecc: Int, sum: Long, terms: Long)
+
   /** Build from an edge list; vertex set = endpoints. */
   def fromEdges(edges: Seq[(Long, Long, Double)], directed: Boolean = false): LocalGraph = {
     val vs = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted.toArray

@@ -1633,23 +1633,26 @@ object AnalyticsQueries {
     * superstep, a hub-sum CTE + global-max rescale, then an
     * authority-sum CTE + rescale — generated like the PageRank/eigen
     * oracles. The edge base is q90's directed supplier→customer
-    * graph. */
+    * graph. Every CTE is `MATERIALIZED`: each half-step's sum is read
+    * twice (its rescale and its max), e and v by every step, and DuckDB
+    * inlines a plain CTE at every reference, so the work would
+    * multiply at every half-step. */
   private def hitsOracle(iters: Int): String = {
     val steps = (1 to iters).map { k =>
-      s"""hs$k AS (
+      s"""hs$k AS MATERIALIZED (
          |  SELECT e.src AS id, CAST(sum(p.a) AS BIGINT) AS s
          |  FROM e JOIN a${k - 1} p ON p.id = e.dst GROUP BY e.src),
-         |h$k AS (
+         |h$k AS MATERIALIZED (
          |  SELECT v.id,
          |         CASE WHEN m.mx IS NULL OR m.mx = 0 THEN CAST(0 AS BIGINT)
          |              ELSE CAST(floor(COALESCE(s.s, 0) * CAST(1000000.0 AS DOUBLE) / m.mx + 0.5) AS BIGINT)
          |         END AS h
          |  FROM v LEFT JOIN hs$k s ON s.id = v.id
          |  CROSS JOIN (SELECT max(s) AS mx FROM hs$k) m),
-         |au$k AS (
+         |au$k AS MATERIALIZED (
          |  SELECT e.dst AS id, CAST(sum(p.h) AS BIGINT) AS s
          |  FROM e JOIN h$k p ON p.id = e.src GROUP BY e.dst),
-         |a$k AS (
+         |a$k AS MATERIALIZED (
          |  SELECT v.id,
          |         CASE WHEN m.mx IS NULL OR m.mx = 0 THEN CAST(0 AS BIGINT)
          |              ELSE CAST(floor(COALESCE(s.s, 0) * CAST(1000000.0 AS DOUBLE) / m.mx + 0.5) AS BIGINT)
@@ -1657,13 +1660,13 @@ object AnalyticsQueries {
          |  FROM v LEFT JOIN au$k s ON s.id = v.id
          |  CROSS JOIN (SELECT max(s) AS mx FROM au$k) m)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
+    s"""WITH e AS MATERIALIZED (
        |  SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS src,
        |         CAST(o_custkey + 1000000 AS BIGINT) AS dst
        |  FROM lineitem
        |  JOIN orders ON l_orderkey = o_orderkey
        |  WHERE l_quantity >= 49),
-       |v AS (SELECT src AS id FROM e UNION SELECT dst AS id FROM e),
+       |v AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst AS id FROM e),
        |a0 AS (SELECT id, CAST(1000000 AS BIGINT) AS a FROM v),
        |$steps
        |SELECT h.id, h.h AS hub_scaled, a.a AS auth_scaled

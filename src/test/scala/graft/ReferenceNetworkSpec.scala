@@ -113,8 +113,7 @@ class ReferenceNetworkSpec extends SparkSpec {
 
     val metrics = GraphAnalytics.perGroupMetrics(
       predicted.select(lit("all").as("group"), col("src"), col("dst"),
-        lit(1.0).as("weight")),
-      communityMaxNodes = 0).head()
+        lit(1.0).as("weight"))).head()
     val nNodes = metrics.getAs[Int]("nNodes")
     val nEdges = metrics.getAs[Int]("nEdges")
     val diameter = metrics.getAs[Int]("diameter")

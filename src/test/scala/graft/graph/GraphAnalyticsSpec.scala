@@ -147,7 +147,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     val small = Seq(("tiny", 0L, 1L, 1.0), ("tiny", 1L, 2L, 1.0))
     val df = (big ++ small).toDF("group", "src", "dst", "weight")
     val t0 = System.nanoTime()
-    val m = GraphAnalytics.perGroupMetrics(df, quadraticMaxNodes = 20000)
+    val m = GraphAnalytics.perGroupMetrics(df)
       .collect().map(r => r.getAs[String]("group") -> r).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     // the ungated Brandes would take ~15 min; anything near 2 min means
@@ -164,7 +164,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(mega.getAs[Double]("degreeCentralization") == 0.0) // ring: all degree 2
     val tiny = m("tiny")
     assert(tiny.getAs[Int]("diameter") == 2)                 // small group unaffected
-    val vm = GraphAnalytics.perGroupVertexMetrics(df, quadraticMaxNodes = 20000)
+    val vm = GraphAnalytics.perGroupVertexMetrics(df)
       .filter(col("group") === "mega").limit(5).collect()
     assert(vm.forall(_.getAs[Double]("betweenness").isNaN))
     assert(vm.forall(_.getAs[Double]("alpha").isNaN))        // dense solve gated too
@@ -301,17 +301,15 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(shuffled == out)
   }
 
-  test("perGroupMetrics supports walktrap communities per group") {
+  test("perGroupCommunities splits bridged triangles by walktrap") {
     val twoTri = Seq(
       ("t", 0L, 1L, 1.0), ("t", 1L, 2L, 1.0), ("t", 0L, 2L, 1.0),
       ("t", 3L, 4L, 1.0), ("t", 4L, 5L, 1.0), ("t", 3L, 5L, 1.0),
       ("t", 2L, 3L, 1.0))
     import spark.implicits._
-    val m = GraphAnalytics.perGroupMetrics(
-      twoTri.toDF("group", "src", "dst", "weight"),
-      communityAlgorithm = "walktrap").head()
-    assert(m.getAs[Int]("nCommunities") == 2)
-    assert(m.getAs[Double]("modularity") > 0.2)
+    val rep = GraphAnalytics.perGroupCommunities(twoTri.toDF("group", "src", "dst", "weight"))
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("walktrap_rep")).toMap
+    assert(rep == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 3L))
   }
 
   test("lpaExactScaled: bridged cliques split into the two cliques") {
