@@ -4,7 +4,9 @@ package graft
   * the same warmCaches pass the official Bench pays in its warm-up),
   * so per-query numbers are attributable exactly like the official
   * record. Selection via SPARK_GRAFT_ONLY (prefix match, like Verify);
-  * unset = all queries. One line per query + a total, to stdout. */
+  * unset = all queries. One line per query + a total, to stdout:
+  * wall time, rows, jobs, stages, tasks, summed job wall time and the
+  * codegen compiles the query paid. */
 object BenchSubset {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,6 +20,8 @@ object BenchSubset {
     val tasks = new java.util.concurrent.atomic.AtomicLong
     val jobMs = new java.util.concurrent.atomic.AtomicLong // Σ job wall
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    // whole-stage codegen classes compiled (cache misses), JVM-wide
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -44,6 +48,7 @@ object BenchSubset {
       .filter(q => only.forall(_.exists(q.name.startsWith)))
       .foreach { q =>
         val (j0, s0, t0n, m0) = (jobs.get, stages.get, tasks.get, jobMs.get)
+        val c0 = compiles.getCount
         val t0 = System.nanoTime()
         val n = try q.run(spark, sfDir).count() catch { case _: Throwable => -1L }
         val sec = (System.nanoTime() - t0) / 1e9
@@ -52,7 +57,8 @@ object BenchSubset {
         total += sec
         println(f"[subset] ${q.name}%-34s $sec%8.2f s  rows=$n%-8d " +
           f"jobs=${jobs.get - j0}%-4d stages=${stages.get - s0}%-4d " +
-          f"tasks=${tasks.get - t0n}%-6d jobSec=${(jobMs.get - m0) / 1e3}%.2f")
+          f"tasks=${tasks.get - t0n}%-6d jobSec=${(jobMs.get - m0) / 1e3}%.2f " +
+          f"compiles=${compiles.getCount - c0}")
       }
     println(f"[subset] total $total%.2f s")
     spark.stop()

@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset,
-  SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed graph analytics (SURVEY §2.10).
   *
@@ -19,11 +20,11 @@ import org.apache.spark.sql.functions._
   *    shuffle on the group key, then thousands of small graphs in
   *    parallel — the 100 TB-scale path for "compute centrality per
   *    sample", reference bin/interpersonaldiversity.R:82-115) and the
-  *    whole-graph kernels [[components]] (union-find) and
-  *    [[edgeSupport]] (sorted out-list intersection), which serve
-  *    dedup clusters, the robustness curve, triangles and k-truss.
-  *    Above the bound, each of those two has one distributed path on
-  *    the superstep tier.
+  *    whole-graph kernels [[components]] (union-find), [[edgeSupport]]
+  *    (sorted out-list intersection) and [[kcore]] (an array peel over
+  *    every group at once), which serve dedup clusters, the robustness
+  *    curve, triangles, k-truss and k-core. Above the bound, each of
+  *    those three has one distributed path on the superstep tier.
   *
   * β-diversity ops (G17/G18) are pure relational plans — no graph
   * materialization at all.
@@ -282,28 +283,105 @@ object GraphAnalytics {
     * The iterate is the LIVE symmetric edge set E_i, not the node
     * membership: E_0 = sym, and a round keeps the edges whose two
     * endpoints both have live degree >= k. On a symmetric edge set
-    * the row count of partition (grp, b) is deg(b), so both degrees
-    * are window counts over the one iterate — consumed once per
-    * round, linear plan growth, and the `iters - 1` peel rounds run
-    * as ONE action. By induction E_i = {(a, b) ∈ sym : a, b ∈ keep_i}
-    * (a node with live degree >= k >= 1 is itself live), so the
-    * result — live degree >= k after the last round, one group-by —
-    * is the node-membership peel the oracle replays. `iters` >= 1. */
-  def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
+    * the row count of partition (grp, b) is deg(b), so one degree per
+    * node serves both endpoints. By induction
+    * E_i = {(a, b) ∈ sym : a, b ∈ keep_i} (a node with live degree
+    * >= k >= 1 is itself live), so the result — live degree >= k after
+    * the last round — is the node-membership peel the oracle replays.
+    * Two paths, picked on the measured symmetric operand, with one
+    * output schema `(grp, node, deg)`:
+    *  - at or under [[LocalMaxEdges]] rows, ONE shuffle sends the
+    *    operand to one task, where [[kcoreOf]] runs every round on
+    *    index arrays. The result is lazy, like [[components]]'s;
+    *  - above, the `iters - 1` peel rounds chain as ONE action: both
+    *    degrees are window counts over the one iterate, consumed once
+    *    per round, and one group-by takes the last round's degrees.
+    * `iters` >= 1. */
+  def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame =
+    kcore(edges, k, iters, LocalMaxEdges)
+
+  private[graph] def kcore(edges: DataFrame, k: Int, iters: Int,
+      maxLocalEdges: Long): DataFrame = {
     require(iters >= 1, s"kcore needs at least one round, got iters=$iters")
-    val byA = org.apache.spark.sql.expressions.Window.partitionBy("grp", "a")
-    val byB = org.apache.spark.sql.expressions.Window.partitionBy("grp", "b")
     Superstep(Superstep.symmetric(edges)) { s =>
-      val live = s.chain(s.operand, iters - 1) { cur =>
-        cur.withColumn("da", count(lit(1)).over(byA))
-          .withColumn("db", count(lit(1)).over(byB))
-          .where(col("da") >= k && col("db") >= k)
-          .select("grp", "a", "b")
+      if (s.rows <= maxLocalEdges) {
+        val in = s.operand.schema
+        val out = StructType(Seq(in("grp"), in("a").copy(name = "node"),
+          StructField("deg", LongType, nullable = false)))
+        s.operand.repartition(1)
+          .mapPartitions(it => kcoreOf(it, k, iters))(Encoders.row(out))
+      } else {
+        val byA = org.apache.spark.sql.expressions.Window.partitionBy("grp", "a")
+        val byB = org.apache.spark.sql.expressions.Window.partitionBy("grp", "b")
+        val live = s.chain(s.operand, iters - 1) { cur =>
+          cur.withColumn("da", count(lit(1)).over(byA))
+            .withColumn("db", count(lit(1)).over(byB))
+            .where(col("da") >= k && col("db") >= k)
+            .select("grp", "a", "b")
+        }
+        Superstep.checkpoint(live.groupBy(col("grp"), col("a").as("node"))
+          .agg(count(lit(1)).as("deg"))
+          .where(col("deg") >= k))
       }
-      Superstep.checkpoint(live.groupBy(col("grp"), col("a").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k))
     }
+  }
+
+  /** The one-task path of [[kcore]] over the distinct symmetric
+    * `(grp, a, b)` rows. Nodes are keyed by (group, id) to array
+    * indexes: ids repeat across groups, and a null id is one more node
+    * of its group, as it is one window partition of the chain. Each
+    * row counts once toward deg(a); each of the `iters - 1` rounds
+    * recounts the degrees over the live rows and drops every row with
+    * an endpoint under k, which keeps the live rows symmetric. Emits
+    * `(grp, node, deg)` for every node of degree >= k in the last
+    * count. */
+  private def kcoreOf(rows: Iterator[Row], k: Int, iters: Int): Iterator[Row] = {
+    import scala.collection.mutable
+    val groups = mutable.HashMap.empty[Any, Int]
+    val grpVal = mutable.ArrayBuffer.empty[Any]
+    val idsOf = mutable.ArrayBuffer.empty[mutable.LongMap[Int]]
+    val nullOf = mutable.ArrayBuffer.empty[Int]
+    val nullIds = mutable.BitSet.empty
+    val (nodeGrp, nodeId) = (Array.newBuilder[Int], Array.newBuilder[Long])
+    var n = 0
+    def newNode(g: Int, id: Long): Int = { nodeGrp += g; nodeId += id; n += 1; n - 1 }
+    def nodeOf(g: Int, r: Row, i: Int): Int =
+      if (!r.isNullAt(i)) { val id = r.getLong(i); idsOf(g).getOrElseUpdate(id, newNode(g, id)) }
+      else {
+        if (nullOf(g) < 0) { nullOf(g) = newNode(g, 0L); nullIds += nullOf(g) }
+        nullOf(g)
+      }
+    val (ea, eb) = (Array.newBuilder[Int], Array.newBuilder[Int])
+    rows.foreach { r =>
+      val g = groups.getOrElseUpdate(r.get(0), {
+        grpVal += r.get(0); idsOf += mutable.LongMap.empty[Int]; nullOf += -1
+        grpVal.length - 1
+      })
+      ea += nodeOf(g, r, 1); eb += nodeOf(g, r, 2)
+    }
+    val (a, b, grp, id) = (ea.result(), eb.result(), nodeGrp.result(), nodeId.result())
+    val deg = new Array[Int](n)
+    var m = a.length
+    def recount(): Unit = {
+      java.util.Arrays.fill(deg, 0)
+      var e = 0
+      while (e < m) { deg(a(e)) += 1; e += 1 }
+    }
+    var round = 1
+    while (round < iters) {
+      recount()
+      var kept = 0
+      var e = 0
+      while (e < m) {
+        if (deg(a(e)) >= k && deg(b(e)) >= k) { a(kept) = a(e); b(kept) = b(e); kept += 1 }
+        e += 1
+      }
+      m = kept
+      round += 1
+    }
+    recount()
+    Iterator.range(0, n).filter(deg(_) >= k).map(v =>
+      Row(grpVal(grp(v)), if (nullIds(v)) null else id(v), deg(v).toLong))
   }
 
   /** Deterministic synchronous label propagation per group (G14/G15
@@ -800,8 +878,9 @@ object GraphAnalytics {
   }
 
   /** The task-local tier's edge bound: the most edges one task holds
-    * — one group of a per-group kernel ([[boundedEdges]]), or the
-    * whole graph of [[components]] and [[edgeSupport]]. */
+    * — one group of a per-group kernel ([[boundedEdges]]), the whole
+    * graph of [[components]] and [[edgeSupport]], or every group's
+    * symmetric edges of [[kcore]]. */
   private[graph] val LocalMaxEdges = 2000000
 
   /** Weak connected components of a whole graph: `(id, component)`,

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
@@ -27,10 +28,14 @@ object InteractionModel {
   val FeatureCols: Seq[String] = Seq("crispr", "blast", "blastx", "pfam")
 
   /** Assemble feature vector + binary label from an edges table with
-    * `interaction` boolean ground truth (null-safe: missing → 0). */
+    * `interaction` boolean ground truth (null-safe: missing → 0). The
+    * label carries its two classes as column metadata, so a fit reads
+    * `numClasses` from the schema instead of running a max-label
+    * query over its input. */
   def features(edges: DataFrame, labelCol: String = "interaction"): DataFrame = {
+    val binary = NominalAttribute.defaultAttr.withName("label").withNumValues(2)
     val filled = edges.na.fill(0.0, FeatureCols)
-      .withColumn("label", col(labelCol).cast("double"))
+      .withColumn("label", col(labelCol).cast("double").as("label", binary.toMetadata()))
     new VectorAssembler()
       .setInputCols(FeatureCols.toArray).setOutputCol("features")
       .transform(filled)

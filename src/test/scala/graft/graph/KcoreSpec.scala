@@ -5,11 +5,15 @@ import graft.SparkSpec
 /** Law of [[GraphAnalytics.kcore]]'s live-edge-set peel: it equals
   * the node-membership peel (replayed on the driver) on seeded random
   * multi-group graphs with self-loops, duplicate and reversed edges
-  * and isolated pairs, for k ∈ {1,2,3} and iters ∈ {1..5}. That its
-  * peel rounds run in one action is [[SuperstepSpec]]'s job-count
-  * table. */
+  * and isolated pairs, for k ∈ {1,2,3} and iters ∈ {1..5}, on both
+  * paths: the one-task peel under the default bound and the window
+  * chain with the bound forced to 0. Both paths return one schema,
+  * and the one-task path's job count does not grow with `iters`; the
+  * chain's is [[SuperstepSpec]]'s job-count table. */
 class KcoreSpec extends SparkSpec {
   import spark.implicits._
+
+  private val bounds = Seq(GraphAnalytics.LocalMaxEdges.toLong, 0L)
 
   /** The node-membership peel, per group: keep_0 = every endpoint,
     * deg_i(a) = |{b : (a, b) ∈ sym, a, b ∈ keep_i}|,
@@ -52,12 +56,13 @@ class KcoreSpec extends SparkSpec {
     for (seed <- Seq(1, 2)) {
       val edges = randomGraph(seed)
       val df = edges.toDF("group", "src", "dst").repartition(3).cache()
-      for (k <- 1 to 3; iters <- 1 to 5) {
-        val rows = GraphAnalytics.kcore(df, k, iters).collect()
+      for (bound <- bounds; k <- 1 to 3; iters <- 1 to 5) {
+        val rows = GraphAnalytics.kcore(df, k, iters, bound).collect()
           .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
         val got = rows.toMap
-        assert(got.size == rows.length, s"seed $seed k $k iters $iters: duplicate nodes")
-        assert(got == peel(edges, k, iters), s"seed $seed k $k iters $iters")
+        val at = s"seed $seed bound $bound k $k iters $iters"
+        assert(got.size == rows.length, s"$at: duplicate nodes")
+        assert(got == peel(edges, k, iters), at)
       }
       df.unpersist()
     }
@@ -65,5 +70,31 @@ class KcoreSpec extends SparkSpec {
     // k = 3 and is dropped by later rounds
     val g = randomGraph(1)
     assert(peel(g, 3, 5).nonEmpty && peel(g, 3, 1).size > peel(g, 3, 5).size)
+  }
+
+  test("kcore: both paths return one schema, the group column's type kept") {
+    val edges = Seq((7, 1L, 2L), (7, 2L, 3L), (7, 3L, 1L), (8, 1L, 2L))
+      .toDF("group", "src", "dst")
+    val schemas = bounds.map(b => GraphAnalytics.kcore(edges, 2, 3, b).schema)
+    assert(schemas.head.map(f => (f.name, f.dataType)) ==
+      Seq(("grp", org.apache.spark.sql.types.IntegerType),
+        ("node", org.apache.spark.sql.types.LongType),
+        ("deg", org.apache.spark.sql.types.LongType)))
+    assert(schemas.head == schemas.last, schemas.mkString(" vs "))
+  }
+
+  test("kcore: a null id is one node of its group on both paths") {
+    val edges = Seq(("g", Some(1L), Some(2L)), ("g", Some(2L), None), ("g", None, Some(1L)),
+      ("h", None, Some(1L)), ("h", Some(1L), Some(3L))).toDF("group", "src", "dst")
+    val got = bounds.map(b => GraphAnalytics.kcore(edges, 2, 2, b).collect()
+      .map(r => (r.getString(0), Option(r.get(1)), r.getLong(2))).toSet)
+    assert(got.head == Set(("g", Some(1L), 2L), ("g", Some(2L), 2L), ("g", None, 2L)))
+    assert(got.head == got.last)
+  }
+
+  test("kcore: the one-task peel runs in the same jobs however many rounds") {
+    val df = randomGraph(3).toDF("group", "src", "dst")
+    val jobs = Seq(1, 6).map(i => jobsOf(GraphAnalytics.kcore(df, 2, i).collect())._2.size)
+    assert(jobs.head == jobs.last, s"iters=1 → ${jobs.head} jobs, iters=6 → ${jobs.last}")
   }
 }

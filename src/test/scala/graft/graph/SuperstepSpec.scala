@@ -43,7 +43,7 @@ class SuperstepSpec extends SparkSpec {
       "eigenExactScaled" -> (i => GraphAnalytics.eigenExactScaled(unw, i)),
       "eigenWeightedExactScaled" -> (i => GraphAnalytics.eigenWeightedExactScaled(g, i)),
       "ssspExactScaled" -> (i => GraphAnalytics.ssspExactScaled(g, i)),
-      "kcore" -> (i => GraphAnalytics.kcore(unw, 2, i)),
+      "kcore" -> (i => GraphAnalytics.kcore(unw, 2, i, maxLocalEdges = 0L)),
       "lpaExactScaled" -> (i => GraphAnalytics.lpaExactScaled(unw, i)),
       "alphaExactScaled" -> (i => GraphAnalytics.alphaExactScaled(unw, 0.1, i)),
       "pprExactScaled" -> (i => GraphAnalytics.pprExactScaled(unw, 0.85, i)),
